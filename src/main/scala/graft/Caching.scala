@@ -71,13 +71,7 @@ object Caching {
       // 2-3.4 s of driver CPU per text-ingest batch, ~30% of the entry);
       // dependent-first release leaves nothing cached that references the
       // removed entry, so each removal is a plain map eviction
-      graft.stream.MaintStages("caching", "scope_unpersist") {
-        buf.reverseIterator.foreach { df =>
-          graft.stream.MaintStages("caching", "unpersist_one") {
-            df.unpersist(blocking = false)
-          }
-        }
-      }
+      buf.reverseIterator.foreach(_.unpersist(blocking = false))
     }
   }
 

@@ -102,7 +102,8 @@ object Maintain {
 
   /** ST8 — compact a versioned state dir in place: keep only the max-version
     * row per key among rows matching `windowPred` (rows outside pass through).
-    * Returns (rowsBefore, rowsAfter).
+    * Returns (rowsBefore, rowsAfter). A month-partitioned state stays
+    * month-partitioned ([[StateStore.replace]] keeps the dir's layout).
     *
     * Takes the [[IngestLock]] on the STATE ROOT — by default the parent of
     * `dir`, which is the `cfg.stateDir` every [[graft.stream.ChangeStream]]

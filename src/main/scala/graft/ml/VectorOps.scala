@@ -1420,13 +1420,11 @@ object VectorOps {
     // — genuine work the training-sample cap bounds at scale, the
     // kmeans_retrain stage being ~55-60% of maint_recluster_embedding_100x.
     val train = trainByVecId(kmeansTrainSample(v, centroidMod, vCount))
-    for (i <- 1 to iters) {
-      centroids = graft.stream.MaintStages("recluster", s"kmeans_iter$i") {
-        val (m, ch) = ivfHierRouting(centroids, metaMod)
-        lloydRefine(ivfAssignHierRoutedFull(m, ch, train),
-          portableDecimal = false)
-          .localCheckpoint()
-      }
+    for (_ <- 1 to iters) {
+      val (m, ch) = ivfHierRouting(centroids, metaMod)
+      centroids = lloydRefine(ivfAssignHierRoutedFull(m, ch, train),
+        portableDecimal = false)
+        .localCheckpoint()
     }
     centroids
   }

@@ -2,7 +2,7 @@ package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.cdc.Cdc
@@ -125,45 +125,36 @@ object ChangeStream {
       present.foreach { table =>
         val meta = Schemas.tableMeta(table)
         val now = cfg.nowOverride.map(lit(_)).getOrElse(current_timestamp())
-        // F7 applies to every table in CONST_TBL_NOT_DELETE_OLD regardless of
-        // path (reference: matomo2clickhouse.py:583-606); applyVersioned
-        // guards internally, the mutable path guards here
         // strict: corrupt payloads fail the batch loudly, like unregistered
         // tables — a nulled payload would read as data loss downstream
         val typedRaw = Cdc.typedChanges(filtered, table, strict = true)
-        val typed = meta.deleteDateCol match {
-          case Some(dc) if !meta.versioned =>
-            Cdc.suppressOldDeletes(typedRaw, dc, now, cfg.deleteMaxAgeDays)
-          case _ => typedRaw
-        }
+        // F7 applies to every table in CONST_TBL_NOT_DELETE_OLD regardless of
+        // path (reference: matomo2clickhouse.py:583-606): the mutable applies,
+        // the JDBC sink and the maintained views take this guarded frame;
+        // the local versioned applies guard internally, so they take the raw
+        val guarded = meta.deleteDateCol.fold(typedRaw)(
+          Cdc.suppressOldDeletes(typedRaw, _, now, cfg.deleteMaxAgeDays))
+        val typed = if (meta.versioned) typedRaw else guarded
+        def flatNext(state: DataFrame): DataFrame =
+          if (meta.versioned)
+            Cdc.applyVersioned(state, typed, meta.keyCols, meta.deleteDateCol,
+              now, cfg.deleteMaxAgeDays)
+          else Cdc.applyMutable(state, typed, meta.keyCols)
         val dir = s"${cfg.stateDir}/$table"
         // a long per-table apply must not outlive the staleness window:
         // refresh (and fail loudly on a stolen lock) BEFORE each state write
         lock.foreach(IngestLock.heartbeat(spark, _))
         if (cfg.dryRun) {
           // S9: inspect, don't apply — counts force the plan like the real write
-          val state = readState(spark, cfg, table)
-          val next =
-            if (meta.versioned)
-              Cdc.applyVersioned(state, typed, meta.keyCols, meta.deleteDateCol,
-                now, cfg.deleteMaxAgeDays)
-            else Cdc.applyMutable(state, typed, meta.keyCols)
+          val next = flatNext(readState(spark, cfg, table))
           System.err.println(s"[dry-run] batch=$batchId table=$table " +
             s"changes=${typed.count()} next_state_rows=${next.count()}")
-        } else if (cfg.jdbcSink.isDefined && meta.versioned) {
-          // sink mode: versioned tables write to the JDBC target. F7 applies
-          // here (applyVersioned's internal guard is bypassed by the sink)
-          val guarded = meta.deleteDateCol match {
-            case Some(dc) =>
-              Cdc.suppressOldDeletes(typedRaw, dc, now, cfg.deleteMaxAgeDays)
-            case None => typedRaw
-          }
-          JdbcState.applyVersioned(guarded, cfg.jdbcSink.get, table, meta.keyCols)
         } else if (cfg.jdbcSink.isDefined) {
-          // sink mode, mutable table: update-in-place against the target —
-          // the reference applies EVERY table to its target, not just the
-          // versioned list. `typed` already carries the mutable F7 guard.
-          JdbcState.applyMutable(typed, cfg.jdbcSink.get, table, meta.keyCols)
+          // sink mode: every table applies to the JDBC target, like the
+          // reference; the sink bypasses applyVersioned's internal guard
+          if (meta.versioned)
+            JdbcState.applyVersioned(guarded, cfg.jdbcSink.get, table, meta.keyCols)
+          else JdbcState.applyMutable(guarded, cfg.jdbcSink.get, table, meta.keyCols)
         } else meta.partitionCol match {
           // scale path: tables with a monthly partition column apply
           // partition-pruned — only touched months are read and rewritten
@@ -173,23 +164,10 @@ object ChangeStream {
           case Some(pc) =>
             PartitionedState.applyMutable(spark, dir, stateSchema(table), typed,
               meta.keyCols, pc)
-          case None =>
-            val state = readState(spark, cfg, table)
-            val next =
-              if (meta.versioned)
-                Cdc.applyVersioned(state, typed, meta.keyCols, meta.deleteDateCol,
-                  now, cfg.deleteMaxAgeDays)
-              else Cdc.applyMutable(state, typed, meta.keyCols)
-            StateStore.replace(next, dir)
+          case None => StateStore.replace(flatNext(readState(spark, cfg, table)), dir)
         }
         // maintained views see the same F7-guarded deltas as the table apply
         if (!cfg.dryRun) cfg.maintainedAggs.filter(_.table == table).foreach { ma =>
-          val aggTyped =
-            if (meta.versioned) meta.deleteDateCol match {
-              case Some(dc) =>
-                Cdc.suppressOldDeletes(typedRaw, dc, now, cfg.deleteMaxAgeDays)
-              case None => typedRaw
-            } else typed
           val gField = Schemas.tableSchemas(table)(ma.groupCol)
           val aggSchema = StructType(Seq(
             gField.copy(name = ma.groupCol),
@@ -207,7 +185,7 @@ object ChangeStream {
           val applied = state.agg(max(col("__batch_id"))).collect().head
           val alreadyApplied = !applied.isNullAt(0) && applied.getLong(0) >= batchId
           if (!alreadyApplied) StateStore.replace(
-            Cdc.incrementalAgg(state.drop("__batch_id"), aggTyped,
+            Cdc.incrementalAgg(state.drop("__batch_id"), guarded,
                 ma.groupCol, ma.valueCol)
               .withColumn("__batch_id", lit(batchId)),
             aggDir)
@@ -229,31 +207,14 @@ object ChangeStream {
     * the change-log dir in micro-batches of `maxFilesPerTrigger`, then stops.
     * Re-invoking with the same checkpoint resumes where the last run ended. */
   def run(spark: SparkSession, cfg: StreamConfig): StreamingQuery =
-    spark.readStream
-      .schema(Schemas.changeEventSchema)
-      .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
-      .parquet(cfg.changeLogDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", cfg.checkpointDir)
-      .foreachBatch((b: DataFrame, id: Long) => applyBatch(spark, cfg)(b, id))
-      .start()
+    StateStore.start(spark, Schemas.changeEventSchema, cfg.changeLogDir,
+      cfg.maxFilesPerTrigger, cfg.checkpointDir)(applyBatch(spark, cfg))
 
   /** Read a table's current state regardless of layout (flat StateStore dir
     * for unpartitioned tables, month-partitioned parquet otherwise). */
-  def readState(spark: SparkSession, cfg: StreamConfig, table: String): DataFrame = {
-    val dir = s"${cfg.stateDir}/$table"
-    if (Schemas.tableMeta(table).partitionCol.isEmpty)
-      StateStore.read(spark, dir, stateSchema(table))
-    else {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p))
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema(table))
-      else spark.read.parquet(dir).drop(PartitionedState.PartCol)
-    }
-  }
+  def readState(spark: SparkSession, cfg: StreamConfig, table: String): DataFrame =
+    StateStore.read(spark, s"${cfg.stateDir}/$table", stateSchema(table))
+      .drop(PartitionedState.PartCol)
 
   /** S2 — resume coordinates from the audit ledger (the reference's
     * get_ch_param_for_next, matomo2clickhouse.py:786-812). */

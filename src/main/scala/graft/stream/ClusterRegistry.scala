@@ -2,7 +2,8 @@ package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.Caching
 import graft.ml.VectorOps
@@ -42,7 +43,7 @@ private[stream] object UnionFindTables {
       batchIds: DataFrame, batchPairs: DataFrame,
       crossPairs: DataFrame): Long = {
     def idx(path: String, ddl: String) =
-      CorpusIngest.readOrEmpty(spark, path, ddl)
+      StateStore.readOrEmpty(spark, path, ddl)
         .filter(col("ingest_batch") =!= batchId)
     val (newLabels, newMerges) = UnionFind.increment(
       idx(labelsPath(root), labelsDdl), idx(mergesPath(root), mergesDdl),
@@ -68,8 +69,8 @@ private[stream] object UnionFindTables {
     * through stranded compactions. */
   def resolvedLabels(spark: SparkSession, root: String): DataFrame =
     UnionFind.resolveLabels(
-      CorpusIngest.readOrEmptyRO(spark, labelsPath(root), labelsDdl),
-      CorpusIngest.readOrEmptyRO(spark, mergesPath(root), mergesDdl))
+      StateStore.readOrEmptyRO(spark, labelsPath(root), labelsDdl),
+      StateStore.readOrEmptyRO(spark, mergesPath(root), mergesDdl))
 
   /** Pairwise same-cluster probes (a, b) against the resolved labels.
     * POINT-LOOKUP pruned (the [[UnionFind.MaxLabelFetchIds]] discipline at
@@ -85,13 +86,13 @@ private[stream] object UnionFindTables {
     val ids = p.select(explode(array(col("a"), col("b"))).as("doc_id"))
       .distinct().limit(UnionFind.MaxLabelFetchIds + 1)
       .collect().map(_.getLong(0)).toSeq
-    val labels = CorpusIngest.readOrEmptyRO(spark, labelsPath(root), labelsDdl)
+    val labels = StateStore.readOrEmptyRO(spark, labelsPath(root), labelsDdl)
     val src =
       if (ids.length <= UnionFind.MaxLabelFetchIds)
         labels.filter(col("doc_id").isInCollection(ids))
       else labels
     val lab = Caching.scoped(UnionFind.resolveLabels(src,
-      CorpusIngest.readOrEmptyRO(spark, mergesPath(root), mergesDdl)))
+      StateStore.readOrEmptyRO(spark, mergesPath(root), mergesDdl)))
     p.join(lab.select(col("doc_id").as("a"), col("label").as("la")), Seq("a"), "left")
       .join(lab.select(col("doc_id").as("b"), col("label").as("lb")), Seq("b"), "left")
       .select(col("a"), col("b"),
@@ -106,13 +107,12 @@ private[stream] object UnionFindTables {
     * stale summary is never served. */
   private def summaryStamp(spark: SparkSession, root: String,
       path: String, ddl: String): Option[Long] = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StateStore.fsOf(spark, root)
     // swap-written whole with one lit stamp — one row IS the table's stamp
-    val row = CorpusIngest.readOrEmptyRO(spark, path, ddl)
+    val row = StateStore.readOrEmptyRO(spark, path, ddl)
       .select(col("upto_batch")).limit(1).collect()
     row.map(_.getLong(0)).headOption
-      .filter(u => u != Long.MinValue && u == CorpusIngest.compactionHwm(fs, root))
+      .filter(u => u != Long.MinValue && u == StateStore.compactionHwm(fs, root))
   }
 
   /** Post-fold DELTA labels resolved through the CALLER's root-resolved
@@ -122,7 +122,7 @@ private[stream] object UnionFindTables {
     * explicitly as well as by the comparison. */
   private def deltaLabels(spark: SparkSession, root: String,
       upto: Long, rootOf: DataFrame): DataFrame =
-    CorpusIngest.readOrEmptyRO(spark, labelsPath(root), labelsDdl)
+    StateStore.readOrEmptyRO(spark, labelsPath(root), labelsDdl)
       .filter(col("ingest_batch").cast("long") > upto &&
         col("ingest_batch").cast("long") =!= -1L)
       .select(col("doc_id"), col("label"))
@@ -136,9 +136,9 @@ private[stream] object UnionFindTables {
     * when no coherent summary exists (caller recomputes). */
   private def currentSizes(spark: SparkSession, root: String): Option[DataFrame] =
     summaryStamp(spark, root, sizesPath(root), sizesDdl).map { upto =>
-      val persisted = CorpusIngest.readOrEmptyRO(spark, sizesPath(root), sizesDdl)
+      val persisted = StateStore.readOrEmptyRO(spark, sizesPath(root), sizesDdl)
       val rootOf = UnionFind.resolveMerges(
-        CorpusIngest.readOrEmptyRO(spark, mergesPath(root), mergesDdl))
+        StateStore.readOrEmptyRO(spark, mergesPath(root), mergesDdl))
       persisted
         .join(rootOf, col("label") === col("child"), "left")
         .select(coalesce(col("root"), col("label")).as("label"), col("sz"))
@@ -167,9 +167,9 @@ private[stream] object UnionFindTables {
     * pins them). */
   def clusterStats(spark: SparkSession, root: String): DataFrame = {
     val served = summaryStamp(spark, root, statsPath(root), statsDdl).map { upto =>
-      val persisted = CorpusIngest.readOrEmptyRO(spark, statsPath(root), statsDdl)
+      val persisted = StateStore.readOrEmptyRO(spark, statsPath(root), statsDdl)
       val rootOf = Caching.scoped(UnionFind.resolveMerges(
-        CorpusIngest.readOrEmptyRO(spark, mergesPath(root), mergesDdl)))
+        StateStore.readOrEmptyRO(spark, mergesPath(root), mergesDdl)))
       val delta = Caching.scoped(deltaLabels(spark, root, upto, rootOf))
       // touched current roots: every delta doc's label plus every merge
       // target — the only clusters whose size can differ from the fold
@@ -184,7 +184,7 @@ private[stream] object UnionFindTables {
       // membership on the REMAPPED label is a semi-join against the
       // small touched frame either way. Above the cap: unpruned scan,
       // same rows.
-      val sizesTbl = CorpusIngest.readOrEmptyRO(spark, sizesPath(root), sizesDdl)
+      val sizesTbl = StateStore.readOrEmptyRO(spark, sizesPath(root), sizesDdl)
       val touchedIds = touched.limit(UnionFind.MaxLabelFetchIds + 1)
         .collect().map(_.getLong(0)).toSeq
       val childIds = rootOf.select(col("child")).distinct()
@@ -319,7 +319,7 @@ private[stream] object UnionFindTables {
   def auditNoOrphans(spark: SparkSession, root: String, indexIds: DataFrame,
       what: String): Unit = {
     val orphan = indexIds.select(col("doc_id")).distinct()
-      .join(CorpusIngest.readOrEmpty(spark, labelsPath(root), labelsDdl)
+      .join(StateStore.readOrEmpty(spark, labelsPath(root), labelsDdl)
         .select(col("doc_id")), Seq("doc_id"), "left_anti")
       .limit(1).collect()
     require(orphan.isEmpty,
@@ -337,10 +337,10 @@ private[stream] object UnionFindTables {
     * the two swaps loses nothing and a re-run completes the truncation. */
   def compactLabels(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, root: String): Unit = {
-    CorpusIngest.rollbackIfStranded(fs, labelsPath(root))
-    CorpusIngest.rollbackIfStranded(fs, mergesPath(root))
-    CorpusIngest.rollbackIfStranded(fs, sizesPath(root))
-    CorpusIngest.rollbackIfStranded(fs, statsPath(root))
+    StateStore.rollbackIfStranded(fs, labelsPath(root))
+    StateStore.rollbackIfStranded(fs, mergesPath(root))
+    StateStore.rollbackIfStranded(fs, sizesPath(root))
+    StateStore.rollbackIfStranded(fs, statsPath(root))
     // range-sorted by doc_id: per-batch appends carry batch-local id
     // ranges anyway, but the FOLDED table is where point lookups (the
     // increment's matched-corpus label fetch, sameCluster probes) spend
@@ -350,9 +350,9 @@ private[stream] object UnionFindTables {
       .repartitionByRange(col("doc_id"))
       .sortWithinPartitions(col("doc_id"))
       .withColumn("ingest_batch", lit(-1L))
-      .localCheckpoint() // sever lineage: the swap deletes what it reads
-    CorpusIngest.swapWrite(fs, labelsPath(root), resolved, Seq("ingest_batch"))
-    CorpusIngest.swapWrite(fs, mergesPath(root),
+      .localCheckpoint()
+    StateStore.swap(fs, labelsPath(root), resolved, Seq("ingest_batch"))
+    StateStore.swap(fs, mergesPath(root),
       graft.Frames.empty(spark, mergesDdl), Seq("ingest_batch"))
     // materialized serve summaries: the fold is the one moment the
     // corpus-wide size aggregate is being paid anyway — persist the
@@ -364,15 +364,15 @@ private[stream] object UnionFindTables {
     // crash in this window, or batches folded by a died later compact)
     // by comparing against the hwm marker — falling back to the full
     // recompute, never serving stale numbers.
-    val hwm = CorpusIngest.compactionHwm(fs, root)
+    val hwm = StateStore.compactionHwm(fs, root)
     val sizes = resolved.groupBy(col("label"))
       .agg(count(lit(1)).as("sz"))
       .withColumn("upto_batch", lit(hwm))
       .repartitionByRange(col("label"))
       .sortWithinPartitions(col("label"))
       .localCheckpoint()
-    CorpusIngest.swapWrite(fs, sizesPath(root), sizes)
-    CorpusIngest.swapWrite(fs, statsPath(root),
+    StateStore.swap(fs, sizesPath(root), sizes)
+    StateStore.swap(fs, statsPath(root),
       sizes.agg(count(lit(1)).as("n_clusters"),
           coalesce(sum(col("sz")), lit(0L)).as("n_docs"),
           coalesce(max(col("sz")), lit(0L)).as("max_cluster"))
@@ -454,17 +454,14 @@ object ClusterRegistry {
    * overwrites — identical rows.
    */
   def ingestBatch(spark: SparkSession, cfg: RegistryConfig, batch: DataFrame,
-      batchId: Long): Long = IngestLock.withLock(spark, cfg.root,
-      batchLockOwner(cfg, batchId), cfg.lockStaleMs) { lock =>
-    val fs = new org.apache.hadoop.fs.Path(cfg.root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq(bandsPath(cfg), setsPath(cfg), UnionFindTables.labelsPath(cfg.root),
-      UnionFindTables.mergesPath(cfg.root), ledgerPath(cfg))
-      .foreach(CorpusIngest.rollbackIfStranded(fs, _))
-    CorpusIngest.requireAboveCompactionHwm(fs, cfg.root, batchId)
+      batchId: Long): Long = StateStore.lockedBatch(spark, cfg.root,
+      batchLockOwner(cfg, batchId), cfg.lockStaleMs,
+      Seq(bandsPath(cfg), setsPath(cfg), UnionFindTables.labelsPath(cfg.root),
+        UnionFindTables.mergesPath(cfg.root), ledgerPath(cfg))) { (lock, fs) =>
+    StateStore.requireAboveCompactionHwm(fs, cfg.root, batchId)
     Caching.scope {
       def idx(path: String, ddl: String) =
-        CorpusIngest.readOrEmpty(spark, path, ddl)
+        StateStore.readOrEmpty(spark, path, ddl)
           .filter(col("ingest_batch") =!= batchId)
 
       val docs = Caching.scoped(batch.select(col("doc_id"), col("text")))
@@ -522,16 +519,16 @@ object ClusterRegistry {
     // cached like ingestBatch's: the increment reads the pair frames more
     // than once — uncached, the candidate join + verify would re-run
     val crossPairs = Caching.scoped(TextOps.minhashProbeIndexed(
-      CorpusIngest.readOrEmptyRO(spark, bandsPath(cfg), bandsDdl),
-      CorpusIngest.readOrEmptyRO(spark, setsPath(cfg), setsDdl),
+      StateStore.readOrEmptyRO(spark, bandsPath(cfg), bandsDdl),
+      StateStore.readOrEmptyRO(spark, setsPath(cfg), setsDdl),
       batchBands, batchSets, cfg.threshold,
       pushIdLimit = CorpusIngest.MaxProbePushIds))
     val batchPairs = Caching.scoped(TextOps.minhashNearDupsIndexed(
       batchBands, batchSets, cfg.threshold))
     UnionFindTables.probeReport(
-      CorpusIngest.readOrEmptyRO(spark, UnionFindTables.labelsPath(cfg.root),
+      StateStore.readOrEmptyRO(spark, UnionFindTables.labelsPath(cfg.root),
         UnionFindTables.labelsDdl),
-      CorpusIngest.readOrEmptyRO(spark, UnionFindTables.mergesPath(cfg.root),
+      StateStore.readOrEmptyRO(spark, UnionFindTables.mergesPath(cfg.root),
         UnionFindTables.mergesDdl),
       docs.select(col("doc_id")), batchPairs, crossPairs)
   }
@@ -548,8 +545,8 @@ object ClusterRegistry {
     val batchBands = Caching.scoped(bb)
     val batchSets = Caching.scoped(bs)
     val crossPairs = TextOps.minhashProbeIndexed(
-      CorpusIngest.readOrEmptyRO(spark, bandsPath(cfg), bandsDdl),
-      CorpusIngest.readOrEmptyRO(spark, setsPath(cfg), setsDdl),
+      StateStore.readOrEmptyRO(spark, bandsPath(cfg), bandsDdl),
+      StateStore.readOrEmptyRO(spark, setsPath(cfg), setsDdl),
       batchBands, batchSets, cfg.threshold,
       pushIdLimit = CorpusIngest.MaxProbePushIds)
     val batchPairs = TextOps.minhashNearDupsIndexed(
@@ -564,7 +561,7 @@ object ClusterRegistry {
   /** Current cluster label of every registered doc — the read-only serving
     * face: `labels` joined once against the root-resolved merge log
     * ([[UnionFind.resolveLabels]]). Lock-free; reads through stranded
-    * compactions via [[CorpusIngest.readOrEmptyRO]]. */
+    * compactions via [[StateStore.readOrEmptyRO]]. */
   def resolvedLabels(spark: SparkSession, cfg: RegistryConfig): DataFrame =
     UnionFindTables.resolvedLabels(spark, cfg.root)
 
@@ -593,7 +590,7 @@ object ClusterRegistry {
 
   /**
    * Fold the registry: signature tables concatenate into the `-1`
-   * partition ([[CorpusIngest.foldBatchPartitions]]); `labels` folds to
+   * partition ([[StateStore.foldBatchPartitions]]); `labels` folds to
    * its RESOLVED form and `merges` then truncates to empty
    * ([[UnionFindTables.compactLabels]] — union-find path compression as a
    * maintenance job, resetting the resolution chain depth to zero). Same
@@ -603,23 +600,22 @@ object ClusterRegistry {
   def compact(spark: SparkSession, cfg: RegistryConfig): Unit =
     IngestLock.withLock(spark, cfg.root,
         s"cluster-compact-${java.util.UUID.randomUUID()}", cfg.lockStaleMs) { lock =>
-      val fs = new org.apache.hadoop.fs.Path(cfg.root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = StateStore.fsOf(spark, cfg.root)
       // audit BEFORE any fold: a failure must leave the state untouched
       UnionFindTables.auditNoOrphans(spark, cfg.root,
-        CorpusIngest.readOrEmpty(spark, setsPath(cfg), setsDdl)
+        StateStore.readOrEmpty(spark, setsPath(cfg), setsDdl)
           .select(col("doc_id")), cfg.root)
-      CorpusIngest.markCompactionHwm(fs, cfg.root,
-        CorpusIngest.ledgerMaxBatch(spark, ledgerPath(cfg)))
+      StateStore.markCompactionHwm(fs, cfg.root,
+        StateStore.ledgerMaxBatch(spark, ledgerPath(cfg)))
       IngestLock.heartbeat(spark, lock)
       // the signature folds and the label path-compression rewrite
       // disjoint directories — overlap them on the bounded pool. Folds
       // are PROBE-KEY-SORTED (the CorpusIngest.compact discipline) so the
       // ingest probe's cap-bounded IN pushdown prunes row groups.
       CorpusIngest.parallelUnits(Seq(
-        () => CorpusIngest.foldBatchPartitions(spark, fs, bandsPath(cfg),
+        () => StateStore.foldBatchPartitions(spark, fs, bandsPath(cfg),
           _.repartitionByRange(col("sig")).sortWithinPartitions(col("sig"))),
-        () => CorpusIngest.foldBatchPartitions(spark, fs, setsPath(cfg),
+        () => StateStore.foldBatchPartitions(spark, fs, setsPath(cfg),
           _.repartitionByRange(col("doc_id"))
             .sortWithinPartitions(col("doc_id"))),
         () => UnionFindTables.compactLabels(spark, fs, cfg.root)))
@@ -628,17 +624,10 @@ object ClusterRegistry {
   /** Start the continuous labeling stream (AvailableNow — the reference's
     * budgeted-run cadence, ST1; same wiring as [[CorpusIngest.start]]). */
   def start(spark: SparkSession, cfg: RegistryConfig): StreamingQuery =
-    spark.readStream
-      .schema("doc_id BIGINT, text STRING")
-      .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
-      .parquet(cfg.docsDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", cfg.checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(spark, cfg, batch, batchId): Unit
-      }
-      .start()
+    StateStore.start(spark, StructType.fromDDL("doc_id BIGINT, text STRING"),
+        cfg.docsDir, cfg.maxFilesPerTrigger, cfg.checkpointDir) { (batch, batchId) =>
+      ingestBatch(spark, cfg, batch, batchId): Unit
+    }
 }
 
 /**
@@ -698,19 +687,16 @@ object EmbeddingClusterRegistry {
     * increment shape as [[ClusterRegistry.ingestBatch]], with the SRP
     * probe/pair faces supplying the pair evidence. */
   def ingestBatch(spark: SparkSession, cfg: RegistryConfig, batch: DataFrame,
-      batchId: Long): Long = IngestLock.withLock(spark, cfg.root,
-      batchLockOwner(cfg, batchId), cfg.lockStaleMs) { lock =>
-    val fs = new org.apache.hadoop.fs.Path(cfg.root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq(vecsPath(cfg), bandWidthPath(cfg), UnionFindTables.labelsPath(cfg.root),
-      UnionFindTables.mergesPath(cfg.root), ledgerPath(cfg))
-      .foreach(CorpusIngest.rollbackIfStranded(fs, _))
+      batchId: Long): Long = StateStore.lockedBatch(spark, cfg.root,
+      batchLockOwner(cfg, batchId), cfg.lockStaleMs,
+      Seq(vecsPath(cfg), bandWidthPath(cfg), UnionFindTables.labelsPath(cfg.root),
+        UnionFindTables.mergesPath(cfg.root), ledgerPath(cfg))) { (lock, fs) =>
     val (bandsDir, wBits, wBb) = resolvedBands(spark, cfg)
-    CorpusIngest.rollbackIfStranded(fs, bandsDir)
-    CorpusIngest.requireAboveCompactionHwm(fs, cfg.root, batchId)
+    StateStore.rollbackIfStranded(fs, bandsDir)
+    StateStore.requireAboveCompactionHwm(fs, cfg.root, batchId)
     Caching.scope {
       def idx(path: String, ddl: String) =
-        CorpusIngest.readOrEmpty(spark, path, ddl)
+        StateStore.readOrEmpty(spark, path, ddl)
           .filter(col("ingest_batch") =!= batchId)
 
       // ONE signature build feeds probe, self-pairs, and both appends —
@@ -758,17 +744,17 @@ object EmbeddingClusterRegistry {
     val batchVecs = Caching.scoped(bv)
     // cached like ingestBatch's pair frames (see ClusterRegistry.probe)
     val crossPairs = Caching.scoped(VectorOps.srpProbeIndexed(
-      CorpusIngest.readOrEmptyRO(spark, bandsDir, bandsDdl),
-      CorpusIngest.readOrEmptyRO(spark, vecsPath(cfg), vecsDdl),
+      StateStore.readOrEmptyRO(spark, bandsDir, bandsDdl),
+      StateStore.readOrEmptyRO(spark, vecsPath(cfg), vecsDdl),
       batchBands, batchVecs, cfg.threshold,
       pushIdLimit = CorpusIngest.MaxProbePushIds))
     val batchPairs = Caching.scoped(VectorOps.srpNearDupsIndexed(
       batchBands, batchVecs, cfg.threshold)
       .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
     UnionFindTables.probeReport(
-      CorpusIngest.readOrEmptyRO(spark, UnionFindTables.labelsPath(cfg.root),
+      StateStore.readOrEmptyRO(spark, UnionFindTables.labelsPath(cfg.root),
         UnionFindTables.labelsDdl),
-      CorpusIngest.readOrEmptyRO(spark, UnionFindTables.mergesPath(cfg.root),
+      StateStore.readOrEmptyRO(spark, UnionFindTables.mergesPath(cfg.root),
         UnionFindTables.mergesDdl),
       batchVecs.select(col("vec_id").as("doc_id")), batchPairs, crossPairs)
       .select(col("doc_id").as("vec_id"), col("label"), col("n_existing"))
@@ -786,8 +772,8 @@ object EmbeddingClusterRegistry {
     val batchBands = Caching.scoped(bb)
     val batchVecs = Caching.scoped(bv)
     val crossPairs = VectorOps.srpProbeIndexed(
-      CorpusIngest.readOrEmptyRO(spark, bandsDir, bandsDdl),
-      CorpusIngest.readOrEmptyRO(spark, vecsPath(cfg), vecsDdl),
+      StateStore.readOrEmptyRO(spark, bandsDir, bandsDdl),
+      StateStore.readOrEmptyRO(spark, vecsPath(cfg), vecsDdl),
       batchBands, batchVecs, cfg.threshold,
       pushIdLimit = CorpusIngest.MaxProbePushIds)
     val batchPairs = VectorOps.srpNearDupsIndexed(
@@ -833,26 +819,25 @@ object EmbeddingClusterRegistry {
     IngestLock.withLock(spark, cfg.root,
         s"emb-cluster-compact-${java.util.UUID.randomUUID()}",
         cfg.lockStaleMs) { lock =>
-      val fs = new org.apache.hadoop.fs.Path(cfg.root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = StateStore.fsOf(spark, cfg.root)
       // roll back a marker stranded mid-reband BEFORE resolving the bands
       // dir (ADVICE r12) — see EmbeddingIngest.compact for the hazard
-      CorpusIngest.rollbackIfStranded(fs, bandWidthPath(cfg))
-      CorpusIngest.rollbackIfStranded(fs, resolvedBands(spark, cfg)._1)
+      StateStore.rollbackIfStranded(fs, bandWidthPath(cfg))
+      StateStore.rollbackIfStranded(fs, resolvedBands(spark, cfg)._1)
       // audit BEFORE any fold: a failure must leave the state untouched
       UnionFindTables.auditNoOrphans(spark, cfg.root,
-        CorpusIngest.readOrEmpty(spark, vecsPath(cfg), vecsDdl)
+        StateStore.readOrEmpty(spark, vecsPath(cfg), vecsDdl)
           .select(col("vec_id").as("doc_id")), cfg.root)
-      CorpusIngest.markCompactionHwm(fs, cfg.root,
-        CorpusIngest.ledgerMaxBatch(spark, ledgerPath(cfg)))
+      StateStore.markCompactionHwm(fs, cfg.root,
+        StateStore.ledgerMaxBatch(spark, ledgerPath(cfg)))
       IngestLock.heartbeat(spark, lock)
       // disjoint directories — overlap on the bounded pool (see
       // [[ClusterRegistry.compact]]); the vec store folds vec_id-sorted
       // so the probe's candidate-id IN pushdown prunes the verify read
       CorpusIngest.parallelUnits(Seq(
-        () => CorpusIngest.foldBatchPartitions(spark, fs,
+        () => StateStore.foldBatchPartitions(spark, fs,
           resolvedBands(spark, cfg)._1),
-        () => CorpusIngest.foldBatchPartitions(spark, fs, vecsPath(cfg),
+        () => StateStore.foldBatchPartitions(spark, fs, vecsPath(cfg),
           _.repartitionByRange(col("vec_id"))
             .sortWithinPartitions(col("vec_id"))),
         () => UnionFindTables.compactLabels(spark, fs, cfg.root)))
@@ -870,30 +855,29 @@ object EmbeddingClusterRegistry {
       bandBits: Int): Unit = IngestLock.withLock(spark, cfg.root,
       s"emb-cluster-reband-${java.util.UUID.randomUUID()}",
       cfg.lockStaleMs) { lock =>
-    val fs = new org.apache.hadoop.fs.Path(cfg.root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StateStore.fsOf(spark, cfg.root)
     Seq(vecsPath(cfg), bandWidthPath(cfg), ledgerPath(cfg))
-      .foreach(CorpusIngest.rollbackIfStranded(fs, _))
+      .foreach(StateStore.rollbackIfStranded(fs, _))
     val (curDir, curBits, curBb) = resolvedBands(spark, cfg)
     CorpusIngest.sweepSupersededSrpBands(spark, fs, cfg.root, curDir)
     // no-op at the already-committed width (ADVICE r12) — see
     // [[EmbeddingIngest.reband]]: re-running at the marker's width must
-    // not swapWrite the LIVE serving directory under lock-free probes
+    // not swap the LIVE serving directory under lock-free probes
     if (curBits != bits || curBb != bandBits) {
-      CorpusIngest.markCompactionHwm(fs, cfg.root,
-        CorpusIngest.ledgerMaxBatch(spark, ledgerPath(cfg)))
-      val vecs = CorpusIngest.readOrEmpty(spark, vecsPath(cfg), vecsDdl)
+      StateStore.markCompactionHwm(fs, cfg.root,
+        StateStore.ledgerMaxBatch(spark, ledgerPath(cfg)))
+      val vecs = StateStore.readOrEmpty(spark, vecsPath(cfg), vecsDdl)
         .select(col("vec_id"), col("e").as("embedding"))
       val (nb, _) = VectorOps.srpIndex(vecs, bits = bits, bandBits = bandBits)
       IngestLock.heartbeat(spark, lock)
-      CorpusIngest.swapWrite(fs, s"${cfg.root}/bands_w${bits}x$bandBits",
+      StateStore.swap(fs, s"${cfg.root}/bands_w${bits}x$bandBits",
         nb.select(col("vec_id"), col("band"), col("bv"),
           lit(-1L).as("ingest_batch")),
         partitionCols = Seq("ingest_batch"))
       IngestLock.heartbeat(spark, lock)
       // the commit point: from here every face signs and reads at the
       // new width
-      CorpusIngest.swapWrite(fs, bandWidthPath(cfg),
+      StateStore.swap(fs, bandWidthPath(cfg),
         spark.createDataFrame(Seq((bits, bandBits))).toDF("bits", "band_bits"))
     }
   }
@@ -905,13 +889,12 @@ object EmbeddingClusterRegistry {
     * healthy. */
   def rebandIfNeeded(spark: SparkSession,
       cfg: RegistryConfig): Option[(Int, Int)] = {
-    val fs = new org.apache.hadoop.fs.Path(cfg.root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    CorpusIngest.rollbackIfStranded(fs, bandWidthPath(cfg))
+    val fs = StateStore.fsOf(spark, cfg.root)
+    StateStore.rollbackIfStranded(fs, bandWidthPath(cfg))
     val (dir, bits, bb) = resolvedBands(spark, cfg)
-    CorpusIngest.rollbackIfStranded(fs, dir)
+    StateStore.rollbackIfStranded(fs, dir)
     val plan = VectorOps.srpRebandPlan(
-      VectorOps.srpBandHealth(CorpusIngest.readOrEmpty(spark, dir, bandsDdl)),
+      VectorOps.srpBandHealth(StateStore.readOrEmpty(spark, dir, bandsDdl)),
       bits, bb)
     plan.foreach { case (nb, nbb) => reband(spark, cfg, nb, nbb) }
     plan
@@ -919,15 +902,8 @@ object EmbeddingClusterRegistry {
 
   /** Start the continuous labeling stream (AvailableNow). */
   def start(spark: SparkSession, cfg: RegistryConfig): StreamingQuery =
-    spark.readStream
-      .schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-      .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
-      .parquet(cfg.vecsDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", cfg.checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(spark, cfg, batch, batchId): Unit
-      }
-      .start()
+    StateStore.start(spark, StructType.fromDDL("vec_id BIGINT, embedding ARRAY<FLOAT>"),
+        cfg.vecsDir, cfg.maxFilesPerTrigger, cfg.checkpointDir) { (batch, batchId) =>
+      ingestBatch(spark, cfg, batch, batchId): Unit
+    }
 }

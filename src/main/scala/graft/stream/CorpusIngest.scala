@@ -3,7 +3,8 @@ package graft.stream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.Caching
 import graft.text.TextOps
@@ -122,47 +123,6 @@ object CorpusIngest {
     }
   }
 
-  /** Forward-compat shim for table layouts that GAIN columns across
-    * versions (e.g. the PQ code table's epoch/bucket annotations): a root
-    * persisted before the column existed reads back with the new columns
-    * as typed NULLs instead of crashing every downstream select with an
-    * AnalysisException the operator can't act on. Null semantics are the
-    * per-column contract (stale annotation → pruning disabled; missing
-    * epoch stamp → coherence gate refuses with the repair named). Only
-    * ADDS columns — extra on-disk columns and type conflicts still
-    * surface. */
-  private def conformToDdl(df: DataFrame, ddl: String): DataFrame = {
-    val have = df.columns.toSet
-    val missing = org.apache.spark.sql.types.StructType.fromDDL(ddl)
-      .fields.filter(f => !have.contains(f.name))
-    missing.foldLeft(df)((d, f) =>
-      d.withColumn(f.name, lit(null).cast(f.dataType)))
-  }
-
-  private[stream] def readOrEmpty(spark: SparkSession, path: String,
-      ddl: String): DataFrame = {
-    def empty = graft.Frames.empty(spark, ddl)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    rollbackIfStranded(fs, path)
-    if (!fs.exists(p)) empty
-    // an all-rejected batch leaves the dir present but partition-less
-    // (_SUCCESS only); ONLY that schema-inference failure means empty — any
-    // other analysis error (corrupt footer, conflicting schema) must
-    // surface, not silently disable deduplication
-    else try conformToDdl(spark.read.parquet(path), ddl)
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") => empty
-    }
-  }
-
-  /** Read-only twin of [[readOrEmpty]] for the lock-less [[probe]] paths:
-    * NEVER mutates. A table stranded at `<dir>.__old` by a crashed
-    * compaction is READ from there instead of being rolled back — rollback
-    * belongs to the locked mutators; a probe racing a live compact's
-    * two-rename swap window must not rename directories out from under it
-    * (the rollback would make the compact's swap-in fail). */
   /** Resolve (bands dir, bits, bandBits) from an SRP root's width marker —
     * shared by the SRP-indexed roots ([[EmbeddingIngest]],
     * [[EmbeddingClusterRegistry]]): reband re-signs the bands into a
@@ -172,7 +132,7 @@ object CorpusIngest {
     * See [[EmbeddingIngest.reband]] for the full crash contract. */
   private[stream] def resolvedSrpBands(spark: SparkSession, root: String,
       legacyDir: String, defBits: Int, defBandBits: Int): (String, Int, Int) =
-    readOrEmptyRO(spark, s"$root/bandwidth", "bits INT, band_bits INT")
+    StateStore.readOrEmptyRO(spark, s"$root/bandwidth", "bits INT, band_bits INT")
       .limit(1).collect().headOption match {
       case Some(r) =>
         val (b, bb) = (r.getInt(0), r.getInt(1))
@@ -198,23 +158,6 @@ object CorpusIngest {
     }
   }
 
-  private[stream] def readOrEmptyRO(spark: SparkSession, path: String,
-      ddl: String): DataFrame = {
-    def empty = graft.Frames.empty(spark, ddl)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq(path, path + ".__old")
-      .find(d => fs.exists(new org.apache.hadoop.fs.Path(d))) match {
-      case None => empty
-      case Some(dir) =>
-        try conformToDdl(spark.read.parquet(dir), ddl)
-        catch {
-          case e: org.apache.spark.sql.AnalysisException
-              if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") => empty
-        }
-    }
-  }
-
   // Every partitioned state overwrite sets partitionOverwriteMode=dynamic
   // PER WRITE via DataFrameWriter.option (which takes precedence over the
   // session conf, SPARK-20236). The prior session-conf toggle was not
@@ -222,79 +165,6 @@ object CorpusIngest {
   // finally-restore could flip the mode back to `static` while another
   // path's partitioned overwrite was being planned — silently truncating
   // the whole table instead of its own partition (ADVICE round 9).
-
-  /** A compact() that died between its two renames leaves a table
-    * stranded at `<dir>.__old` — roll it back (the StateStore.read
-    * discipline); proceeding as if empty would silently reset the dedup
-    * index and orphan the accepted corpus. */
-  private[stream] def rollbackIfStranded(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val old = new org.apache.hadoop.fs.Path(dir + ".__old")
-    if (!fs.exists(p) && fs.exists(old))
-      require(fs.rename(old, p), s"state rollback failed: $old -> $p")
-  }
-
-  // ---- compaction high-water mark (ADVICE round 9) --------------------
-  // After a compaction folds per-batch partitions into `-1`, an
-  // at-least-once replay of a PRE-compaction batch id (a stream restarted
-  // from an older checkpoint) would re-append rows that already live in
-  // the folded partition — silent duplication that double-counts every
-  // downstream aggregate. The fold records the highest batch id it
-  // subsumes as an empty marker file `_compact_hwm/<id>` (create-only and
-  // monotone: no rename/delete window can lose the mark), and every
-  // ingest refuses batch ids at or below it.
-
-  private def hwmDir(root: String) =
-    new org.apache.hadoop.fs.Path(s"$root/_compact_hwm")
-
-  /** Highest batch id any compaction of `root` has folded;
-    * Long.MinValue when none ran. */
-  private[stream] def compactionHwm(fs: org.apache.hadoop.fs.FileSystem,
-      root: String): Long = {
-    val d = hwmDir(root)
-    if (!fs.exists(d)) Long.MinValue
-    else fs.listStatus(d).map(_.getPath.getName)
-      .flatMap(n => scala.util.Try(n.toLong).toOption)
-      .foldLeft(Long.MinValue)(math.max)
-  }
-
-  /** Record the mark BEFORE folding (callers pass the ledger's max batch
-    * id): a crash between marker and fold merely refuses replays of
-    * batches whose partitions are still intact — safe, their rows are
-    * present either way. The reverse order would leave a fold-then-crash
-    * window where the silent re-append is back. */
-  private[stream] def markCompactionHwm(fs: org.apache.hadoop.fs.FileSystem,
-      root: String, hwm: Long): Unit =
-    if (hwm > compactionHwm(fs, root)) {
-      val d = hwmDir(root)
-      if (!fs.exists(d)) fs.mkdirs(d)
-      fs.create(new org.apache.hadoop.fs.Path(d, hwm.toString), true).close()
-    }
-
-  /** Max batch id the ledger has recorded — what a compaction is about to
-    * subsume. The ledgers stay per-batch through every fold, so this is
-    * the root's full ingest history. */
-  private[stream] def ledgerMaxBatch(spark: SparkSession,
-      ledgerPath: String): Long = {
-    // cast: partition-column type inference reads small batch ids as INT
-    val r = readOrEmpty(spark, ledgerPath, "ingest_batch BIGINT")
-      .agg(max(col("ingest_batch").cast("long"))).first
-    if (r.isNullAt(0)) Long.MinValue else r.getLong(0)
-  }
-
-  /** The loud refusal: a batch at or below the high-water mark must not
-    * re-ingest (its own partition was deleted by the fold; a dynamic
-    * overwrite would duplicate its rows next to the compacted copy).
-    * The repair is advancing the stream checkpoint past the mark. */
-  private[stream] def requireAboveCompactionHwm(
-      fs: org.apache.hadoop.fs.FileSystem, root: String, batchId: Long): Unit = {
-    val hwm = compactionHwm(fs, root)
-    require(batchId > hwm,
-      s"batch $batchId is at or below the compaction high-water mark $hwm " +
-        "— its rows were folded into the compacted state and a replay " +
-        "would duplicate them; advance the stream checkpoint past the mark")
-  }
 
   /** The lock owner of a batch is its STABLE identity — checkpoint dir +
     * batch id, not a per-invocation UUID. A batch that crashed after
@@ -314,29 +184,23 @@ object CorpusIngest {
     * [[compact]] (or a second ingest run against the same root) refuses
     * instead of interleaving with the multi-table partition writes. */
   def ingestBatch(spark: SparkSession, cfg: IngestConfig, batch: DataFrame,
-      batchId: Long): Long = MaintStages("ingest_text", "total") {
-    IngestLock.withLock(spark, cfg.corpusRoot,
-      batchLockOwner(cfg, batchId), cfg.lockStaleMs) { lock =>
+      batchId: Long): Long =
     // recover every table a crashed compaction may have stranded — not
     // just the index tables the dedup reads, but docs and ledger too
-    val rootFs = new org.apache.hadoop.fs.Path(cfg.corpusRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    MaintStages("ingest_text", "setup_fs") {
-      Seq(docsPath(cfg), hashesPath(cfg), bandsPath(cfg), setsPath(cfg),
-        postingsPath(cfg), docstatsPath(cfg), mgPath(cfg), phashPath(cfg),
-        ledgerPath(cfg))
-        .foreach(rollbackIfStranded(rootFs, _))
-      requireAboveCompactionHwm(rootFs, cfg.corpusRoot, batchId)
-    }
+    StateStore.lockedBatch(spark, cfg.corpusRoot, batchLockOwner(cfg, batchId),
+      cfg.lockStaleMs, Seq(docsPath(cfg), hashesPath(cfg), bandsPath(cfg),
+        setsPath(cfg), postingsPath(cfg), docstatsPath(cfg), mgPath(cfg),
+        phashPath(cfg), ledgerPath(cfg))) { (lock, rootFs) =>
+    StateStore.requireAboveCompactionHwm(rootFs, cfg.corpusRoot, batchId)
     // Caching.scope: the batch's cached intermediates are released when the
     // batch ends — and ONLY them, never a concurrent pipeline's caches (a
     // blanket releaseAll here would silently uncache an enclosing job's
     // scoped frames mid-flight)
-    Caching.scope { MaintStages("ingest_text", "scope_body") {
+    Caching.scope {
       // a replayed batch must not probe the rows IT wrote before crashing —
       // its decisions would then flip from accept to reject
       def idx(path: String, ddl: String) =
-        readOrEmpty(spark, path, ddl).filter(col("ingest_batch") =!= batchId)
+        StateStore.readOrEmpty(spark, path, ddl).filter(col("ingest_batch") =!= batchId)
 
       val norm = Caching.scoped(batch
         .select(col("doc_id"), col("text"),
@@ -362,38 +226,30 @@ object CorpusIngest {
       // min/max stats prune the corpus-sized hash table to the touched
       // row groups instead of scanning it per batch (the 100 TB shape;
       // VERDICT r13 item 4's O(root) floor, removed)
-      val hashIdx0 = MaintStages("ingest_text", "read_hash_idx") {
-        idx(hashesPath(cfg), "text_hash STRING, ingest_batch BIGINT")
-          .select(col("text_hash"))
-      }
-      val batchHashes = MaintStages("ingest_text", "hash_collect") {
-        firstOfHash.select(col("text_hash")).distinct()
-          .limit(MaxProbePushIds + 1).collect().map(_.getString(0))
-      }
+      val hashIdx0 = idx(hashesPath(cfg), "text_hash STRING, ingest_batch BIGINT")
+        .select(col("text_hash"))
+      val batchHashes = firstOfHash.select(col("text_hash")).distinct()
+        .limit(MaxProbePushIds + 1).collect().map(_.getString(0))
       val hashIdx =
         if (batchHashes.length > MaxProbePushIds) hashIdx0
         else hashIdx0.filter(col("text_hash").isin(batchHashes.toSeq: _*))
-      val (fresh, freshBands, freshSets) = MaintStages("ingest_text", "sig_plan") {
-        val fresh = Caching.scoped(firstOfHash.join(hashIdx,
-          Seq("text_hash"), "left_anti"))
-        // ONE signature build for the whole batch: the index probe, the
-        // within-batch dedup, and the accepted-index append all derive from
-        // these two cached frames — the shingle→md5 scan (the batch's
-        // dominant CPU) runs once, not three times
-        val (fb, fsets) = TextOps.minhashIndex(fresh, "doc_id", "text")
-        (fresh, Caching.scoped(fb), Caching.scoped(fsets))
-      }
+      val fresh = Caching.scoped(firstOfHash.join(hashIdx,
+        Seq("text_hash"), "left_anti"))
+      // ONE signature build for the whole batch: the index probe, the
+      // within-batch dedup, and the accepted-index append all derive from
+      // these two cached frames — the shingle→md5 scan (the batch's
+      // dominant CPU) runs once, not three times
+      val (fb, fsets) = TextOps.minhashIndex(fresh, "doc_id", "text")
+      val (freshBands, freshSets) = (Caching.scoped(fb), Caching.scoped(fsets))
       // probe the persisted index FIRST: a doc already near-duplicated in
       // the corpus must not also act as a within-batch "winner" — dropping
       // its batch near-dups in its favor and then rejecting it would lose
       // content that has no accepted near-duplicate at all, and would make
       // the accepted set depend on batch boundaries
-      val probeHits = MaintStages("ingest_text", "probe_build") {
-        TextOps.minhashProbeIndexed(
-          idx(bandsPath(cfg), "doc_id BIGINT, band INT, sig STRING, ingest_batch BIGINT"),
-          idx(setsPath(cfg), "doc_id BIGINT, s ARRAY<BIGINT>, n BIGINT, ingest_batch BIGINT"),
-          freshBands, freshSets, cfg.threshold, pushIdLimit = MaxProbePushIds)
-      }
+      val probeHits = TextOps.minhashProbeIndexed(
+        idx(bandsPath(cfg), "doc_id BIGINT, band INT, sig STRING, ingest_batch BIGINT"),
+        idx(setsPath(cfg), "doc_id BIGINT, s ARRAY<BIGINT>, n BIGINT, ingest_batch BIGINT"),
+        freshBands, freshSets, cfg.threshold, pushIdLimit = MaxProbePushIds)
       // CACHED: the probe subtree above is the only stage that READS the
       // accumulated index (bands + sets scans — cost tracks the ROOT, not
       // the batch), and without the cache every downstream consumer
@@ -403,11 +259,9 @@ object CorpusIngest {
       // times per batch; cached it runs once, and what remains is one
       // index scan per ingest, the documented O(root-scan) floor of a
       // probe whose candidate ids are runtime-computed)
-      val corpusNovelIds = MaintStages("ingest_text", "novel_plan") {
-        Caching.scoped(fresh.join(
-          probeHits.select(col("batch_id").as("doc_id")).distinct(),
-          Seq("doc_id"), "left_anti").select(col("doc_id")))
-      }
+      val corpusNovelIds = Caching.scoped(fresh.join(
+        probeHits.select(col("batch_id").as("doc_id")).distinct(),
+        Seq("doc_id"), "left_anti").select(col("doc_id")))
       def ofNovel(f: DataFrame) = f.join(corpusNovelIds, Seq("doc_id"), "left_semi")
       // within-batch near-dup among the corpus-novel docs: connected
       // components over the verified pair graph, keep each component's
@@ -417,19 +271,13 @@ object CorpusIngest {
       // drop BOTH B and C (C's content then survives nowhere while its
       // only near-dup B is also gone); component resolution makes the
       // kept set a deliberate one-per-cluster, not a pair-order artifact.
-      val inBatchPairs = MaintStages("ingest_text", "pairs_plan") {
-        TextOps.minhashNearDupsIndexed(
-          ofNovel(freshBands), ofNovel(freshSets), cfg.threshold)
-      }
-      val inBatchDrops = MaintStages("ingest_text", "cc") {
-        TextOps.connectedComponents(inBatchPairs)
-          .filter(col("id") =!= col("component"))
-          .select(col("id").as("doc_id"))
-      }
-      val accepted = MaintStages("ingest_text", "accepted_plan") {
-        Caching.scoped(
-          ofNovel(fresh).join(inBatchDrops, Seq("doc_id"), "left_anti"))
-      }
+      val inBatchPairs = TextOps.minhashNearDupsIndexed(
+        ofNovel(freshBands), ofNovel(freshSets), cfg.threshold)
+      val inBatchDrops = TextOps.connectedComponents(inBatchPairs)
+        .filter(col("id") =!= col("component"))
+        .select(col("id").as("doc_id"))
+      val accepted = Caching.scoped(
+        ofNovel(fresh).join(inBatchDrops, Seq("doc_id"), "left_anti"))
 
       // the dedup computation above may outlive the staleness window on a
       // huge batch; refresh the heartbeat (and fail loudly on a stolen
@@ -444,11 +292,8 @@ object CorpusIngest {
       // subtrees (norm is already materialized by the hash collect;
       // accepted's chain materializes here) — overlap them on the bounded
       // pool instead of paying two sequential job latencies
-      val (nIn, nAccepted) = MaintStages("ingest_text", "counts") {
-        var (a, b) = (0L, 0L)
-        parallelUnits(Seq(() => a = norm.count(), () => b = accepted.count()))
-        (a, b)
-      }
+      var (nIn, nAccepted) = (0L, 0L)
+      parallelUnits(Seq(() => nIn = norm.count(), () => nAccepted = accepted.count()))
       def ofAccepted(f: DataFrame) =
         f.join(accepted.select(col("doc_id")), Seq("doc_id"), "left_semi")
       // the probe-key tables append RANGE-LAID-OUT by their probe key
@@ -458,7 +303,7 @@ object CorpusIngest {
       // NOT-yet-compacted partitions too, not only after the sorted fold
       def ranged(df: DataFrame, c: String) =
         df.repartitionByRange(col(c)).sortWithinPartitions(col(c))
-      MaintStages("ingest_text", "appends") { parallelAppends(Seq(
+      parallelAppends(Seq(
         docsPath(cfg) -> accepted.select(col("doc_id"), col("text"), stamp),
         hashesPath(cfg) -> ranged(
           accepted.select(col("text_hash"), stamp), "text_hash"),
@@ -493,19 +338,17 @@ object CorpusIngest {
         // [[graft.ml.Multimodal.phash]]'s length guard.
         phashPath(cfg) -> graft.ml.Multimodal.phashBands(
             graft.ml.Multimodal.withPayload(accepted, "doc_id", "text"))
-          .select(col("doc_id"), col("phash"), col("band"), col("v"), stamp))) }
+          .select(col("doc_id"), col("phash"), col("band"), col("v"), stamp)))
       // the ledger row stays LAST and sequential: compaction takes the
       // ledger max as the high-water mark it fences replays with, so the
       // row must never land before every data layer it vouches for
-      MaintStages("ingest_text", "ledger") {
-        spark.createDataFrame(Seq((batchId, nIn, nAccepted)))
-          .toDF("ingest_batch", "n_in", "n_accepted")
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("ingest_batch").parquet(ledgerPath(cfg))
-      }
+      spark.createDataFrame(Seq((batchId, nIn, nAccepted)))
+        .toDF("ingest_batch", "n_in", "n_accepted")
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("ingest_batch").parquet(ledgerPath(cfg))
       nAccepted
-    } }
-  } }
+    }
+  }
 
   /**
    * Probe a batch against the ingested corpus WITHOUT ingesting — the
@@ -534,7 +377,7 @@ object CorpusIngest {
       if (cfg.minQuality <= 0.0) all.limit(0)
       else all.filter(!gatePass)
     val norm = if (cfg.minQuality <= 0.0) all else all.filter(gatePass)
-    val hashIdx0 = readOrEmptyRO(spark, hashesPath(cfg),
+    val hashIdx0 = StateStore.readOrEmptyRO(spark, hashesPath(cfg),
       "text_hash STRING, ingest_batch BIGINT").select(col("text_hash"))
     // the same cap-bounded batch-hash pushdown as ingestBatch: both the
     // semi and the anti join only depend on index rows whose hash the
@@ -553,9 +396,9 @@ object CorpusIngest {
     // dup is trivially also a near dup; one reason per doc suffices)
     val fresh = norm.join(hashIdx, Seq("text_hash"), "left_anti")
     val near = TextOps.minhashProbeIndexed(
-      readOrEmptyRO(spark, bandsPath(cfg),
+      StateStore.readOrEmptyRO(spark, bandsPath(cfg),
         "doc_id BIGINT, band INT, sig STRING, ingest_batch BIGINT"),
-      readOrEmptyRO(spark, setsPath(cfg),
+      StateStore.readOrEmptyRO(spark, setsPath(cfg),
         "doc_id BIGINT, s ARRAY<BIGINT>, n BIGINT, ingest_batch BIGINT"),
       fresh, "doc_id", "text", n = 3, k = 12, r = 3,
       threshold = cfg.threshold, pushIdLimit = MaxProbePushIds)
@@ -582,7 +425,7 @@ object CorpusIngest {
    */
   def probePhash(spark: SparkSession, cfg: IngestConfig, batch: DataFrame,
       maxDist: Int = 3): DataFrame = {
-    val idx = readOrEmptyRO(spark, phashPath(cfg), phashDdl)
+    val idx = StateStore.readOrEmptyRO(spark, phashPath(cfg), phashDdl)
     val probeBands = graft.ml.Multimodal.phashBands(
       graft.ml.Multimodal.withPayload(batch, "doc_id", "text"))
     graft.ml.Multimodal.phashProbeIndexed(idx, probeBands, maxDist)
@@ -594,7 +437,7 @@ object CorpusIngest {
    * postings/docstats layer [[ingestBatch]] maintains: score every accepted
    * doc holding at least one query term, return the `topK` best. Read-only
    * and lock-free like [[probe]] (reads through stranded compactions via
-   * [[readOrEmptyRO]]); never touches document text — the postings scan
+   * [[StateStore.readOrEmptyRO]]); never touches document text — the postings scan
    * prunes to the query terms at the parquet filter, the stat rows sum to
    * one broadcast row, so query cost follows df(terms), not the corpus.
    * Output: (doc_id, dl, bm25, rank), rank 1-based by (bm25 desc, doc_id).
@@ -602,9 +445,9 @@ object CorpusIngest {
   def search(spark: SparkSession, cfg: IngestConfig, terms: Seq[String],
       topK: Int = 10, k1: Double = 1.2, b: Double = 0.75,
       allowed: Option[DataFrame] = None): DataFrame = {
-    val postings = readOrEmptyRO(spark, postingsPath(cfg),
+    val postings = StateStore.readOrEmptyRO(spark, postingsPath(cfg),
       "word STRING, doc_id BIGINT, tf BIGINT, dl BIGINT, ingest_batch BIGINT")
-    val stats = readOrEmptyRO(spark, docstatsPath(cfg),
+    val stats = StateStore.readOrEmptyRO(spark, docstatsPath(cfg),
       "n_docs BIGINT, dl_sum BIGINT, ingest_batch BIGINT")
     // metadata-FILTERED serving (the EmbeddingIngest.search `allowed`
     // twin): the allowed-id set semi-joins the scored docs BEFORE the
@@ -649,9 +492,9 @@ object CorpusIngest {
    */
   def frequentTerms(spark: SparkSession, cfg: IngestConfig,
       minShare: Double = 0.01): DataFrame = {
-    val mg = readOrEmptyRO(spark, mgPath(cfg),
+    val mg = StateStore.readOrEmptyRO(spark, mgPath(cfg),
       "word STRING, cnt BIGINT, ingest_batch BIGINT")
-    val total = readOrEmptyRO(spark, docstatsPath(cfg),
+    val total = StateStore.readOrEmptyRO(spark, docstatsPath(cfg),
       "n_docs BIGINT, dl_sum BIGINT, ingest_batch BIGINT")
       .agg(coalesce(sum(col("dl_sum")), lit(0L)).as("n_words"))
     mg.groupBy(col("word")).agg(sum(col("cnt")).as("approx_count"))
@@ -686,9 +529,9 @@ object CorpusIngest {
    */
   def vocabDriftReport(spark: SparkSession, cfg: IngestConfig,
       sinceBatch: Long, minShare: Double = 0.001): DataFrame = {
-    val mg = readOrEmptyRO(spark, mgPath(cfg),
+    val mg = StateStore.readOrEmptyRO(spark, mgPath(cfg),
       "word STRING, cnt BIGINT, ingest_batch BIGINT")
-    val st = readOrEmptyRO(spark, docstatsPath(cfg),
+    val st = StateStore.readOrEmptyRO(spark, docstatsPath(cfg),
       "n_docs BIGINT, dl_sum BIGINT, ingest_batch BIGINT")
     def words(side: DataFrame => DataFrame, cntName: String) =
       side(mg).groupBy(col("word")).agg(sum(col("cnt")).as(cntName))
@@ -727,20 +570,18 @@ object CorpusIngest {
    * rows were compacted converges (its docs reject as exact dups of the
    * compacted index; the checkpoint guarantees committed batches never
    * replay), which is exactly why the contract requires commit-quiescence
-   * only for in-flight writes, not history. Each table swaps atomically
-   * (write-new-then-rename, the [[StateStore]] discipline), so a crash
-   * mid-compaction leaves every table either fully old or fully new,
-   * never doubled.
+   * only for in-flight writes, not history. Each table folds through
+   * [[StateStore.foldBatchPartitions]].
    */
   def compact(spark: SparkSession, cfg: IngestConfig): Unit =
     IngestLock.withLock(spark, cfg.corpusRoot,
         s"compact-${java.util.UUID.randomUUID()}", cfg.lockStaleMs) { lock =>
-    val fs = new org.apache.hadoop.fs.Path(cfg.corpusRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // mark the high-water batch id FIRST (see [[markCompactionHwm]]) so a
-    // pre-compaction replay can never silently duplicate folded rows
-    markCompactionHwm(fs, cfg.corpusRoot,
-      ledgerMaxBatch(spark, ledgerPath(cfg)))
+    val fs = StateStore.fsOf(spark, cfg.corpusRoot)
+    // mark the high-water batch id FIRST (see
+    // [[StateStore.markCompactionHwm]]) so a pre-compaction replay can
+    // never silently duplicate folded rows
+    StateStore.markCompactionHwm(fs, cfg.corpusRoot,
+      StateStore.ledgerMaxBatch(spark, ledgerPath(cfg)))
     // the ledger stays per-batch: its ingest_batch is the AUDIT key, not
     // provenance, and one row per batch never needs compaction. Every
     // fold rewrites a DIFFERENT table, so they run on the bounded pool —
@@ -764,144 +605,26 @@ object CorpusIngest {
     // never changes them.
     def sortedBy(c: String): DataFrame => DataFrame =
       df => df.repartitionByRange(col(c)).sortWithinPartitions(col(c))
-    // MaintStages wraps run INSIDE each unit body, so a unit's line times
-    // its own fold, not its wait in the pool queue; the folds overlap, so
-    // the lines name the heaviest STAGE, not a wall-clock decomposition
-    parallelUnits(
-      Seq(docsPath(cfg) -> identity[DataFrame] _,
+    parallelUnits(Seq(docsPath(cfg) -> identity[DataFrame] _,
         hashesPath(cfg) -> sortedBy("text_hash"),
         bandsPath(cfg) -> sortedBy("sig"),
         setsPath(cfg) -> sortedBy("doc_id"),
         postingsPath(cfg) -> sortedBy("word"),
-        phashPath(cfg) -> sortedBy("v"))
-        .map { case (dir, layout) =>
-          () => MaintStages("compact_text",
-            s"fold_${dir.split('/').last}") {
-            foldBatchPartitions(spark, fs, dir, layout)
-          } } ++ Seq(
-        () => MaintStages("compact_text", "fold_docstats") {
-          foldAggregated(spark, fs, docstatsPath(cfg)) { df =>
-            df.agg(coalesce(sum(col("n_docs")), lit(0L)).as("n_docs"),
-              coalesce(sum(col("dl_sum")), lit(0L)).as("dl_sum"))
-          }
-        },
-        () => MaintStages("compact_text", "fold_mg") {
-          foldAggregated(spark, fs, mgPath(cfg)) { df =>
-            df.groupBy(col("word")).agg(sum(col("cnt")).as("cnt"))
-          }
-        }))
-  }
-
-  /** Fold a per-batch ADDITIVE table into its aggregate under
-    * `ingest_batch = -1`, same atomic-swap + rollback discipline as
-    * [[foldBatchPartitions]]. `agg` must not read `ingest_batch` (the
-    * fold re-stamps it). */
-  private[stream] def foldAggregated(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, dir: String)(
-      agg: DataFrame => DataFrame): Unit = {
-    rollbackIfStranded(fs, dir)
-    val path = new org.apache.hadoop.fs.Path(dir)
-    if (!fs.exists(path)) return
-    val readable =
-      try { spark.read.parquet(dir).schema; true }
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") => false
-      }
-    if (readable) {
-      val folded = agg(spark.read.parquet(dir))
-        .withColumn("ingest_batch", lit(-1L))
-        .localCheckpoint() // sever lineage: the swap deletes what it reads
-      val tmp = new org.apache.hadoop.fs.Path(dir + ".__next")
-      val old = new org.apache.hadoop.fs.Path(dir + ".__old")
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      folded.write.partitionBy("ingest_batch").parquet(tmp.toString)
-      if (fs.exists(old)) fs.delete(old, true)
-      require(fs.rename(path, old), s"fold swap-out failed: $dir")
-      require(fs.rename(tmp, path), s"fold swap-in failed: $dir")
-      fs.delete(old, true)
-    }
-  }
-
-  /** Fold one table's per-batch partitions into `ingest_batch = -1` with an
-    * atomic write-new-then-rename swap — the per-dir step of [[compact]]
-    * and [[EmbeddingIngest.compact]]. A crash mid-swap leaves the table
-    * either fully old (recovered by [[rollbackIfStranded]]) or fully new,
-    * never doubled. */
-  /** Atomically replace `dir` with `df` via the same .__next/.__old swap
-    * discipline as [[foldBatchPartitions]] (and the same
-    * [[rollbackIfStranded]] recovery). The caller guarantees `df` does not
-    * READ `dir` — here the swap deletes what the plan would re-scan. */
-  private[stream] def swapWrite(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String, df: org.apache.spark.sql.DataFrame,
-      partitionCols: Seq[String] = Nil): Unit = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val tmp = new org.apache.hadoop.fs.Path(dir + ".__next")
-    val old = new org.apache.hadoop.fs.Path(dir + ".__old")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    val w = df.write
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(tmp.toString)
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(path))
-      require(fs.rename(path, old), s"swap-out failed: $dir")
-    require(fs.rename(tmp, path), s"swap-in failed: $dir")
-    fs.delete(old, true)
-  }
-
-  private[stream] def foldBatchPartitions(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, dir: String,
-      layout: DataFrame => DataFrame = identity): Unit = {
-    rollbackIfStranded(fs, dir) // a prior compaction may have died mid-swap
-    val path = new org.apache.hadoop.fs.Path(dir)
-    // a table that never wrote (a root created before its layer existed)
-    // has nothing to fold — and reading a missing path would throw a
-    // PATH_NOT_FOUND the schema-inference catch below does not cover
-    if (!fs.exists(path)) return
-    // an empty-batch run can leave a partition-less dir: nothing to fold.
-    // ONLY the schema-inference failure of a partition-less dir means
-    // "skip" (mirroring readOrEmpty) — any other analysis error (corrupt
-    // footer, conflicting schema) must fail the compaction, not silently
-    // no-op it
-    val readable =
-      try { spark.read.parquet(dir).schema; true }
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") => false
-      }
-    if (fs.exists(path) && readable) {
-      // `layout` lets a caller impose a physical order on the folded rows
-      // (e.g. range-sort assignment tables by centroid_id so the serve
-      // faces' pushed IN predicates skip row groups)
-      val compacted = layout(spark.read.parquet(dir))
-        .withColumn("ingest_batch", lit(-1L))
-        .localCheckpoint() // sever lineage: the swap deletes what it reads
-      val tmp = new org.apache.hadoop.fs.Path(dir + ".__next")
-      val old = new org.apache.hadoop.fs.Path(dir + ".__old")
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      compacted.write.partitionBy("ingest_batch").parquet(tmp.toString)
-      if (fs.exists(old)) fs.delete(old, true)
-      require(fs.rename(path, old), s"compact swap-out failed: $dir")
-      require(fs.rename(tmp, path), s"compact swap-in failed: $dir")
-      fs.delete(old, true)
-      // no unpersist: localCheckpoint blocks live outside the
-      // CacheManager (Dataset.unpersist would be a no-op on them) and
-      // are reclaimed by the ContextCleaner once unreferenced
-    }
+        phashPath(cfg) -> sortedBy("v"),
+        docstatsPath(cfg) -> ((df: DataFrame) =>
+          df.agg(coalesce(sum(col("n_docs")), lit(0L)).as("n_docs"),
+            coalesce(sum(col("dl_sum")), lit(0L)).as("dl_sum"))),
+        mgPath(cfg) -> ((df: DataFrame) =>
+          df.groupBy(col("word")).agg(sum(col("cnt")).as("cnt"))))
+      .map { case (dir, layout) =>
+        () => StateStore.foldBatchPartitions(spark, fs, dir, layout) })
   }
 
   /** Start the continuous ingest (AvailableNow: drain pending files, stop —
     * the reference's budgeted-run cadence, ST1). */
   def start(spark: SparkSession, cfg: IngestConfig): StreamingQuery =
-    spark.readStream
-      .schema("doc_id BIGINT, text STRING")
-      .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
-      .parquet(cfg.docsDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", cfg.checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(spark, cfg, batch, batchId): Unit
-      }
-      .start()
+    StateStore.start(spark, StructType.fromDDL("doc_id BIGINT, text STRING"),
+        cfg.docsDir, cfg.maxFilesPerTrigger, cfg.checkpointDir) { (batch, batchId) =>
+      ingestBatch(spark, cfg, batch, batchId): Unit
+    }
 }

@@ -2,7 +2,8 @@ package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.Caching
 import graft.ml.VectorOps
@@ -206,8 +207,8 @@ object EmbeddingIngest {
     * silently-empty candidates. */
   private def loadCoherentIvf(spark: SparkSession,
       cfg: IngestConfig): (DataFrame, DataFrame, Option[Long]) = {
-    val cents = CorpusIngest.readOrEmptyRO(spark, centroidsPath(cfg), centDdl)
-    val assigns = CorpusIngest.readOrEmptyRO(spark, ivfPath(cfg), ivfDdl)
+    val cents = StateStore.readOrEmptyRO(spark, centroidsPath(cfg), centDdl)
+    val assigns = StateStore.readOrEmptyRO(spark, ivfPath(cfg), ivfDdl)
     // the codebook is swapped whole with one lit stamp — ≤1 distinct epoch
     val epochs = cents.select(col("frozen_batch")).distinct()
       .collect().map(_.getLong(0))
@@ -262,7 +263,7 @@ object EmbeddingIngest {
     * bit-identical, just codebook-quadratic; [[compact]] re-persists it). */
   private def hierRouting(spark: SparkSession, cfg: IngestConfig,
       cents: DataFrame, cbEpoch: Option[Long]): (DataFrame, DataFrame) = {
-    val route = CorpusIngest.readOrEmptyRO(spark, metaRoutePath(cfg), routeDdl)
+    val route = StateStore.readOrEmptyRO(spark, metaRoutePath(cfg), routeDdl)
     val stamp = route.select(col("frozen_batch")).limit(1).collect()
     // swap-written whole with one lit stamp — one row IS the table's epoch
     if (stamp.nonEmpty && cbEpoch.contains(stamp.head.getLong(0)))
@@ -276,9 +277,9 @@ object EmbeddingIngest {
   private def writeMetaRoute(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, cfg: IngestConfig,
       codebook: DataFrame, epoch: Long): Unit = {
-    CorpusIngest.rollbackIfStranded(fs, metaRoutePath(cfg))
+    StateStore.rollbackIfStranded(fs, metaRoutePath(cfg))
     val (_, children) = VectorOps.ivfHierRouting(codebook, cfg.metaMod)
-    CorpusIngest.swapWrite(fs, metaRoutePath(cfg),
+    StateStore.swap(fs, metaRoutePath(cfg),
       children.select(col("centroid_id"), col("meta_id"),
         lit(epoch).as("frozen_batch")))
   }
@@ -286,21 +287,18 @@ object EmbeddingIngest {
   /** Ingest one batch; returns the accepted-vector count. Public so batch
     * callers (backfills, tests) can drive it without a streaming query. */
   def ingestBatch(spark: SparkSession, cfg: IngestConfig, batch: DataFrame,
-      batchId: Long): Long = IngestLock.withLock(spark, cfg.corpusRoot,
-      batchLockOwner(cfg, batchId), cfg.lockStaleMs) { lock =>
-    val rootFs = new org.apache.hadoop.fs.Path(cfg.corpusRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq(vecsPath(cfg), bandWidthPath(cfg), ledgerPath(cfg), ivfPath(cfg),
+      batchId: Long): Long = StateStore.lockedBatch(spark, cfg.corpusRoot,
+      batchLockOwner(cfg, batchId), cfg.lockStaleMs,
+      Seq(vecsPath(cfg), bandWidthPath(cfg), ledgerPath(cfg), ivfPath(cfg),
         centroidsPath(cfg), pqPath(cfg), pqCodebooksPath(cfg),
-        metaRoutePath(cfg))
-      .foreach(CorpusIngest.rollbackIfStranded(rootFs, _))
+        metaRoutePath(cfg))) { (lock, rootFs) =>
     val (bandsDir, wBits, wBb) = resolvedBands(spark, cfg)
-    CorpusIngest.rollbackIfStranded(rootFs, bandsDir)
-    CorpusIngest.requireAboveCompactionHwm(rootFs, cfg.corpusRoot, batchId)
+    StateStore.rollbackIfStranded(rootFs, bandsDir)
+    StateStore.requireAboveCompactionHwm(rootFs, cfg.corpusRoot, batchId)
     Caching.scope {
       // a replayed batch must not probe the rows IT wrote before crashing
       def idx(path: String, ddl: String) =
-        CorpusIngest.readOrEmpty(spark, path, ddl)
+        StateStore.readOrEmpty(spark, path, ddl)
           .filter(col("ingest_batch") =!= batchId)
 
       // ONE signature build for the whole batch: the index probe, the
@@ -352,9 +350,9 @@ object EmbeddingIngest {
       // first state write — the dedup above may outlive the stale window
       IngestLock.heartbeat(spark, lock)
       val stamp = lit(batchId).as("ingest_batch")
-      val priorCents = CorpusIngest.readOrEmpty(spark, centroidsPath(cfg), centDdl)
+      val priorCents = StateStore.readOrEmpty(spark, centroidsPath(cfg), centDdl)
         .filter(col("frozen_batch") =!= batchId)
-      val priorPqCb = CorpusIngest.readOrEmpty(spark, pqCodebooksPath(cfg), pqcbDdl)
+      val priorPqCb = StateStore.readOrEmpty(spark, pqCodebooksPath(cfg), pqcbDdl)
         .filter(col("frozen_batch") =!= batchId)
       // the two ledger counts, the two-layer codebook-epoch lookup, and the
       // two index appends are mutually independent (the lookup reads
@@ -419,9 +417,8 @@ object EmbeddingIngest {
            acceptedVecs)
       if (freezing && !codebook.isEmpty) {
         IngestLock.heartbeat(spark, lock)
-        // atomic swap: the codebook plan reads vecs/ and the batch, never
-        // centroids/, so the swap cannot delete its own input
-        CorpusIngest.swapWrite(rootFs, centroidsPath(cfg),
+        // the codebook plan reads vecs/ and the batch, never centroids/
+        StateStore.swap(rootFs, centroidsPath(cfg),
           codebook.withColumn("frozen_batch", lit(batchId)))
       }
       // the shared recluster EPOCH: every assignment row carries the
@@ -524,7 +521,7 @@ object EmbeddingIngest {
           (priorPqCb.select(col("j"), col("code_id"), col("ce")), acceptedVecs)
       if (pqFreezing && !pqCb.isEmpty) {
         IngestLock.heartbeat(spark, lock)
-        CorpusIngest.swapWrite(rootFs, pqCodebooksPath(cfg),
+        StateStore.swap(rootFs, pqCodebooksPath(cfg),
           pqCb.withColumn("frozen_batch", lit(batchId)))
       }
       // the PQ layer carries the same per-generation epoch discipline as
@@ -572,9 +569,9 @@ object EmbeddingIngest {
     val (bandsDir, wBits, wBb) = resolvedBands(spark, cfg)
     val (bb, bv) = VectorOps.srpIndex(batch, "vec_id", "embedding",
       wBits, wBb)
-    val indexBands = CorpusIngest.readOrEmptyRO(spark, bandsDir,
+    val indexBands = StateStore.readOrEmptyRO(spark, bandsDir,
       "vec_id BIGINT, band INT, bv BIGINT, ingest_batch BIGINT")
-    val indexVecs = CorpusIngest.readOrEmptyRO(spark, vecsPath(cfg),
+    val indexVecs = StateStore.readOrEmptyRO(spark, vecsPath(cfg),
       "vec_id BIGINT, embedding ARRAY<FLOAT>, n DOUBLE, ingest_batch BIGINT")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"),
         col("n"))
@@ -663,7 +660,7 @@ object EmbeddingIngest {
     // (epoch, upto_batch) pair and published by atomic rename, so a
     // mixed-stamp table cannot be exposed — and a limit(1) keeps the
     // check O(1), not an O(corpus) stamp scan per query
-    val lists = CorpusIngest.readOrEmptyRO(spark, ivfListsPath(cfg), listsDdl)
+    val lists = StateStore.readOrEmptyRO(spark, ivfListsPath(cfg), listsDdl)
     val stampRow = lists.select(col("epoch"), col("upto_batch"))
       .limit(1).collect()
     val listsUsable = stampRow.nonEmpty &&
@@ -699,7 +696,7 @@ object EmbeddingIngest {
     // partition is -1), served through the split layout
     val deltaAssigns = allowedOnly(pushed(
       rawAssigns.filter(col("ingest_batch").cast("long") > lit(upto))))
-    val deltaVecs = CorpusIngest.readOrEmptyRO(spark, vecsPath(cfg), vecsDdl)
+    val deltaVecs = StateStore.readOrEmptyRO(spark, vecsPath(cfg), vecsDdl)
       .filter(col("ingest_batch").cast("long") > lit(upto))
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"),
         col("n"))
@@ -756,7 +753,7 @@ object EmbeddingIngest {
       if (bucketsCoherent && canPush)
         codes.filter(col("centroid_id").isInCollection(pushIds))
       else codes
-    val vecs = CorpusIngest.readOrEmptyRO(spark, vecsPath(cfg), vecsDdl)
+    val vecs = StateStore.readOrEmptyRO(spark, vecsPath(cfg), vecsDdl)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"),
         col("n"))
     VectorOps.ivfPqSearchIndexed(cents, assigns,
@@ -773,8 +770,8 @@ object EmbeddingIngest {
     * ADC-scoring codes against codewords that no longer exist. */
   private def loadCoherentPq(spark: SparkSession,
       cfg: IngestConfig): (DataFrame, DataFrame) = {
-    val cbs = CorpusIngest.readOrEmptyRO(spark, pqCodebooksPath(cfg), pqcbDdl)
-    val codes = CorpusIngest.readOrEmptyRO(spark, pqPath(cfg), pqDdl)
+    val cbs = StateStore.readOrEmptyRO(spark, pqCodebooksPath(cfg), pqcbDdl)
+    val codes = StateStore.readOrEmptyRO(spark, pqPath(cfg), pqDdl)
     val epochs = cbs.select(col("frozen_batch")).distinct()
       .collect().map(_.getLong(0))
     require(epochs.length <= 1,
@@ -793,7 +790,7 @@ object EmbeddingIngest {
     * backfills the codes. Takes no lock, writes nothing. */
   def pqDriftReport(spark: SparkSession, cfg: IngestConfig): DataFrame = {
     val (cbs, codes) = loadCoherentPq(spark, cfg)
-    val vecs = CorpusIngest.readOrEmptyRO(spark, vecsPath(cfg),
+    val vecs = StateStore.readOrEmptyRO(spark, vecsPath(cfg),
       "vec_id BIGINT, embedding ARRAY<FLOAT>, n DOUBLE, ingest_batch BIGINT")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     VectorOps.pqReconstructionError(
@@ -820,7 +817,7 @@ object EmbeddingIngest {
   def driftReport(spark: SparkSession, cfg: IngestConfig): DataFrame = {
     val (cents, rawAssigns, _) = loadCoherentIvf(spark, cfg)
     val assigns = rawAssigns.select(col("vec_id"), col("centroid_id"))
-    val vecs = CorpusIngest.readOrEmptyRO(spark, vecsPath(cfg),
+    val vecs = StateStore.readOrEmptyRO(spark, vecsPath(cfg),
       "vec_id BIGINT, embedding ARRAY<FLOAT>, n DOUBLE, ingest_batch BIGINT")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"),
         col("n"))
@@ -840,10 +837,8 @@ object EmbeddingIngest {
    *
    * Discipline matches [[compact]]: corpus [[IngestLock]] held throughout
    * (a concurrent ingest refuses instead of appending against a codebook
-   * mid-swap); both writes are `.__next`/`.__old` atomic swaps with
-   * [[CorpusIngest.rollbackIfStranded]] recovery; inputs are
-   * `localCheckpoint`ed before the swap deletes what the plans read. A
-   * crash between the two swaps leaves new centroids with old assignments —
+   * mid-swap); every write is a [[StateStore.swap]] of `localCheckpoint`ed
+   * inputs. A crash between the two swaps leaves new centroids with old assignments —
    * an EPOCH TEAR that every read face and ingest append now detects and
    * refuses loudly ([[requireEpochCoherent]]: centroids and assignments
    * carry a shared per-generation epoch stamp); re-running recluster (the
@@ -855,18 +850,15 @@ object EmbeddingIngest {
   def recluster(spark: SparkSession, cfg: IngestConfig): Unit =
     IngestLock.withLock(spark, cfg.corpusRoot,
         s"recluster-${java.util.UUID.randomUUID()}", cfg.lockStaleMs) { lock =>
-      val fs = new org.apache.hadoop.fs.Path(cfg.corpusRoot)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = StateStore.fsOf(spark, cfg.corpusRoot)
       Seq(vecsPath(cfg), ivfPath(cfg), centroidsPath(cfg), pqPath(cfg),
           pqCodebooksPath(cfg))
-        .foreach(CorpusIngest.rollbackIfStranded(fs, _))
-      val vecs = MaintStages("recluster", "read_checkpoint_vecs") {
-        CorpusIngest.readOrEmpty(spark, vecsPath(cfg),
+        .foreach(StateStore.rollbackIfStranded(fs, _))
+      val vecs = StateStore.readOrEmpty(spark, vecsPath(cfg),
           "vec_id BIGINT, embedding ARRAY<FLOAT>, n DOUBLE, ingest_batch BIGINT")
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("e"),
-            col("n"))
-          .localCheckpoint()
-      }
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("e"),
+          col("n"))
+        .localCheckpoint()
       // ONE count over the materialized checkpoint answers the emptiness
       // guard AND the Lloyd train-sample stride (r16: the separate isEmpty
       // job plus kmeansTrainSample's own corpus count were two driver
@@ -887,15 +879,15 @@ object EmbeddingIngest {
         // the ledger max is read ONCE and serves both the hwm fence and the
         // serving lists' upto stamp below — the lock is held throughout, so
         // no batch can land in between and the two reads were always equal
-        val ledgerMax = CorpusIngest.ledgerMaxBatch(spark, ledgerPath(cfg))
-        CorpusIngest.markCompactionHwm(fs, cfg.corpusRoot, ledgerMax)
+        val ledgerMax = StateStore.ledgerMaxBatch(spark, ledgerPath(cfg))
+        StateStore.markCompactionHwm(fs, cfg.corpusRoot, ledgerMax)
         // a fresh epoch per codebook generation, strictly below every prior
         // stamp (first recluster = ReclusterStamp, then −3, −4, …) — BOTH
         // quantization layers' prior stamps resolved in one action over the
         // two codebook slivers (was one agg job per layer)
-        val priorRows = CorpusIngest.readOrEmpty(spark, centroidsPath(cfg),
+        val priorRows = StateStore.readOrEmpty(spark, centroidsPath(cfg),
             centDdl).select(lit(0).as("l"), col("frozen_batch"))
-          .unionByName(CorpusIngest.readOrEmpty(spark, pqCodebooksPath(cfg),
+          .unionByName(StateStore.readOrEmpty(spark, pqCodebooksPath(cfg),
             pqcbDdl).select(lit(1).as("l"), col("frozen_batch")))
           .filter(col("frozen_batch").isNotNull)
           .groupBy(col("l")).agg(min(col("frozen_batch")).as("m")).collect()
@@ -918,19 +910,16 @@ object EmbeddingIngest {
         // is safe even when emptied buckets shrink the result below the
         // threshold.
         val seeds = vecs.filter(pmod(col("vec_id"), lit(cfg.centroidMod)) === 0)
-        val codebook = MaintStages("recluster", "kmeans_retrain") {
+        val codebook =
           (if (hierActive(cfg, seeds))
               VectorOps.kmeansCentroidsHier(vecs, cfg.centroidMod, cfg.metaMod,
                 vCount = nVecs)
             else VectorOps.kmeansCentroids(vecs, cfg.centroidMod,
               vCount = nVecs))
             .localCheckpoint()
-        }
         IngestLock.heartbeat(spark, lock)
-        MaintStages("recluster", "swap_centroids") {
-          CorpusIngest.swapWrite(fs, centroidsPath(cfg),
-            codebook.withColumn("frozen_batch", lit(epoch)))
-        }
+        StateStore.swap(fs, centroidsPath(cfg),
+          codebook.withColumn("frozen_batch", lit(epoch)))
         // retrained-generation routing, persisted right after the codebook
         // it routes (same epoch stamp); assignment then runs in the
         // generation's mode — meta-first above the threshold, flat below.
@@ -941,20 +930,18 @@ object EmbeddingIngest {
           if (!hierActive(cfg, codebook)) None
           else {
             IngestLock.heartbeat(spark, lock)
-            MaintStages("recluster", "meta_route") {
-              // derive the routing ONCE and both persist and return it
-              // (r16: writeMetaRoute re-derived internally — two eager
-              // emptiness guards and two routing aggregations per
-              // recluster for one table)
-              val frames = VectorOps.ivfHierRouting(codebook, cfg.metaMod)
-              CorpusIngest.rollbackIfStranded(fs, metaRoutePath(cfg))
-              CorpusIngest.swapWrite(fs, metaRoutePath(cfg),
-                frames._2.select(col("centroid_id"), col("meta_id"),
-                  lit(epoch).as("frozen_batch")))
-              Some(frames)
-            }
+            // derive the routing ONCE and both persist and return it
+            // (r16: writeMetaRoute re-derived internally — two eager
+            // emptiness guards and two routing aggregations per
+            // recluster for one table)
+            val frames = VectorOps.ivfHierRouting(codebook, cfg.metaMod)
+            StateStore.rollbackIfStranded(fs, metaRoutePath(cfg))
+            StateStore.swap(fs, metaRoutePath(cfg),
+              frames._2.select(col("centroid_id"), col("meta_id"),
+                lit(epoch).as("frozen_batch")))
+            Some(frames)
           }
-        val assigns = MaintStages("recluster", "assign_sweep") {
+        val assigns =
           (hierFrames match {
               case Some((m, ch)) => VectorOps.ivfAssignHierRouted(m, ch, vecs)
               case None => VectorOps.ivfAssign(codebook, vecs)
@@ -963,7 +950,6 @@ object EmbeddingIngest {
             .withColumn("epoch", lit(epoch))
             .withColumn("ingest_batch", lit(-1L))
             .localCheckpoint()
-        }
         // the assignment swap, the serving-lists rebuild, and the whole PQ
         // half are mutually independent once `assigns` is materialized:
         // they write disjoint directories (ivf / ivflists / pqcb+pq) and
@@ -978,33 +964,25 @@ object EmbeddingIngest {
         // rewrites everything deterministically.
         IngestLock.heartbeat(spark, lock)
         CorpusIngest.parallelUnits(Seq(
-          () => MaintStages("recluster", "swap_ivf") {
-            CorpusIngest.swapWrite(fs, ivfPath(cfg), assigns,
-              partitionCols = Seq("ingest_batch"))
-          },
+          () => StateStore.swap(fs, ivfPath(cfg), assigns,
+            partitionCols = Seq("ingest_batch")),
           // rebuild the serving lists against the NEW codebook generation —
           // until this write lands, readers see stale-epoch lists and fall
           // back to the (coherent) split layout; a crash here leaves
           // exactly that state, and re-running recluster is the repair
-          () => MaintStages("recluster", "serving_lists_rewrite") {
-            writeIvfLists(spark, fs, cfg,
-              CorpusIngest.readOrEmpty(spark, vecsPath(cfg), vecsDdl),
-              assigns, epoch, ledgerMax)
-          },
+          () => writeIvfLists(spark, fs, cfg,
+            StateStore.readOrEmpty(spark, vecsPath(cfg), vecsDdl),
+            assigns, epoch, ledgerMax),
           // ---- PQ half of the drift repair (VERDICT r9 item 4): retrain
           // the per-subspace codebooks on the CURRENT corpus and backfill
           // every code, under the same two-swap + epoch discipline.
           () => {
-            val pqCb = MaintStages("recluster", "pq_codebook_retrain") {
-              VectorOps.pqCodebooks(
-                  vecs.select(col("vec_id"), col("e").as("embedding")),
-                  m = cfg.pqM, codebookMod = cfg.pqCodebookMod)
-                .localCheckpoint()
-            }
-            MaintStages("recluster", "swap_pqcb") {
-              CorpusIngest.swapWrite(fs, pqCodebooksPath(cfg),
-                pqCb.withColumn("frozen_batch", lit(pqEpoch)))
-            }
+            val pqCb = VectorOps.pqCodebooks(
+                vecs.select(col("vec_id"), col("e").as("embedding")),
+                m = cfg.pqM, codebookMod = cfg.pqCodebookMod)
+              .localCheckpoint()
+            StateStore.swap(fs, pqCodebooksPath(cfg),
+              pqCb.withColumn("frozen_batch", lit(pqEpoch)))
             // materialize the UNSORTED codes once, BEFORE the range
             // layout: repartitionByRange's sampling pass re-executes its
             // child, so the 25M-pair ADC encode otherwise runs twice (the
@@ -1012,8 +990,7 @@ object EmbeddingIngest {
             // double execution too). The checkpointed rows are narrow
             // (ints per vector), and the range+sort+write below reads them
             // from memory for both the sample and the shuffle.
-            val codes0 = MaintStages("recluster", "pq_encode") {
-              VectorOps.pqEncodeWith(pqCb,
+            val codes0 = VectorOps.pqEncodeWith(pqCb,
                 vecs.select(col("vec_id"), col("e")), cfg.pqM)
               .select(col("vec_id"), col("j"), col("code_id"))
               .withColumn("epoch", lit(pqEpoch))
@@ -1025,14 +1002,11 @@ object EmbeddingIngest {
               .withColumn("ivf_epoch", lit(epoch))
               .withColumn("ingest_batch", lit(-1L))
               .localCheckpoint()
-            }
             val codes = codes0
               .repartitionByRange(col("centroid_id"))
               .sortWithinPartitions(col("centroid_id"))
-            MaintStages("recluster", "swap_pq") {
-              CorpusIngest.swapWrite(fs, pqPath(cfg), codes,
-                partitionCols = Seq("ingest_batch"))
-            }
+            StateStore.swap(fs, pqPath(cfg), codes,
+              partitionCols = Seq("ingest_batch"))
           }))
       }
     }
@@ -1071,33 +1045,32 @@ object EmbeddingIngest {
   def reband(spark: SparkSession, cfg: IngestConfig, bits: Int,
       bandBits: Int): Unit = IngestLock.withLock(spark, cfg.corpusRoot,
       s"reband-${java.util.UUID.randomUUID()}", cfg.lockStaleMs) { lock =>
-    val fs = new org.apache.hadoop.fs.Path(cfg.corpusRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StateStore.fsOf(spark, cfg.corpusRoot)
     Seq(vecsPath(cfg), bandWidthPath(cfg), ledgerPath(cfg))
-      .foreach(CorpusIngest.rollbackIfStranded(fs, _))
+      .foreach(StateStore.rollbackIfStranded(fs, _))
     val (curDir, curBits, curBb) = resolvedBands(spark, cfg)
     CorpusIngest.sweepSupersededSrpBands(spark, fs, cfg.corpusRoot, curDir)
     // no-op at the already-committed width (ADVICE r12): "re-running
-    // reband completes" must NOT swapWrite the LIVE serving directory —
+    // reband completes" must NOT swap the LIVE serving directory —
     // between its swap-out and swap-in renames a lock-free probe that
     // resolved the marker would read an absent dir as an EMPTY index.
     // The marker already points at (bits, bandBits); the only remaining
     // work — sweeping dirs a prior reband superseded — just ran above.
     if (curBits != bits || curBb != bandBits) {
-      CorpusIngest.markCompactionHwm(fs, cfg.corpusRoot,
-        CorpusIngest.ledgerMaxBatch(spark, ledgerPath(cfg)))
-      val vecs = CorpusIngest.readOrEmpty(spark, vecsPath(cfg), vecsDdl)
+      StateStore.markCompactionHwm(fs, cfg.corpusRoot,
+        StateStore.ledgerMaxBatch(spark, ledgerPath(cfg)))
+      val vecs = StateStore.readOrEmpty(spark, vecsPath(cfg), vecsDdl)
         .select(col("vec_id"), col("embedding"))
       val (nb, _) = VectorOps.srpIndex(vecs, bits = bits, bandBits = bandBits)
       IngestLock.heartbeat(spark, lock)
-      CorpusIngest.swapWrite(fs, s"${cfg.corpusRoot}/bands_w${bits}x$bandBits",
+      StateStore.swap(fs, s"${cfg.corpusRoot}/bands_w${bits}x$bandBits",
         nb.select(col("vec_id"), col("band"), col("bv"),
           lit(-1L).as("ingest_batch")),
         partitionCols = Seq("ingest_batch"))
       IngestLock.heartbeat(spark, lock)
       // the commit point: from here every face signs and reads at the
       // new width
-      CorpusIngest.swapWrite(fs, bandWidthPath(cfg),
+      StateStore.swap(fs, bandWidthPath(cfg),
         spark.createDataFrame(Seq((bits, bandBits))).toDF("bits", "band_bits"))
     }
   }
@@ -1111,13 +1084,12 @@ object EmbeddingIngest {
     * nothing runs; the same-width no-op in reband makes double-fires
     * harmless. Returns the width rebanded to, None when healthy. */
   def rebandIfNeeded(spark: SparkSession, cfg: IngestConfig): Option[(Int, Int)] = {
-    val fs = new org.apache.hadoop.fs.Path(cfg.corpusRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    CorpusIngest.rollbackIfStranded(fs, bandWidthPath(cfg))
+    val fs = StateStore.fsOf(spark, cfg.corpusRoot)
+    StateStore.rollbackIfStranded(fs, bandWidthPath(cfg))
     val (dir, bits, bb) = resolvedBands(spark, cfg)
-    CorpusIngest.rollbackIfStranded(fs, dir)
+    StateStore.rollbackIfStranded(fs, dir)
     val plan = VectorOps.srpRebandPlan(
-      VectorOps.srpBandHealth(CorpusIngest.readOrEmpty(spark, dir,
+      VectorOps.srpBandHealth(StateStore.readOrEmpty(spark, dir,
         "vec_id BIGINT, band INT, bv BIGINT, ingest_batch BIGINT")),
       bits, bb)
     plan.foreach { case (nb, nbb) => reband(spark, cfg, nb, nbb) }
@@ -1149,12 +1121,12 @@ object EmbeddingIngest {
     * codebook generation the lists serve (a mismatch at read time means a
     * recluster superseded them — ignored, split-layout fallback);
     * `upto` is the highest ingest batch the lists subsume (later appends
-    * are served as the partition-pruned delta). Atomic-swap write; the
-    * input frames must not read the lists dir. */
+    * are served as the partition-pruned delta). The input frames must not
+    * read the lists dir ([[StateStore.swap]]). */
   private[graft] def writeIvfLists(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, cfg: IngestConfig,
       vecs: DataFrame, assigns: DataFrame, epoch: Long, upto: Long): Unit = {
-    CorpusIngest.rollbackIfStranded(fs, ivfListsPath(cfg))
+    StateStore.rollbackIfStranded(fs, ivfListsPath(cfg))
     val rows = vecs.select(col("vec_id"), col("embedding"), col("n"))
       .join(assigns.select(col("vec_id"), col("centroid_id")), Seq("vec_id"))
       .select(col("vec_id"), col("embedding"), col("n"), col("centroid_id"),
@@ -1163,13 +1135,13 @@ object EmbeddingIngest {
           .as("bucket_p"))
       .repartition(col("bucket_p"))
       .sortWithinPartitions(col("bucket_p"), col("centroid_id"))
-    CorpusIngest.swapWrite(fs, ivfListsPath(cfg), rows,
+    StateStore.swap(fs, ivfListsPath(cfg), rows,
       partitionCols = Seq("bucket_p"))
   }
 
   /** Fold the accumulated per-batch partitions into a single
-    * `ingest_batch = -1` partition — same contract, locking, and
-    * atomic-swap discipline as [[CorpusIngest.compact]] (the ledger keeps
+    * `ingest_batch = -1` partition — same contract and locking as
+    * [[CorpusIngest.compact]] (the ledger keeps
     * its per-batch audit rows) — then rebuild the serving inverted lists
     * over the folded state ([[writeIvfLists]]): compaction is exactly the
     * maintenance point where the O(corpus) re-layout is paid, so the serve
@@ -1178,25 +1150,24 @@ object EmbeddingIngest {
   def compact(spark: SparkSession, cfg: IngestConfig): Unit =
     IngestLock.withLock(spark, cfg.corpusRoot,
         s"compact-${java.util.UUID.randomUUID()}", cfg.lockStaleMs) { lock =>
-      val fs = new org.apache.hadoop.fs.Path(cfg.corpusRoot)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // a reband that died inside the marker swapWrite window leaves the
+      val fs = StateStore.fsOf(spark, cfg.corpusRoot)
+      // a reband that died inside the marker swap window leaves the
       // width marker stranded at `.__old` — roll it back BEFORE the first
       // resolvedBands call, or this fold resolves (and folds) the
       // superseded pre-reband directory while the live rebanded one goes
       // unfolded (ADVICE r12); same ordering as ingestBatch/reband
-      CorpusIngest.rollbackIfStranded(fs, bandWidthPath(cfg))
-      CorpusIngest.rollbackIfStranded(fs, resolvedBands(spark, cfg)._1)
-      // high-water mark before the fold (see CorpusIngest.markCompactionHwm)
-      val hwm = CorpusIngest.ledgerMaxBatch(spark, ledgerPath(cfg))
-      CorpusIngest.markCompactionHwm(fs, cfg.corpusRoot, hwm)
+      StateStore.rollbackIfStranded(fs, bandWidthPath(cfg))
+      StateStore.rollbackIfStranded(fs, resolvedBands(spark, cfg)._1)
+      // high-water mark before the fold (see StateStore.markCompactionHwm)
+      val hwm = StateStore.ledgerMaxBatch(spark, ledgerPath(cfg))
+      StateStore.markCompactionHwm(fs, cfg.corpusRoot, hwm)
       // invalidate the serving lists BEFORE the folds: once a batch's
       // partition folds into -1 the old lists' `upto_batch` delta predicate
       // can no longer see it, so a crash between fold and rebuild would
       // leave lists that silently under-serve — absent lists merely fall
       // back to the (coherent) split layout, and re-running compact is the
       // repair, the standing contract of every died maintenance pass
-      CorpusIngest.rollbackIfStranded(fs, ivfListsPath(cfg))
+      StateStore.rollbackIfStranded(fs, ivfListsPath(cfg))
       // ATOMIC removal (ADVICE r10): rename the lists dir to a tombstone in
       // one fs.rename, then delete the tombstone. search() is lock-free —
       // a plain recursive delete has a window where a concurrent reader
@@ -1213,32 +1184,32 @@ object EmbeddingIngest {
       CorpusIngest.parallelUnits(Seq(
         // vec_id-sorted: the SRP probe's candidate-id IN pushdown prunes
         // the wide embedding column to the touched row groups
-        () => CorpusIngest.foldBatchPartitions(spark, fs, vecsPath(cfg),
+        () => StateStore.foldBatchPartitions(spark, fs, vecsPath(cfg),
           _.repartitionByRange(col("vec_id"))
             .sortWithinPartitions(col("vec_id"))),
-        () => CorpusIngest.foldBatchPartitions(spark, fs,
+        () => StateStore.foldBatchPartitions(spark, fs,
           resolvedBands(spark, cfg)._1),
-        () => CorpusIngest.foldBatchPartitions(spark, fs, ivfPath(cfg),
+        () => StateStore.foldBatchPartitions(spark, fs, ivfPath(cfg),
           _.repartitionByRange(col("centroid_id"))
             .sortWithinPartitions(col("centroid_id")))))
-      val cents = CorpusIngest.readOrEmpty(spark, centroidsPath(cfg), centDdl)
+      val cents = StateStore.readOrEmpty(spark, centroidsPath(cfg), centDdl)
       val cbEpoch = cents.agg(max(col("frozen_batch"))).first
       // fold the PQ codes RE-ANNOTATED against the post-fold assignments
       // and bucket-clustered — the maintenance point that repairs any
       // stale/null bucket columns (pre-freeze appends) so searchPq's
       // pruned scan is coherent again
       IngestLock.heartbeat(spark, lock)
-      CorpusIngest.foldBatchPartitions(spark, fs, pqPath(cfg), { df =>
+      StateStore.foldBatchPartitions(spark, fs, pqPath(cfg), { df =>
         if (cbEpoch.isNullAt(0)) df
         else df.drop("centroid_id", "ivf_epoch")
-          .join(CorpusIngest.readOrEmpty(spark, ivfPath(cfg), ivfDdl)
+          .join(StateStore.readOrEmpty(spark, ivfPath(cfg), ivfDdl)
             .select(col("vec_id"), col("centroid_id")), Seq("vec_id"), "left")
           .withColumn("ivf_epoch", lit(cbEpoch.getLong(0)))
           .repartitionByRange(col("centroid_id"))
           .sortWithinPartitions(col("centroid_id"))
       })
       if (!cbEpoch.isNullAt(0)) {
-        val assigns = CorpusIngest.readOrEmpty(spark, ivfPath(cfg), ivfDdl)
+        val assigns = StateStore.readOrEmpty(spark, ivfPath(cfg), ivfDdl)
         requireEpochCoherent(cbEpoch.getLong(0),
           assigns.select(col("epoch")), "compact-lists")
         // heal the two-level routing table at the maintenance point (a
@@ -1249,7 +1220,7 @@ object EmbeddingIngest {
         // what hierRouting's fallback was already serving
         val centsOnly = cents.select(col("centroid_id"), col("ce"), col("cn"))
         if (hierActive(cfg, centsOnly)) {
-          val stamp = CorpusIngest.readOrEmpty(spark, metaRoutePath(cfg),
+          val stamp = StateStore.readOrEmpty(spark, metaRoutePath(cfg),
             routeDdl).select(col("frozen_batch")).limit(1).collect()
           if (!(stamp.nonEmpty && stamp.head.getLong(0) == cbEpoch.getLong(0))) {
             IngestLock.heartbeat(spark, lock)
@@ -1258,22 +1229,15 @@ object EmbeddingIngest {
         }
         IngestLock.heartbeat(spark, lock)
         writeIvfLists(spark, fs, cfg,
-          CorpusIngest.readOrEmpty(spark, vecsPath(cfg), vecsDdl),
+          StateStore.readOrEmpty(spark, vecsPath(cfg), vecsDdl),
           assigns, cbEpoch.getLong(0), hwm)
       }
     }
 
   /** Start the continuous ingest (AvailableNow: drain pending files, stop). */
   def start(spark: SparkSession, cfg: IngestConfig): StreamingQuery =
-    spark.readStream
-      .schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-      .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
-      .parquet(cfg.vecsDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", cfg.checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(spark, cfg, batch, batchId): Unit
-      }
-      .start()
+    StateStore.start(spark, StructType.fromDDL("vec_id BIGINT, embedding ARRAY<FLOAT>"),
+        cfg.vecsDir, cfg.maxFilesPerTrigger, cfg.checkpointDir) { (batch, batchId) =>
+      ingestBatch(spark, cfg, batch, batchId): Unit
+    }
 }

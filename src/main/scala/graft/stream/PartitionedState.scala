@@ -54,11 +54,14 @@ object PartitionedState {
     df.withColumn(PartCol, monthOf(col(dateCol)))
       .write.partitionBy(PartCol).mode("overwrite").parquet(dir)
 
-  /** Read only the given months of state (partition-pruned scan). */
+  /** Read only the given months of state (partition-pruned scan). A state
+    * stranded at `.__old` by a died [[StateStore.replace]] (the ST8
+    * compaction) is rolled back first. */
   def readMonths(spark: SparkSession, dir: String, schema: StructType,
       months: Seq[String]): DataFrame = {
     val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StateStore.fsOf(spark, dir)
+    StateStore.rollbackIfStranded(fs, dir)
     if (!fs.exists(p))
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     else

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.cdc.{Cdc, CdcFixtures}
 import graft.model.Schemas
-import graft.stream.StateStore
+import graft.stream.{ChangeStream, PartitionedState, StateStore}
 
 class MaintainSpec extends SparkSpec {
   import spark.implicits._
@@ -79,6 +79,52 @@ class MaintainSpec extends SparkSpec {
     val left = StateStore.read(spark, dir, h.schema)
       .select("id", "name").as[(Long, String)].collect().toSet
     assert(left == Set((1L, "v1"), (2L, "w0")))
+  }
+
+  test("ST8: compactState keeps a month-partitioned state month-partitioned") {
+    val t = "matomo_log_visit"
+    val meta = Schemas.tableMeta(t)
+    val schema = ChangeStream.stateSchema(t)
+    val cfg = ChangeStream.StreamConfig(changeLogDir = tmp(),
+      checkpointDir = tmp(), stateDir = tmp(), ledgerDir = tmp())
+    val dir = s"${cfg.stateDir}/$t"
+    def visit(id: Long, country: String, first: String) =
+      s"""{"idvisit":$id,"idsite":1,"location_country":"$country",""" +
+        s""""visit_first_action_time":"$first"}"""
+    // one change batch of (op, log_pos, before, after), applied
+    // partition-pruned exactly as ChangeStream applies the table
+    def applyBatch(rows: (String, Long, String, String)*): Unit = {
+      val events = rows.toDF("op", "log_pos", "before", "after")
+        .select(col("op"), lit("db").as("schema"), lit(t).as("table"),
+          lit("2024-02-06 10:00:00").cast("timestamp").as("ts"),
+          lit("mysql-bin.000001").as("log_file"), col("log_pos"),
+          lit(0).as("row_index"), col("before"), col("after"))
+      PartitionedState.applyVersioned(spark, dir, schema,
+        Cdc.typedChanges(events, t), meta.keyCols, meta.partitionCol.get): Unit
+    }
+    def physical() = ChangeStream.readState(spark, cfg, t)
+      .select("idvisit", "location_country").as[(Long, String)].collect().toSet
+    val (jan, feb) = ("2024-01-05T09:00:00", "2024-02-05T09:00:00")
+    applyBatch(("INSERT", 100L, null, visit(1, "de", jan)),
+      ("INSERT", 110L, null, visit(2, "us", feb)))
+    applyBatch(("UPDATE", 200L, visit(1, "de", jan), visit(1, "fr", jan)))
+    assert(physical() == Set((1L, "de"), (1L, "fr"), (2L, "us")))
+
+    val (before, after) = Maintain.compactState(spark, dir, schema, meta.keyCols)
+    assert(before == 3 && after == 2)
+    assert(new java.io.File(dir).listFiles().map(_.getName)
+      .filter(_.startsWith(s"${PartitionedState.PartCol}=")).toSet ==
+      Set("yyyymm=202401", "yyyymm=202402"))
+    // a compaction swap that died between its renames strands the state at
+    // `.__old`; the next batch's pruned apply rolls it back and reads the
+    // compacted months, and the stream's state read sees the deduplicated
+    // rows plus that batch
+    assert(new java.io.File(dir).renameTo(new java.io.File(dir + ".__old")))
+    applyBatch(("UPDATE", 300L, visit(2, "us", feb), visit(2, "ca", feb)))
+    assert(physical() == Set((1L, "fr"), (2L, "us"), (2L, "ca")))
+    assert(Cdc.latestWins(ChangeStream.readState(spark, cfg, t), meta.keyCols)
+      .select("idvisit", "location_country").as[(Long, String)].collect().toSet ==
+      Set((1L, "fr"), (2L, "ca")))
   }
 
   test("state mutators refuse while a batch holds the state-root lock (ST4)") {

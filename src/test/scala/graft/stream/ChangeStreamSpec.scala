@@ -128,6 +128,25 @@ class ChangeStreamSpec extends SparkSpec {
     assert(visitLatest(cfg) == visit0)
   }
 
+  test("a flat table stranded at .__old by a died swap rolls back on the next cycle") {
+    val logDir = tmpDir()
+    writeLog(logDir, "f1", batch1)
+    val cfg = freshCfg(logDir)
+    ChangeStream.run(spark, cfg).awaitTermination()
+    assert(siteState(cfg) == Set((1L, "alpha"), (2L, "beta")))
+    // a state swap that died between its two renames: the live dir is gone
+    // and its rows sit at `<dir>.__old`
+    val dir = new java.io.File(s"${cfg.stateDir}/matomo_site")
+    val old = new java.io.File(dir.getPath + ".__old")
+    assert(dir.renameTo(old))
+    writeLog(logDir, "f2", Seq(env("INSERT", "matomo_site", 700, null,
+      """{"idsite":3,"name":"gamma","main_url":"http://c"}""")))
+    ChangeStream.run(spark, cfg).awaitTermination()
+    // the rolled-back rows plus the new batch — not empty-plus-batch
+    assert(!old.exists())
+    assert(siteState(cfg) == Set((1L, "alpha"), (2L, "beta"), (3L, "gamma")))
+  }
+
   test("streamed result equals one-shot batch apply (stream/batch equivalence)") {
     val logDir = tmpDir()
     writeLog(logDir, "f1", batch1)

@@ -119,7 +119,7 @@ class ClusterRegistrySpec extends SparkSpec {
     val storedAfter = spark.read.parquet(s"${cfg.root}/labels")
       .select("doc_id", "label").as[(Long, Long)].collect().toMap
     assert(storedAfter == before)
-    assert(CorpusIngest.readOrEmptyRO(spark, s"${cfg.root}/merges",
+    assert(StateStore.readOrEmptyRO(spark, s"${cfg.root}/merges",
       "child BIGINT, parent BIGINT, ingest_batch BIGINT").count() == 0L)
     // the folded signature index still serves later batches: a re-arrival
     // of the X base text lands in cluster 1 (xDoc(3) would NOT — two
@@ -285,7 +285,7 @@ class ClusterRegistrySpec extends SparkSpec {
     // mix grows clusters incrementally — arrivals link straight to the
     // existing root, so the log can legitimately be EMPTY; bridges are
     // pinned by the 3-batch fixture above)
-    val nMerges = CorpusIngest.readOrEmptyRO(spark, s"${cfg.root}/merges",
+    val nMerges = StateStore.readOrEmptyRO(spark, s"${cfg.root}/merges",
       "child BIGINT, parent BIGINT, ingest_batch BIGINT").count()
     assert(nMerges < all.size.toLong, s"merge log $nMerges rows")
   }
@@ -393,7 +393,7 @@ class ClusterRegistrySpec extends SparkSpec {
       50L -> 50L, 70L -> 70L))
     writeLabels(1L, Seq(21L -> 21L, 41L -> 41L, 51L -> 51L))
     writeLedger(0L); writeLedger(1L)
-    CorpusIngest.markCompactionHwm(fs, cfg.root, 1L)
+    StateStore.markCompactionHwm(fs, cfg.root, 1L)
     UnionFindTables.compactLabels(spark, fs, cfg.root)
     assert(summaryStats(cfg) == Seq(8L, 9L, 2L, 1L))
 
@@ -419,7 +419,7 @@ class ClusterRegistrySpec extends SparkSpec {
 
     // a later compact that died right after marking the hwm: the summary
     // stamp no longer matches — the serve must FALL BACK, not go stale
-    CorpusIngest.markCompactionHwm(fs, cfg.root, 4L)
+    StateStore.markCompactionHwm(fs, cfg.root, 4L)
     assert(summaryStats(cfg) == s1, "stale-stamp fallback diverged")
     assert(summaryWeights(cfg) == w1)
 

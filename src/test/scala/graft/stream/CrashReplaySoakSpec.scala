@@ -226,7 +226,7 @@ class CrashReplaySoakSpec extends SparkSpec {
       // --- killed compact on the embedding ingest root: the hwm marker ---
       // landed, the fold did not. Pre-hwm replays refuse loudly; the rows
       // are intact either way; re-running compact is the repair.
-      CorpusIngest.markCompactionHwm(fsOf(cfgV.corpusRoot), cfgV.corpusRoot, 2L)
+      StateStore.markCompactionHwm(fsOf(cfgV.corpusRoot), cfgV.corpusRoot, 2L)
       val staleId = rnd.nextInt(3).toLong
       intercept[IllegalArgumentException] {
         EmbeddingIngest.ingestBatch(spark, cfgV, vecBatch(staleId.toInt), staleId)
@@ -237,7 +237,7 @@ class CrashReplaySoakSpec extends SparkSpec {
       assert(search() == s0, "compact repair changed the serve answer")
       // killed compact on the LEXICAL root: hwm landed, fold did not —
       // pre-hwm replays refuse, the filtered hybrid keeps serving truth
-      CorpusIngest.markCompactionHwm(fsOf(cfgB.corpusRoot), cfgB.corpusRoot, 2L)
+      StateStore.markCompactionHwm(fsOf(cfgB.corpusRoot), cfgB.corpusRoot, 2L)
       intercept[IllegalArgumentException] {
         CorpusIngest.ingestBatch(spark, cfgB, textBatch(staleId.toInt), staleId)
       }
@@ -291,7 +291,7 @@ class CrashReplaySoakSpec extends SparkSpec {
         .select(col("centroid_id"), col("ce"), col("cn"),
           lit(-5L).as("frozen_batch"))
         .localCheckpoint()
-      CorpusIngest.swapWrite(fsV, EmbeddingIngest.centroidsPath(cfgV), torn)
+      StateStore.swap(fsV, EmbeddingIngest.centroidsPath(cfgV), torn)
       intercept[IllegalStateException] { search() }
       // the filtered hybrid rides the torn semantic leg: it must REFUSE,
       // never silently serve lexical-only results as if they were fused

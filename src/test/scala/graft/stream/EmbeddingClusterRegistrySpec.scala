@@ -101,7 +101,7 @@ class EmbeddingClusterRegistrySpec extends SparkSpec {
     assert(spark.read.parquet(s"${cfg.root}/labels").count() == allVecs.size.toLong)
     EmbeddingClusterRegistry.compact(spark, cfg)
     assert(resolved(cfg) == before)
-    assert(CorpusIngest.readOrEmptyRO(spark, s"${cfg.root}/merges",
+    assert(StateStore.readOrEmptyRO(spark, s"${cfg.root}/merges",
       "child BIGINT, parent BIGINT, ingest_batch BIGINT").count() == 0L)
     // a post-compaction arrival of an axis-0 copy joins the merged cluster
     assert(EmbeddingClusterRegistry.ingestBatch(spark, cfg,

@@ -177,7 +177,7 @@ class IvfReclusterSpec extends SparkSpec {
     val torn = spark.read.parquet(EmbeddingIngest.pqCodebooksPath(cfg))
       .withColumn("frozen_batch", org.apache.spark.sql.functions.lit(-3L))
       .localCheckpoint()
-    CorpusIngest.swapWrite(fs, EmbeddingIngest.pqCodebooksPath(cfg), torn)
+    StateStore.swap(fs, EmbeddingIngest.pqCodebooksPath(cfg), torn)
     val probes = df(seedRows.take(3))
     val e1 = intercept[IllegalStateException] {
       EmbeddingIngest.searchPq(spark, cfg, probes) }
@@ -211,7 +211,7 @@ class IvfReclusterSpec extends SparkSpec {
     val torn = spark.read.parquet(EmbeddingIngest.centroidsPath(cfg))
       .withColumn("frozen_batch", org.apache.spark.sql.functions.lit(-3L))
       .localCheckpoint()
-    CorpusIngest.swapWrite(fs, EmbeddingIngest.centroidsPath(cfg), torn)
+    StateStore.swap(fs, EmbeddingIngest.centroidsPath(cfg), torn)
     val probes = df(seedRows.take(3))
     val e1 = intercept[IllegalStateException] {
       EmbeddingIngest.search(spark, cfg, probes) }

@@ -91,8 +91,8 @@ class RegistrySummaryPropertySpec extends SparkSpec {
         registered ++= batchIds
 
         if (b == compactAfter) {
-          CorpusIngest.markCompactionHwm(fs, root,
-            CorpusIngest.ledgerMaxBatch(spark, s"$root/ledger"))
+          StateStore.markCompactionHwm(fs, root,
+            StateStore.ledgerMaxBatch(spark, s"$root/ledger"))
           UnionFindTables.compactLabels(spark, fs, root)
           assert(new java.io.File(root, "sizes").exists(),
             "compaction must materialize the summaries")
