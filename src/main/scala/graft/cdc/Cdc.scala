@@ -461,6 +461,8 @@ object Cdc {
    * S8 — checkpoint-ledger rows for a change batch: one row per applied batch
    * carrying max position + counts (reference: matomo2clickhouse.py:632-636,
    * 712-720). Returned as a one-row DataFrame to append to `log_replication`.
+   * The stream builds the same row on the driver ([[ledgerRow]]); this one
+   * aggregate is the reference it is tested against.
    */
   def ledgerEntry(events: DataFrame): DataFrame = {
     withVersion(events).agg(
@@ -472,6 +474,65 @@ object Cdc {
       min(col("log_pos")).as("log_pos_start"),
       max(col("log_pos")).as("log_pos_end"),
       count(lit(1)).as("rows_applied"))
+  }
+
+  /** One table's share of a micro-batch: the [[ledgerEntry]] aggregates over
+    * that table's events alone. `None` is SQL NULL — the aggregate saw no
+    * non-null input. */
+  final case class TablePartial(table: String, rows: Long,
+      dateid: Option[Long], logTime: Option[java.sql.Timestamp],
+      logFile: Option[String], logPosStart: Option[Long],
+      logPosEnd: Option[Long])
+
+  /** Per-table summary of a micro-batch in ONE action: which tables it
+    * touches plus every input of its ledger row. Evaluating the version
+    * here makes an overflowing coordinate `raise_error` before any state
+    * write. */
+  def batchSummary(events: DataFrame): Seq[TablePartial] = {
+    def opt[T](r: org.apache.spark.sql.Row, i: Int)(get: Int => T): Option[T] =
+      if (r.isNullAt(i)) None else Some(get(i))
+    withVersion(events).groupBy(col("table")).agg(
+        count(lit(1)),
+        max(col(Schemas.VersionCol)),
+        max(col("ts")),
+        max_by(col("log_file"), col(Schemas.VersionCol)),
+        min(col("log_pos")),
+        max(col("log_pos")))
+      .collect().toSeq.map { r =>
+        TablePartial(r.getString(0), r.getLong(1), opt(r, 2)(r.getLong),
+          opt(r, 3)(r.getTimestamp), opt(r, 4)(r.getString),
+          opt(r, 5)(r.getLong), opt(r, 6)(r.getLong))
+      }
+  }
+
+  /** The [[ledgerEntry]] row (plus `batch_id`) folded on the driver from a
+    * [[batchSummary]], as a one-row local frame: max/min/count combine
+    * across tables, and `max_by` takes the file of the partial holding
+    * the greatest version. Nulls are skipped, as Spark's aggregates skip
+    * them. The schema is `ledgerEntry`'s, read off its analyzed plan (no
+    * job runs), so parquet and JDBC ledgers see the same columns. Every
+    * value equals `ledgerEntry`'s except `created_at`, which is the
+    * driver's clock when the row is built. */
+  def ledgerRow(events: DataFrame, partials: Seq[TablePartial],
+      batchId: Long): DataFrame = {
+    val spark = events.sparkSession
+    val schema = ledgerEntry(events).withColumn("batch_id", lit(batchId)).schema
+    implicit val tsOrder: Ordering[java.sql.Timestamp] =
+      Ordering.fromLessThan(_ before _)
+    val head = partials.filter(_.dateid.isDefined).maxByOption(_.dateid.get)
+    val values = Map[String, Any](
+      Schemas.VersionCol -> head.flatMap(_.dateid).getOrElse(null),
+      "created_at" -> java.sql.Timestamp.from(java.time.Instant.now()),
+      "sql_type" -> "BATCH",
+      "log_time" -> partials.flatMap(_.logTime).maxOption.getOrElse(null),
+      "log_file" -> head.flatMap(_.logFile).getOrElse(null),
+      "log_pos_start" -> partials.flatMap(_.logPosStart).minOption.getOrElse(null),
+      "log_pos_end" -> partials.flatMap(_.logPosEnd).maxOption.getOrElse(null),
+      "rows_applied" -> partials.map(_.rows).sum,
+      "batch_id" -> batchId)
+    spark.createDataFrame(
+      java.util.List.of(org.apache.spark.sql.Row.fromSeq(schema.fieldNames.toSeq.map(values))),
+      schema)
   }
 
   /** S2 — resume-position resolution: the ledger head (reference:

@@ -378,7 +378,11 @@ object VectorOps {
         // distributed path and its error behavior
         capped.forall(r => !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2)
           && r.getDouble(2) != 0.0
-          && r.getSeq[Any](1).forall(_ != null))) {
+          && r.getSeq[Any](1).forall(_ != null)) &&
+        // a ragged codebook too: graft_dot is NULL on unequal lengths (the
+        // pair then never routes), while dotL below would truncate to the
+        // shorter vector and route it
+        capped.map(_.getSeq[Any](1).length).distinct.length <= 1) {
       val rows = capped.map { r =>
         (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2))
       }

@@ -114,15 +114,18 @@ object ChangeStream {
       onlyTables = cfg.onlyTables, onlySchemas = cfg.onlySchemas)
       .persist()
     try {
-      val present = filtered.select(col("table")).distinct()
-        .collect().map(_.getString(0)).sorted
+      // one action answers which tables the batch touches and folds every
+      // ledger input; it also raises on an overflowing version before any
+      // state write
+      val partials = Cdc.batchSummary(filtered)
+      val present = partials.map(_.table)
       // schema drift is a hard error, exactly like the reference
       // (reference: README.md:196-206) — a silently skipped table would also
       // poison the ledger, which must record only applied events
       val unknown = present.filterNot(Schemas.tableMeta.contains)
       require(unknown.isEmpty,
         s"change events for unregistered tables: ${unknown.mkString(", ")}")
-      present.foreach { table =>
+      present.sorted.foreach { table =>
         val meta = Schemas.tableMeta(table)
         val now = cfg.nowOverride.map(lit(_)).getOrElse(current_timestamp())
         // strict: corrupt payloads fail the batch loudly, like unregistered
@@ -191,14 +194,12 @@ object ChangeStream {
             aggDir)
         }
       }
-      if (!cfg.dryRun && !filtered.isEmpty) {
-        val ledger = Cdc.ledgerEntry(filtered)
-          .withColumn("batch_id", lit(batchId))
-          .persist()
-        try {
-          ledger.write.mode("append").parquet(cfg.ledgerDir)
-          cfg.jdbcSink.foreach(JdbcState.appendLedger(ledger, _))
-        } finally ledger.unpersist()
+      if (!cfg.dryRun && partials.nonEmpty) {
+        // a driver-built row: the parquet ledger and the JDBC mirror hold
+        // the same values, `created_at` included
+        val ledger = Cdc.ledgerRow(filtered, partials, batchId)
+        ledger.write.mode("append").parquet(cfg.ledgerDir)
+        cfg.jdbcSink.foreach(JdbcState.appendLedger(ledger, _))
       }
     } finally filtered.unpersist()
   }

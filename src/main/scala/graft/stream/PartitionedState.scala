@@ -1,7 +1,7 @@
 package graft.stream
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -114,19 +114,35 @@ object PartitionedState {
     months
   }
 
+  /** How long a write's observed month set may lag the write itself. */
+  private val ObservedMonthsWait = scala.concurrent.duration.Duration(60, "s")
+
   /** Dynamic-overwrite the partitions `next` lands in; a touched month that
     * ends up with ZERO rows is not in `next` at all, so its stale partition
-    * directory is deleted explicitly. */
+    * directory is deleted explicitly. The months `next` lands in are
+    * observed on the write itself (no separate job; `collect_set` is
+    * idempotent under task retry). A missing observation fails the batch,
+    * which the stream then replays: the stale-month delete is never
+    * skipped. */
   private def writeTouched(spark: SparkSession, next: DataFrame, dir: String,
       dateCol: String, touched: Seq[String]): Unit = {
-    val withPart = next.withColumn(PartCol, monthOf(col(dateCol)))
-    val remaining = withPart.select(col(PartCol)).distinct()
-      .collect().map(_.getString(0)).toSet
+    val landed = Observation()
     // per-write dynamic overwrite (the option beats the session conf,
     // SPARK-20236) — a session-conf toggle is not safe under concurrent
     // writers sharing the session (ADVICE round 9)
-    withPart.write.partitionBy(PartCol).mode("overwrite")
+    next.withColumn(PartCol, monthOf(col(dateCol)))
+      .observe(landed, collect_set(col(PartCol)).as("months"))
+      .write.partitionBy(PartCol).mode("overwrite")
       .option("partitionOverwriteMode", "dynamic").parquet(dir)
+    val remaining =
+      try scala.concurrent.Await.result(landed.future, ObservedMonthsWait)
+        .getSeq[String](0).toSet
+      catch {
+        case e: java.util.concurrent.TimeoutException =>
+          throw new IllegalStateException(s"the months written to $dir were " +
+            s"not observed within $ObservedMonthsWait; failing the batch " +
+            "so its replay rewrites them and deletes emptied months", e)
+      }
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     touched.filterNot(remaining).foreach { m =>
       fs.delete(new Path(s"$dir/$PartCol=$m"), true)

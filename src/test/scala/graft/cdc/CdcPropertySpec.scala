@@ -1,9 +1,15 @@
 package graft.cdc
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 import scala.util.Random
 
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.StructType
+
 import graft.SparkSpec
+import graft.model.Schemas
 import CdcFixtures._
 
 /**
@@ -15,7 +21,9 @@ import CdcFixtures._
  *      latest-wins view (the ReplacingMergeTree contract,
  *      reference: README.md:358-362);
  *  (c) dedup purge never removes a key's max-version row
- *      (reference: _settings.py:230-287).
+ *      (reference: _settings.py:230-287);
+ *  (d) the ledger row the stream folds on the driver from per-table
+ *      partials equals the one-aggregate [[Cdc.ledgerEntry]].
  */
 class CdcPropertySpec extends SparkSpec {
 
@@ -116,5 +124,48 @@ class CdcPropertySpec extends SparkSpec {
       val vTwice = collectVersioned(Cdc.latestWins(twice, Seq("id")))
       assert(vOnce == vTwice, s"seed=$seed")
     }
+  }
+
+  /** A random envelope batch over several registry tables and binlog files:
+    * unique coordinates, a quarter of the `ts` values null, one table whose
+    * every `ts` is null, and the batch's greatest `log_pos` planted in its
+    * LOWEST file, so the ledger's `log_file` (taken at the greatest
+    * version) and its `log_pos_end` come from different files. */
+  private def genEnvelopes(rnd: Random): org.apache.spark.sql.DataFrame = {
+    val tables = Schemas.tableMeta.keys.toSeq.sorted.take(5)
+    val nullTsTable = tables(rnd.nextInt(tables.size))
+    val coords = Iterator.continually(
+        (2 + rnd.nextInt(3), 4L + rnd.nextInt(5000), rnd.nextInt(3)))
+      .distinct.take(20 + rnd.nextInt(30)).toSeq :+ ((1, 9999L, 0))
+    val rows = coords.map { case (file, pos, rowIndex) =>
+      val table = tables(rnd.nextInt(tables.size))
+      val ts =
+        if (table == nullTsTable || rnd.nextInt(4) == 0) null
+        else java.sql.Timestamp.valueOf(f"2024-01-${1 + rnd.nextInt(28)}%02d 10:00:00")
+      Row(Seq("INSERT", "UPDATE", "DELETE")(rnd.nextInt(3)), "db", table, ts,
+        f"mysql-bin.$file%06d", pos, rowIndex, null, "{}")
+    }
+    val schema = StructType(Schemas.changeEventSchema.map(_.copy(nullable = true)))
+    spark.createDataFrame(rows.asJava, schema)
+  }
+
+  test("property: the driver-folded ledger row ≡ ledgerEntry over the batch (3 seeds)") {
+    Seq(2, 17, 64).foreach { seed =>
+      val events = genEnvelopes(new Random(seed))
+      val batchId = seed.toLong
+      val folded = Cdc.ledgerRow(events, Cdc.batchSummary(events), batchId)
+      val reference = Cdc.ledgerEntry(events).withColumn("batch_id", lit(batchId))
+      assert(folded.schema == reference.schema, s"seed=$seed")
+      val got = folded.drop("created_at").collect().toSeq
+      assert(got == reference.drop("created_at").collect().toSeq, s"seed=$seed")
+      // the planted coordinates cross files as intended
+      assert(got.head.getAs[String]("log_file") != "mysql-bin.000001" &&
+        got.head.getAs[Long]("log_pos_end") == 9999L, s"seed=$seed")
+    }
+    // no events: ledgerEntry's one all-null row with rows_applied 0
+    val empty = genEnvelopes(new Random(1)).limit(0)
+    assert(Cdc.ledgerRow(empty, Nil, 0L).drop("created_at").collect().toSeq ==
+      Cdc.ledgerEntry(empty).withColumn("batch_id", lit(0L))
+        .drop("created_at").collect().toSeq)
   }
 }

@@ -56,6 +56,35 @@ class HierRouteSpec extends SparkSpec {
     assert(err(0).contains("DIVIDE_BY_ZERO"))
   }
 
+  test("a ragged codebook routes identically on both paths") {
+    // a child and a meta of two other lengths: graft_dot is NULL on
+    // unequal lengths, so on the distributed path the short child routes
+    // nowhere and the short meta attracts no child. The driver's fold
+    // would truncate instead, so a ragged codebook keeps the distributed
+    // path whatever the cap
+    val cents = codebook(40)
+      .withColumn("ce",
+        when(col("centroid_id") === 3, expr("slice(ce, 1, 7)"))
+          .when(col("centroid_id") === 10, expr("slice(ce, 1, 6)"))
+          .otherwise(col("ce")))
+      .localCheckpoint()
+    def routes(cap: Int): (Set[Long], Set[(Long, Option[Long])]) = {
+      val (m, ch) = VectorOps.ivfHierRouting(cents, 5, cap)
+      assert(!ch.queryExecution.optimizedPlan.toString.contains("LocalRelation"))
+      (m.select(col("meta_id")).collect().map(_.getLong(0)).toSet,
+        ch.select(col("centroid_id"), col("meta_id")).collect()
+          .map(r => (r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Long])))
+          .toSet)
+    }
+    val (mD, chD) = routes(100000)
+    val (mX, chX) = routes(0)
+    assert(mD == mX)
+    assert(chD == chX)
+    assert(chD.contains((3L, None)), "the short child must not route")
+    assert(!chD.exists { case (id, m) => id != 10L && m.contains(10L) },
+      "the short meta must attract no full-length child")
+  }
+
   test("empty codebook yields empty frames; meta-less codebook refuses") {
     val empty = codebook(0).localCheckpoint()
     val (m, ch) = VectorOps.ivfHierRouting(empty, 7, 100000)

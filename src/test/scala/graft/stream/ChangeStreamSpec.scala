@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkCounts, SparkSpec}
 import graft.cdc.Cdc
 import graft.model.Schemas
 import ChangeStream._
@@ -25,17 +25,21 @@ class ChangeStreamSpec extends SparkSpec {
       String, String, String, String, String, Long, Int, String, String) =
     (op, "db", table, ts, "mysql-bin.000001", pos, 0, before, after)
 
-  /** Writes one flat parquet file `dir/name.parquet` (the file stream source
-    * lists files at the top level; a per-write subdirectory would be invisible). */
-  private def writeLog(dir: String, name: String, rows: Seq[(
-      String, String, String, String, String, Long, Int, String, String)]): Unit = {
-    val staging = tmpDir()
+  /** Envelope rows as a change-event frame. */
+  private def envFrame(rows: Seq[(
+      String, String, String, String, String, Long, Int, String, String)]): DataFrame =
     rows.toDF("op", "schema", "table", "ts", "log_file", "log_pos", "row_index",
         "before", "after")
       .select(col("op"), col("schema"), col("table"),
         col("ts").cast("timestamp").as("ts"),
         col("log_file"), col("log_pos"), col("row_index"), col("before"), col("after"))
-      .coalesce(1).write.mode("overwrite").parquet(staging)
+
+  /** Writes one flat parquet file `dir/name.parquet` (the file stream source
+    * lists files at the top level; a per-write subdirectory would be invisible). */
+  private def writeLog(dir: String, name: String, rows: Seq[(
+      String, String, String, String, String, Long, Int, String, String)]): Unit = {
+    val staging = tmpDir()
+    envFrame(rows).coalesce(1).write.mode("overwrite").parquet(staging)
     val part = new java.io.File(staging).listFiles()
       .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
     Files.createDirectories(java.nio.file.Paths.get(dir))
@@ -128,6 +132,26 @@ class ChangeStreamSpec extends SparkSpec {
     assert(visitLatest(cfg) == visit0)
   }
 
+  test("a steady micro-batch runs within its Spark job budget") {
+    val logDir = tmpDir()
+    writeLog(logDir, "f1", batch1)
+    val cfg = freshCfg(logDir)
+    ChangeStream.run(spark, cfg).awaitTermination()
+    // the second staged run is the steady cron cycle: it resumes, applies
+    // one micro-batch to existing state (one flat, one month-partitioned
+    // table) and appends one ledger row
+    writeLog(logDir, "f2", batch2)
+    val (_, counts) = SparkCounts.measure(spark) {
+      ChangeStream.run(spark, cfg).awaitTermination()
+    }
+    assert(siteState(cfg) == Set((1L, "alpha2")))
+    assert(visitLatest(cfg) == Set((10L, "fr")))
+    // 19 jobs before the batch summary, the driver-built ledger row and the
+    // observed months: the distinct tables, an emptiness probe, a persisted
+    // ledger aggregate and the written-months distinct each cost their own
+    assert(counts.jobs <= 14L, s"a steady micro-batch ran ${counts.jobs} Spark jobs")
+  }
+
   test("a flat table stranded at .__old by a died swap rolls back on the next cycle") {
     val logDir = tmpDir()
     writeLog(logDir, "f1", batch1)
@@ -185,16 +209,47 @@ class ChangeStreamSpec extends SparkSpec {
 
   test("events for an unregistered table fail the batch loudly (strict schema)") {
     val cfg = freshCfg(tmpDir())
-    val batch = Seq(env("INSERT", "not_in_registry", 1, null, """{"x":1}"""))
-      .toDF("op", "schema", "table", "ts", "log_file", "log_pos", "row_index",
-        "before", "after")
-      .select(col("op"), col("schema"), col("table"),
-        col("ts").cast("timestamp").as("ts"), col("log_file"), col("log_pos"),
-        col("row_index"), col("before"), col("after"))
+    val batch = envFrame(Seq(env("INSERT", "not_in_registry", 1, null, """{"x":1}""")))
     val e = intercept[IllegalArgumentException] {
       ChangeStream.applyBatch(spark, cfg)(batch, 0L)
     }
     assert(e.getMessage.contains("not_in_registry"))
+  }
+
+  test("a ledger of aggregate-built and driver-built rows reads back as one frame") {
+    val cfg = freshCfg(tmpDir())
+    // a row as earlier versions appended it (the one-aggregate ledgerEntry)
+    // next to one folded on the driver from the per-table summary
+    val older = Cdc.ledgerEntry(envFrame(batch1)).withColumn("batch_id", lit(0L))
+    val newer = envFrame(batch2)
+    older.write.mode("append").parquet(cfg.ledgerDir)
+    Cdc.ledgerRow(newer, Cdc.batchSummary(newer), 1L)
+      .write.mode("append").parquet(cfg.ledgerDir)
+    val ledger = spark.read.parquet(cfg.ledgerDir)
+    assert(ledger.schema.map(f => (f.name, f.dataType)) ==
+      older.schema.map(f => (f.name, f.dataType)))
+    assert(ledger.select("batch_id", "log_pos_start", "log_pos_end", "rows_applied")
+      .as[(Long, Long, Long, Long)].collect().sorted.toSeq ==
+      Seq((0L, 100L, 300L, 3L), (1L, 400L, 600L, 3L)))
+    assert(ChangeStream.resumeFromLedger(spark, cfg)
+      .contains(("mysql-bin.000001", 600L)))
+  }
+
+  test("an overflowing version fails the batch before any state write") {
+    val cfg = freshCfg(tmpDir())
+    // the visit table sorts first and is valid; one more site row carries
+    // a row_index past the version's 14 bits
+    val batch = envFrame(batch1 :+
+      env("INSERT", "matomo_site", 900, null,
+        """{"idsite":3,"name":"gamma","main_url":"http://c"}""")
+        .copy(_7 = Cdc.MaxRowIndex + 1))
+    val e = intercept[Exception](ChangeStream.applyBatch(spark, cfg)(batch, 0L))
+    def causes(t: Throwable): Seq[Throwable] =
+      if (t == null) Nil else t +: causes(t.getCause)
+    assert(causes(e).exists(c => Option(c.getMessage).exists(
+      _.contains("version field overflow"))), e.toString)
+    assert(!Files.exists(java.nio.file.Paths.get(cfg.stateDir, "matomo_log_visit")))
+    assert(!Files.exists(java.nio.file.Paths.get(cfg.ledgerDir)))
   }
 
   test("old DELETEs are suppressed on the mutable conversion table too (F7)") {

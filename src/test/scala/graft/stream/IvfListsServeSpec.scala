@@ -1,7 +1,6 @@
 package graft.stream
 
-import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import graft.{SparkCounts, SparkSpec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -141,33 +140,18 @@ class IvfListsServeSpec extends SparkSpec {
       epoch = 0L, upto = 0L)
 
     val probes = synth(900000L, 2L)
-    val read = new java.util.concurrent.atomic.AtomicLong
-    val listener = new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) { read.addAndGet(m.inputMetrics.recordsRead); () }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val rows = EmbeddingIngest.search(spark, cfg, probes).collect()
-      assert(rows.nonEmpty, "the pruned serve returned nothing")
-    } finally {
-      var prev = -1L
-      var waited = 0
-      while (read.get() != prev && waited < 50) {
-        prev = read.get(); Thread.sleep(100); waited += 1
-      }
-      spark.sparkContext.removeSparkListener(listener)
-      graft.Caching.releaseAll()
-    }
+    val (_, counts) =
+      try SparkCounts.measure(spark) {
+        val rows = EmbeddingIngest.search(spark, cfg, probes).collect()
+        assert(rows.nonEmpty, "the pruned serve returned nothing")
+      } finally graft.Caching.releaseAll()
     // budget: 2 probes × nprobe 2 pick ≤ 4 of 1000 buckets (~50 rows
     // each in the lists, ~50 in the pruned assignment row groups), plus
     // the 1000-row codebook read a few times and the probe scans — far
     // under half the corpus. An unpruned serve reads the 50k-row vec
     // store (and the 50k-row assignment table) and fails unambiguously.
-    assert(read.get() < corpusRows / 2,
-      s"search read ${read.get()} input records against a $corpusRows-row " +
+    assert(counts.inputRecords < corpusRows / 2,
+      s"search read ${counts.inputRecords} input records against a $corpusRows-row " +
         "corpus — the centroid IN push / lists layout no longer prunes")
   }
 }

@@ -1,7 +1,6 @@
 package graft.text
 
-import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import graft.{SparkCounts, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** Scale contract of [[TextOps.connectedComponents]] (VERDICT r8 item 7):
@@ -37,33 +36,15 @@ class CcScaleSpec extends SparkSpec {
     val chain = spark.range(n - 1)
       .select(col("id").as("doc_a"), (col("id") + 1).as("doc_b"))
 
-    val shuffled = new java.util.concurrent.atomic.AtomicLong
-    val listener = new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) { shuffled.addAndGet(m.shuffleWriteMetrics.recordsWritten); () }
-      }
+    val ((labels, rounds), counts) = SparkCounts.measure(spark) {
+      // smallGraphCap = 0 forces the DISTRIBUTED fixpoint — the subject
+      // of this contract; the production driver fast-path (cap 100k)
+      // would otherwise swallow this fixture whole
+      val (l, r) = TextOps.connectedComponentsWithRounds(chain,
+        smallGraphCap = 0)
+      val collected = l.select("id", "component").as[(Long, Long)].collect()
+      (collected, r)
     }
-    spark.sparkContext.addSparkListener(listener)
-    val (labels, rounds) =
-      try {
-        // smallGraphCap = 0 forces the DISTRIBUTED fixpoint — the subject
-        // of this contract; the production driver fast-path (cap 100k)
-        // would otherwise swallow this fixture whole
-        val (l, r) = TextOps.connectedComponentsWithRounds(chain,
-          smallGraphCap = 0)
-        val collected = l.select("id", "component").as[(Long, Long)].collect()
-        (collected, r)
-      } finally {
-        // the listener bus is async — wait for the metric tail to drain
-        // before reading the counter (poll to stability; no public flush)
-        var prev = -1L
-        var waited = 0
-        while (shuffled.get() != prev && waited < 50) {
-          prev = shuffled.get(); Thread.sleep(100); waited += 1
-        }
-        spark.sparkContext.removeSparkListener(listener)
-      }
 
     // correctness first: one component, every node labeled with the min id
     assert(labels.length == n)
@@ -82,8 +63,8 @@ class CcScaleSpec extends SparkSpec {
     // tens of millions.
     val e = 2L * (n - 1) // symmetrized edge count
     val bound = 16L * e * (rounds + 2)
-    assert(shuffled.get() <= bound,
-      s"connectedComponents shuffled ${shuffled.get()} records on a $n-chain " +
+    assert(counts.shuffleRecordsWritten <= bound,
+      s"connectedComponents shuffled ${counts.shuffleRecordsWritten} records on a $n-chain " +
         s"(bound $bound = 16·E·(rounds+2)) — per-round shuffle is no longer O(E)")
     graft.Caching.releaseAll()
   }

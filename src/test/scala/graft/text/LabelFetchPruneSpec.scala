@@ -1,7 +1,6 @@
 package graft.text
 
-import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import graft.{SparkCounts, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** Scale contract of [[UnionFind.increment]]'s one corpus-sized touch
@@ -14,7 +13,7 @@ import org.apache.spark.sql.functions._
   * between an increment that reads O(matched row groups) and one that
   * re-reads the corpus per batch.
   *
-  * The tripwire measures actual task input records via a TaskEnd listener
+  * The tripwire measures actual task input records via [[graft.SparkCounts]]
   * (the [[CcScaleSpec]] discipline): a compacted-layout labels table of
   * 200k rows in ~64 KiB row groups, 8 scattered matched ids — the
   * increment must read well under half the table (measured ~0.15×; an
@@ -48,30 +47,14 @@ class LabelFetchPruneSpec extends SparkSpec {
       .toDF("batch_id", "corpus_id")
     val batchPairs = graft.Frames.empty(spark, "doc_a BIGINT, doc_b BIGINT")
 
-    val read = new java.util.concurrent.atomic.AtomicLong
-    val listener = new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) { read.addAndGet(m.inputMetrics.recordsRead); () }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val got =
-      try {
+    val (got, counts) =
+      try SparkCounts.measure(spark) {
         val (newLabels, newMerges) = UnionFind.increment(labels, merges,
           batchIds.toDF("doc_id"), batchPairs, crossPairs)
         val l = newLabels.as[(Long, Long)].collect().toMap
         newMerges.count()
         l
-      } finally {
-        var prev = -1L
-        var waited = 0
-        while (read.get() != prev && waited < 50) {
-          prev = read.get(); Thread.sleep(100); waited += 1
-        }
-        spark.sparkContext.removeSparkListener(listener)
-        graft.Caching.releaseAll()
-      }
+      } finally graft.Caching.releaseAll()
 
     // correctness first: each batch doc joins its matched corpus doc's
     // cluster (label = the corpus doc's id, the component min)
@@ -81,8 +64,8 @@ class LabelFetchPruneSpec extends SparkSpec {
     // the 8 matched ids, not the table. Half-the-table headroom covers
     // reruns of cached frames and the batch-side reads; an unpruned scan
     // reads >= tableRows and fails unambiguously.
-    assert(read.get() < tableRows / 2,
-      s"increment read ${read.get()} input records against a $tableRows-row " +
+    assert(counts.inputRecords < tableRows / 2,
+      s"increment read ${counts.inputRecords} input records against a $tableRows-row " +
         "labels table — the matched-id IN push no longer prunes the fetch")
   }
 }
