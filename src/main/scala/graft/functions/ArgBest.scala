@@ -1,9 +1,11 @@
 package graft.functions
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.dsl.expressions._
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
+import org.apache.spark.sql.functions.{col, expr, max, min, struct}
 import org.apache.spark.sql.types._
 
 /**
@@ -84,4 +86,25 @@ case class ArgBest(score: Expression, id: Expression, asMin: Boolean)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): ArgBest =
     copy(score = newChildren(0), id = newChildren(1))
+}
+
+object ArgBest {
+
+  /** The argbest aggregate column over `frame`'s `score` and `id` columns
+    * — the id of the best (score, id) pair, ties to the lowest id; the
+    * argmin with `asMin`. The id is read as BIGINT, so any integral id
+    * type works. The native aggregate when `frame`'s session carries
+    * GraftExtensions; otherwise the `max(struct(score, −id))` spelling —
+    * the same result, but a struct buffer that demotes the plan to
+    * SortAggregate. */
+  def of(frame: DataFrame, score: String, id: String,
+      asMin: Boolean = false): Column = {
+    val fn = if (asMin) "graft_argmin" else "graft_argmax"
+    if (frame.sparkSession.catalog.functionExists(fn))
+      expr(s"$fn($score, CAST($id AS BIGINT))")
+    else if (asMin)
+      min(struct(col(score), col(id).cast("long").as("nid"))).getField("nid")
+    else
+      -max(struct(col(score), (-col(id).cast("long")).as("nid"))).getField("nid")
+  }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Caching
+import graft.functions.ArgBest
 
 /**
  * Similarity search over embedding columns (`Array[Float]`) — the extended
@@ -56,26 +57,6 @@ object VectorOps {
     * [[cosine]]: dot / (sqrt(aa) * sqrt(bb))). */
   private def cosPre(a: String, b: String, na: String, nb: String): Column =
     dot(a, b) / (col(na) * col(nb))
-
-  /** Per-group argbest aggregate — best (score, id) pair's id, ties to the
-    * lowest id. The native [[graft.functions.ArgBest]] when the session
-    * carries GraftExtensions: a flat two-primitive buffer keeps the plan a
-    * map-side-combining HASH aggregation, where the composable
-    * `max(struct(score, −id))` buffer is a struct and silently demotes the
-    * whole pre-aggregation stream to SortAggregate (the r15 flat-assign
-    * profile: the corpus × nlist candidate stream was being SORTED).
-    * Fallback spelling for extension-less sessions — identical result. */
-  private def argBestAgg(score: String, id: String,
-      asMin: Boolean = false): Column = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val fn = if (asMin) "graft_argmin" else "graft_argmax"
-    if (spark.catalog.functionExists(fn))
-      expr(s"$fn($score, CAST($id AS BIGINT))")
-    else if (asMin)
-      min(struct(col(score), col(id).cast("long").as("nid"))).getField("nid")
-    else
-      -max(struct(col(score), (-col(id).cast("long")).as("nid"))).getField("nid")
-  }
 
   /**
    * Brute-force top-k cosine neighbors for each probe vector. Probes are the
@@ -142,7 +123,7 @@ object VectorOps {
       // ~|corpus| collapsed rows shuffle, and the embedding arrays never
       // move through an exchange. See [[ivfAssign]] for the full argument.
       scored.groupBy(col("vec_id"))
-        .agg(argBestAgg("cos", "centroid_id").as("centroid_id"))
+        .agg(ArgBest.of(scored, "cos", "centroid_id").as("centroid_id"))
         .select(col("vec_id"), col("centroid_id"))
     else {
       // multi-probe needs the top-n, which has no map-combining aggregate
@@ -167,7 +148,7 @@ object VectorOps {
     val best = v.join(broadcast(centroids))
       .withColumn("cos", cosPre("e", "ce", "n", "cn"))
       .groupBy(col("vec_id"))
-      .agg(argBestAgg("cos", "centroid_id").as("centroid_id"))
+      .agg(ArgBest.of(v, "cos", "centroid_id").as("centroid_id"))
     v.join(best, Seq("vec_id"))
       .select(col("vec_id"), col("centroid_id"), col("e"))
   }
@@ -214,7 +195,7 @@ object VectorOps {
   def ivfAssign(centroids: DataFrame, v: DataFrame): DataFrame = {
     // NARROW-key argmax + join-back (r15): the candidate stream is
     // corpus × nlist rows, so the aggregation must touch only scalars per
-    // row — [[argBestAgg]]'s flat buffer keeps it a map-side-combining
+    // row — [[ArgBest.of]]'s flat buffer keeps it a map-side-combining
     // HASH aggregation on the 8-byte vec_id key (the max(struct) spelling
     // demoted this exact stream to a full SortAggregate, and grouping by
     // (vec_id, e, n) to skip the join-back re-hashed the wide key once
@@ -224,7 +205,7 @@ object VectorOps {
       .join(broadcast(centroids))
       .withColumn("cos", cosPre("e", "ce", "n", "cn"))
       .groupBy(col("vec_id"))
-      .agg(argBestAgg("cos", "centroid_id").as("centroid_id"))
+      .agg(ArgBest.of(v, "cos", "centroid_id").as("centroid_id"))
     v.join(best, Seq("vec_id"))
       .select(col("vec_id"), col("centroid_id"), col("e"), col("n"))
   }
@@ -436,7 +417,7 @@ object VectorOps {
     val routed = centroids.join(broadcast(metas))
       .withColumn("cos", cosPre("ce", "me", "cn", "mn"))
       .groupBy(col("centroid_id"))
-      .agg(argBestAgg("cos", "meta_id").as("meta_id"))
+      .agg(ArgBest.of(centroids, "cos", "meta_id").as("meta_id"))
       .select(col("centroid_id"), col("meta_id"))
     (metas, centroids.join(routed, Seq("centroid_id")))
   }
@@ -481,7 +462,7 @@ object VectorOps {
 
   /** [[ivfAssignHierRouted]] plus the vector: (vec_id, centroid_id, e, n),
     * so the Lloyd refine consumes the assignment directly. Narrow
-    * scalar-key hash aggregations ([[argBestAgg]]) at both levels; the
+    * scalar-key hash aggregations ([[ArgBest.of]]) at both levels; the
     * vectors re-attach through vec_id equi-joins against the (typically
     * checkpointed) corpus frame — grouping by the array columns instead
     * was measured 3× slower at dim 64 (the wide key re-hashes per
@@ -493,7 +474,7 @@ object VectorOps {
       .join(broadcast(metas))
       .withColumn("cos", cosPre("e", "me", "n", "mn"))
       .groupBy(col("vec_id"))
-      .agg(argBestAgg("cos", "meta_id").as("meta_id"))
+      .agg(ArgBest.of(vk, "cos", "meta_id").as("meta_id"))
     // join-back with the AGGREGATE side on the left: an inner using-join
     // keeps the LEFT side's key column, and keeping the aggregate's
     // vec_id attribute in the output preserves its hash(vec_id)
@@ -506,7 +487,7 @@ object VectorOps {
         col("ce"), col("cn")), Seq("meta_id"))
       .withColumn("cos", cosPre("e", "ce", "n", "cn"))
       .groupBy(col("vec_id"))
-      .agg(argBestAgg("cos", "centroid_id").as("centroid_id"))
+      .agg(ArgBest.of(vk, "cos", "centroid_id").as("centroid_id"))
     best.join(vk, Seq("vec_id"))
       .select(col("vec_id"), col("centroid_id"), col("e"), col("n"))
   }
@@ -1057,7 +1038,7 @@ object VectorOps {
       .join(broadcast(codebook.withColumn("cbb", dot("ce", "ce"))), Seq("j"))
       .withColumn("d2", col("saa") - lit(2.0) * dot("se", "ce") + col("cbb"))
       .groupBy(col("vec_id"), col("j"))
-      .agg(argBestAgg("d2", "code_id", asMin = true).as("code_id"))
+      .agg(ArgBest.of(subs, "d2", "code_id", asMin = true).as("code_id"))
       .select(col("vec_id"), col("j"), col("code_id"))
     // ADC: probe → per-(subspace, codeword) distance table in exact 1e-12
     // integer units; corpus distance = integer sum over the m code lookups
@@ -1109,7 +1090,7 @@ object VectorOps {
       .join(broadcast(codebooks.withColumn("cbb", dot("ce", "ce"))), Seq("j"))
       .withColumn("d2", col("saa") - lit(2.0) * dot("se", "ce") + col("cbb"))
       .groupBy(col("vec_id"), col("j"))
-      .agg(argBestAgg("d2", "code_id", asMin = true).as("code_id"))
+      .agg(ArgBest.of(codebooks, "d2", "code_id", asMin = true).as("code_id"))
       .select(col("vec_id"), col("j"), col("code_id"))
 
   /** Probes' ADC distance tables against FROZEN codebooks: one row per

@@ -1,11 +1,13 @@
 package graft.stream
 
+import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.Caching
+import graft.functions.ArgBest
 import graft.ml.VectorOps
 import graft.text.{TextOps, UnionFind}
 
@@ -261,26 +263,31 @@ private[stream] object UnionFindTables {
         (lit(1.0) / col("cluster_size").cast("double")).as("weight"))
   }
 
-  /** Keep-best canonical pick per cluster: the caller supplies a
-    * (doc_id, score) frame (quality scores, recency, anything totally
-    * ordered with the doc_id tiebreak) and gets one winning doc per
-    * cluster — the registry DRIVING the dedup decision instead of a batch
+  /** Keep-best canonical pick per cluster: the caller supplies an
+    * (`idCol`, score) frame (quality scores, recency, anything totally
+    * ordered with the id tiebreak) and gets one winning id per cluster —
+    * the registry DRIVING the dedup decision instead of a batch
     * recompute. Ids without a score row are skipped (they cannot win);
-    * ids without a label row keep their own id as a singleton cluster. */
-  def keepBest(spark: SparkSession, root: String, scores: DataFrame): DataFrame =
-    // rank-1 per cluster (score desc, doc_id asc) as a MAP-COMBINING
+    * ids without a label row keep their own id as a singleton cluster.
+    * Any integral id type is accepted (read as BIGINT). Scores compare as
+    * DOUBLE: LONG scores above 2^53 can round to equal doubles, tie, and
+    * fall back to the lowest id. */
+  def keepBest(spark: SparkSession, root: String, scores: DataFrame,
+      idCol: String): DataFrame = {
+    val scored = scores.select(col(idCol).cast("long").as("doc_id"),
+      col("score").cast("double").as("score"))
+    // rank-1 per cluster (score desc, id asc) as a MAP-COMBINING
     // aggregate — each partition collapses a cluster's candidates to one
     // row before the shuffle, so the mega-cluster never lands in a single
-    // window buffer. graft_argmax keeps it a flat-buffer HASH aggregation
-    // (the max(struct) spelling demoted the scan to SortAggregate — r15);
-    // the winner's score is the group max by definition (ties tie).
-    scores.select(col("doc_id"), col("score").cast("double").as("score"))
-      .join(resolvedLabels(spark, root), Seq("doc_id"), "left")
+    // window buffer ([[ArgBest.of]]'s flat buffer keeps it a HASH
+    // aggregation); the winner's score is the group max by definition.
+    scored.join(resolvedLabels(spark, root), Seq("doc_id"), "left")
       .withColumn("label", coalesce(col("label"), col("doc_id")))
       .groupBy(col("label"))
-      .agg(expr("graft_argmax(score, doc_id)").as("kept_doc"),
+      .agg(ArgBest.of(scored, "score", "doc_id").as("kept_doc"),
         max(col("score")).as("score"))
       .select(col("label"), col("kept_doc"), col("score"))
+  }
 
   /** The would-label report behind the read-only probe faces: run the
     * union-find increment WITHOUT writing and return, per batch id, the
@@ -290,10 +297,12 @@ private[stream] object UnionFindTables {
     * Counted from the matched roots directly, NOT from merge rows — a
     * merge row also appears when a small-id arrival re-roots a single
     * cluster, which is not a bridge. */
-  def probeReport(labels: DataFrame, merges: DataFrame, batchIds: DataFrame,
+  def probeReport(spark: SparkSession, root: String, batchIds: DataFrame,
       batchPairs: DataFrame, crossPairs: DataFrame): DataFrame = {
     val inc = UnionFind.incrementFull(
-      labels, merges, batchIds, batchPairs, crossPairs)
+      StateStore.readOrEmptyRO(spark, labelsPath(root), labelsDdl),
+      StateStore.readOrEmptyRO(spark, mergesPath(root), mergesDdl),
+      batchIds, batchPairs, crossPairs)
     // each existing root's FINAL component: rerouted by a merge row where
     // one exists, itself otherwise
     val rootComp = inc.corpusRoots.select(col("root")).distinct()
@@ -335,12 +344,9 @@ private[stream] object UnionFindTables {
     * correctly (a resolved label is a root, and a root never appears as a
     * merge child — re-applying the log is a no-op), so a crash between
     * the two swaps loses nothing and a re-run completes the truncation. */
-  def compactLabels(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, root: String): Unit = {
-    StateStore.rollbackIfStranded(fs, labelsPath(root))
-    StateStore.rollbackIfStranded(fs, mergesPath(root))
-    StateStore.rollbackIfStranded(fs, sizesPath(root))
-    StateStore.rollbackIfStranded(fs, statsPath(root))
+  def compactLabels(spark: SparkSession, fs: FileSystem, root: String): Unit = {
+    Seq(labelsPath(root), mergesPath(root), sizesPath(root), statsPath(root))
+      .foreach(StateStore.rollbackIfStranded(fs, _))
     // range-sorted by doc_id: per-batch appends carry batch-local id
     // ranges anyway, but the FOLDED table is where point lookups (the
     // increment's matched-corpus label fetch, sameCluster probes) spend
@@ -381,25 +387,40 @@ private[stream] object UnionFindTables {
   }
 }
 
+/** The fields every registry config carries, whatever its signature kind. */
+trait RegistryFields {
+  def root: String
+  def checkpointDir: String
+  def threshold: Double
+  def maxFilesPerTrigger: Int
+  def lockStaleMs: Long
+}
+
 /**
- * Streaming near-dup cluster LABELING — the keep-everything sibling of
- * [[CorpusIngest]]: where the ingest pipeline REJECTS near-duplicates,
- * this registry admits every document and maintains its cluster label
- * incrementally, so downstream consumers can make their own per-cluster
- * decisions (keep-best by quality, dedup-aware sampling weights,
- * contamination tracing) without ever recomputing connected components
- * over the full corpus. The reference keeps the same duality: rows are
- * never dropped at apply time — the J1/J2 latest-record and duplicate
- * views interpret the full appended history (doc_old_duplicates.md,
- * script_create_clickhouse_table.sql's versioned table).
+ * Streaming near-dup cluster LABELING, written once over a signature kind
+ * — the keep-everything sibling of the dedup ingests: where [[CorpusIngest]]
+ * and [[EmbeddingIngest]] REJECT near-duplicates, a registry admits every
+ * item and maintains its cluster label incrementally, so downstream
+ * consumers make their own per-cluster decisions (keep-best by quality,
+ * dedup-aware sampling weights, contamination tracing) without ever
+ * recomputing connected components over the full corpus. The reference
+ * keeps the same duality: rows are never dropped at apply time — the J1/J2
+ * latest-record and duplicate views interpret the full appended history
+ * (doc_old_duplicates.md, script_create_clickhouse_table.sql's versioned
+ * table).
+ *
+ * A kind ([[ClusterRegistry]]: MinHash over text; [[EmbeddingClusterRegistry]]:
+ * SRP over vectors) supplies only its algebra: the constructor's columns,
+ * schemas and tag, plus how the bands dir resolves, how a batch is signed,
+ * and the cross-probe and self-pair functions. Every face is shared.
  *
  * State tables under `root`, all partitioned by `ingest_batch` and only
- * ever appended (same at-least-once dynamic-partition-overwrite replay
- * discipline as [[CorpusIngest.ingestBatch]]):
+ * ever appended (the at-least-once dynamic-partition-overwrite replay
+ * discipline of [[CorpusIngest.ingestBatch]]):
  *
- *  - `bands/`, `sets/` — the corpus MinHash signature index (identical
- *    schema to [[CorpusIngest]]'s), probed by each arriving batch;
- *  - `labels/` — (doc_id, label): the label assigned when the doc's batch
+ *  - the bands dir and the payload table — the signature index each
+ *    arriving batch probes (payload = what the pair verify reads);
+ *  - `labels/` — (doc_id, label): the label assigned when the item's batch
  *    arrived — never rewritten by later batches;
  *  - `merges/` — (child, parent): the union-find log; appended when a
  *    batch bridges existing clusters ([[graft.text.UnionFind]]);
@@ -409,17 +430,236 @@ private[stream] object UnionFindTables {
  * corpus-sized tables are appended to, never re-shuffled — the property
  * that makes cluster maintenance viable at 100 TB, where the batch
  * alternative ([[TextOps.connectedComponents]] over all pairs) re-runs a
- * multi-round all-corpus shuffle per refresh. Serving
- * ([[resolvedLabels]], [[sameCluster]]) is read-only and lock-free.
+ * multi-round all-corpus shuffle per refresh. Serving is read-only and
+ * lock-free.
  *
- * Contract: doc_ids are unique across the corpus lifetime (the
+ * Contract: ids are unique across the corpus lifetime (the
  * [[CorpusIngest]] rule) — a re-arrival of an id would append a second
  * label row for it. A torn state (index rows whose labels row is missing
  * — only reachable by NOT replaying a crashed batch, e.g. a manual
  * backfill under a fresh batch id) fails the next increment loudly
  * instead of silently dropping pair evidence ([[UnionFind.increment]]).
+ *
+ * @param idCol      id column of the source and payload rows; every face
+ *                   speaks it (`doc_id` / `vec_id`)
+ * @param scoreCol   score column of a verified pair (`jaccard` / `cos`)
+ * @param ownerTag   lock owners are `<ownerTag>-batch-…`, `<ownerTag>-compact-…`
+ * @param payloadName dir of the verify payload under the root (`sets` / `vecs`)
  */
-object ClusterRegistry {
+abstract class SignatureRegistry(protected val idCol: String,
+    protected val scoreCol: String, protected val sourceDdl: String,
+    protected val ownerTag: String, protected val payloadName: String,
+    protected val payloadDdl: String, protected val bandsDdl: String) {
+
+  type Cfg <: RegistryFields
+
+  // ---- the signature kind's algebra ----
+  protected def sourceDir(cfg: Cfg): String
+  /** (bands dir, bits, bandBits) every face reads, appends and signs at; a
+    * locked face passes its `fs` so stranded state rolls back first. */
+  protected def bandsAt(spark: SparkSession, cfg: Cfg,
+      locked: Option[FileSystem]): (String, Int, Int)
+  /** Sign a batch: (its ids as `doc_id`, band rows, payload rows), each in
+    * its table's DDL column order. */
+  protected def sign(batch: DataFrame, bits: Int,
+      bandBits: Int): (DataFrame, DataFrame, DataFrame)
+  /** Batch ↔ index pairs: (batch_id, corpus_id, score). */
+  protected def crossPairs(indexBands: DataFrame, indexPayload: DataFrame,
+      bands: DataFrame, payload: DataFrame, threshold: Double): DataFrame
+  /** Within-batch pairs: (doc_a, doc_b, score). */
+  protected def selfPairs(bands: DataFrame, payload: DataFrame,
+      threshold: Double): DataFrame
+  /** Row layout of the bands fold (default: as appended). */
+  protected def bandsFold(bands: DataFrame): DataFrame = bands
+
+  // ---- the faces, one body for both kinds ----
+  protected def payloadPath(cfg: Cfg): String = s"${cfg.root}/$payloadName"
+  def ledgerPath(cfg: Cfg): String = s"${cfg.root}/ledger"
+
+  /** Stable lock owner per batch — replay-stable like
+    * [[CorpusIngest.batchLockOwner]]. */
+  def batchLockOwner(cfg: Cfg, batchId: Long): String =
+    s"$ownerTag-batch-$batchId@${cfg.checkpointDir}"
+
+  private final class Evidence(val bandsDir: String, val ids: DataFrame,
+      val bands: DataFrame, val payload: DataFrame, val cross: DataFrame,
+      val self: DataFrame)
+
+  /** ONE signature build of `batch` at the root's band width — the probe,
+    * the within-batch pairs and the appends all read the two cached
+    * signature frames — and its pair evidence against the persisted index.
+    * `ingest` = the locked batch (fs, batchId): stranded state rolls back
+    * and the index excludes the batch's own partitions, so a replay never
+    * probes the rows it wrote; None = the read-only faces' lock-free reads. */
+  private def evidence(spark: SparkSession, cfg: Cfg, batch: DataFrame,
+      ingest: Option[(FileSystem, Long)]): Evidence = {
+    val (bandsDir, bits, bandBits) = bandsAt(spark, cfg, ingest.map(_._1))
+    def index(path: String, ddl: String) = ingest.fold(
+      StateStore.readOrEmptyRO(spark, path, ddl)) { case (_, batchId) =>
+      StateStore.readOrEmpty(spark, path, ddl).filter(col("ingest_batch") =!= batchId)
+    }
+    val (ids, bb, bp) = sign(batch, bits, bandBits)
+    val (bands, payload) = (Caching.scoped(bb), Caching.scoped(bp))
+    new Evidence(bandsDir, ids, bands, payload,
+      crossPairs(index(bandsDir, bandsDdl), index(payloadPath(cfg), payloadDdl),
+        bands, payload, cfg.threshold),
+      selfPairs(bands, payload, cfg.threshold))
+  }
+
+  /**
+   * Label one batch; returns the number of items labeled. The increment:
+   * sign the batch once, probe the persisted index for batch↔corpus
+   * pairs, self-join the batch bands for within-batch pairs, then
+   * [[UnionFind.increment]] turns the pair evidence into appended label
+   * rows and merge-log rows. All reads exclude the batch's own partitions,
+   * so an at-least-once replay recomputes — and dynamically overwrites —
+   * identical rows.
+   */
+  def ingestBatch(spark: SparkSession, cfg: Cfg, batch: DataFrame,
+      batchId: Long): Long = StateStore.lockedBatch(spark, cfg.root,
+      batchLockOwner(cfg, batchId), cfg.lockStaleMs,
+      Seq(payloadPath(cfg), UnionFindTables.labelsPath(cfg.root),
+        UnionFindTables.mergesPath(cfg.root), ledgerPath(cfg))) { (lock, fs) =>
+    StateStore.requireAboveCompactionHwm(fs, cfg.root, batchId)
+    Caching.scope {
+      val ev = evidence(spark, cfg, batch, Some((fs, batchId)))
+      // cached: each pair frame is read twice (the union-find increment
+      // and the ledger count) — uncached, the candidate join and verify
+      // would run twice
+      Seq(ev.cross, ev.self).foreach(Caching.scoped(_))
+      // the pair computation may outlive the staleness window on a huge
+      // batch; refresh BEFORE the first state write
+      IngestLock.heartbeat(spark, lock)
+      // the two signature appends are independent directories over warm
+      // cached frames — overlap their commit latency
+      StateStore.parallelAppends(Seq(
+        ev.bandsDir -> ev.bands.withColumn("ingest_batch", lit(batchId)),
+        payloadPath(cfg) -> ev.payload.withColumn("ingest_batch", lit(batchId))))
+      val nMerges = UnionFindTables.incrementAndAppend(spark, cfg.root,
+        batchId, ev.ids, ev.self, ev.cross)
+      val nIn = ev.ids.count()
+      val nPairs = ev.cross.count() + ev.self.count()
+      spark.createDataFrame(Seq((batchId, nIn, nPairs, nMerges)))
+        .toDF("ingest_batch", "n_in", "n_pairs", "n_merges")
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("ingest_batch").parquet(ledgerPath(cfg))
+      nIn
+    }
+  }
+
+  /** Probe a batch WITHOUT labeling it — the read-only what-if face
+    * ([[CorpusIngest.probe]]'s labeling twin): per batch item, the
+    * cluster it WOULD land in and how many existing clusters its would-be
+    * component touches (`n_existing`; ≥ 2 = a bridge). Takes no lock,
+    * writes nothing; same signature build + index probe cost as
+    * [[ingestBatch]] minus the appends. Scoped intermediates follow the
+    * query-function contract (caller releases via
+    * [[graft.Caching.releaseAll]] or an enclosing scope). */
+  def probe(spark: SparkSession, cfg: Cfg, batch: DataFrame): DataFrame = {
+    val ev = evidence(spark, cfg, batch, None)
+    // cached like ingestBatch's: the increment reads the pair frames more
+    // than once
+    Seq(ev.cross, ev.self).foreach(Caching.scoped(_))
+    UnionFindTables.probeReport(spark, cfg.root, ev.ids, ev.self, ev.cross)
+      .select(col("doc_id").as(idCol), col("label"), col("n_existing"))
+  }
+
+  /** The pair-evidence stage of [[probe]] ALONE — signature build, index
+    * probe, within-batch pairs — without the would-label union-find tail:
+    * [[probe]]'s cost decomposes as this + the labeling tail, and the
+    * bench records both so a tail regression is attributable (VERDICT r10
+    * item 4, r11 item 2). Output canonicalized to (a < b, score): columns
+    * `doc_a`, `doc_b`, `jaccard` or `vec_a`, `vec_b`, `cos` by kind. */
+  def probePairs(spark: SparkSession, cfg: Cfg, batch: DataFrame): DataFrame = {
+    val ev = evidence(spark, cfg, batch, None)
+    val (a, b) = (idCol.replace("_id", "_a"), idCol.replace("_id", "_b"))
+    ev.cross.select(least(col("batch_id"), col("corpus_id")).as(a),
+        greatest(col("batch_id"), col("corpus_id")).as(b), col(scoreCol))
+      .unionByName(ev.self.select(col("doc_a").as(a), col("doc_b").as(b),
+        col(scoreCol)))
+  }
+
+  /** Current cluster label of every registered item — the read-only
+    * serving face: `labels` joined once against the root-resolved merge
+    * log ([[UnionFind.resolveLabels]]). Lock-free; reads through stranded
+    * compactions via [[StateStore.readOrEmptyRO]]. */
+  def resolvedLabels(spark: SparkSession, cfg: Cfg): DataFrame =
+    UnionFindTables.resolvedLabels(spark, cfg.root)
+      .select(col("doc_id").as(idCol), col("label"))
+
+  /** Pairwise same-cluster check for a list of (a, b) id probes — the
+    * lookup face a sampling or eval pipeline asks per pair. */
+  def sameCluster(spark: SparkSession, cfg: Cfg, probes: DataFrame): DataFrame =
+    UnionFindTables.sameCluster(spark, cfg.root, probes)
+
+  /** Registry health: (n_clusters, n_docs, max_cluster, n_dups) — see
+    * [[UnionFindTables.clusterStats]]. */
+  def clusterStats(spark: SparkSession, cfg: Cfg): DataFrame =
+    UnionFindTables.clusterStats(spark, cfg.root)
+
+  /** 1/|cluster| item-equivalent weights off the registry state
+    * (SemDeDup-style down-weighting for vectors) — see
+    * [[UnionFindTables.samplingWeights]]. */
+  def samplingWeights(spark: SparkSession, cfg: Cfg): DataFrame =
+    UnionFindTables.samplingWeights(spark, cfg.root)
+      .select(col("doc_id").as(idCol), col("label"), col("cluster_size"),
+        col("weight"))
+
+  /** One winning item per cluster given caller-supplied (id, score) rows,
+    * the id in the kind's id column — see [[UnionFindTables.keepBest]]. */
+  def keepBest(spark: SparkSession, cfg: Cfg, scores: DataFrame): DataFrame =
+    UnionFindTables.keepBest(spark, cfg.root, scores, idCol)
+
+  /**
+   * Fold the registry: the signature tables concatenate into the `-1`
+   * partition ([[StateStore.foldBatchPartitions]]); `labels` folds to its
+   * RESOLVED form and `merges` then truncates to empty
+   * ([[UnionFindTables.compactLabels]] — union-find path compression as a
+   * maintenance job, resetting the resolution chain depth to zero). Same
+   * quiesced-maintenance contract as [[CorpusIngest.compact]], enforced by
+   * the same lock.
+   */
+  def compact(spark: SparkSession, cfg: Cfg): Unit =
+    IngestLock.withLock(spark, cfg.root,
+        s"$ownerTag-compact-${java.util.UUID.randomUUID()}",
+        cfg.lockStaleMs) { lock =>
+      val fs = StateStore.fsOf(spark, cfg.root)
+      val (bandsDir, _, _) = bandsAt(spark, cfg, Some(fs))
+      // audit BEFORE any fold: a failure must leave the state untouched
+      UnionFindTables.auditNoOrphans(spark, cfg.root,
+        StateStore.readOrEmpty(spark, payloadPath(cfg), payloadDdl)
+          .select(col(idCol).as("doc_id")), cfg.root)
+      StateStore.markCompactionHwm(fs, cfg.root,
+        StateStore.ledgerMaxBatch(spark, ledgerPath(cfg)))
+      IngestLock.heartbeat(spark, lock)
+      // the signature folds and the label path-compression rewrite
+      // disjoint directories — overlap them on the bounded pool. The
+      // payload folds id-sorted (the CorpusIngest.compact discipline) so
+      // the probe's cap-bounded candidate-id IN pushdown prunes row groups.
+      StateStore.parallelUnits(Seq(
+        () => StateStore.foldBatchPartitions(spark, fs, bandsDir, bandsFold),
+        () => StateStore.foldBatchPartitions(spark, fs, payloadPath(cfg),
+          _.repartitionByRange(col(idCol)).sortWithinPartitions(col(idCol))),
+        () => UnionFindTables.compactLabels(spark, fs, cfg.root)))
+    }
+
+  /** Start the continuous labeling stream (AvailableNow — the reference's
+    * budgeted-run cadence, ST1; same wiring as [[CorpusIngest.start]]). */
+  def start(spark: SparkSession, cfg: Cfg): StreamingQuery =
+    StateStore.start(spark, StructType.fromDDL(sourceDdl), sourceDir(cfg),
+        cfg.maxFilesPerTrigger, cfg.checkpointDir) { (batch, batchId) =>
+      ingestBatch(spark, cfg, batch, batchId): Unit
+    }
+}
+
+/** The MinHash registry over text: `bands/` (doc_id, band, sig) and
+  * `sets/` (doc_id, s, n — the shingle-hash sets the Jaccard verify
+  * reads), the [[CorpusIngest]] index schema. */
+object ClusterRegistry extends SignatureRegistry(idCol = "doc_id",
+    scoreCol = "jaccard", sourceDdl = "doc_id BIGINT, text STRING",
+    ownerTag = "cluster", payloadName = "sets",
+    payloadDdl = "doc_id BIGINT, s ARRAY<BIGINT>, n BIGINT, ingest_batch BIGINT",
+    bandsDdl = "doc_id BIGINT, band INT, sig STRING, ingest_batch BIGINT") {
 
   final case class RegistryConfig(
       /** Streaming source dir of incoming docs (parquet: doc_id, text). */
@@ -430,222 +670,55 @@ object ClusterRegistry {
       threshold: Double = 0.8,
       maxFilesPerTrigger: Int = 20,
       /** [[IngestLock]] staleness window (see [[CorpusIngest]]). */
-      lockStaleMs: Long = 30 * 60 * 1000L)
+      lockStaleMs: Long = 30 * 60 * 1000L) extends RegistryFields
 
-  private def bandsPath(cfg: RegistryConfig) = s"${cfg.root}/bands"
-  private def setsPath(cfg: RegistryConfig) = s"${cfg.root}/sets"
-  def ledgerPath(cfg: RegistryConfig): String = s"${cfg.root}/ledger"
+  type Cfg = RegistryConfig
 
-  private val bandsDdl = "doc_id BIGINT, band INT, sig STRING, ingest_batch BIGINT"
-  private val setsDdl = "doc_id BIGINT, s ARRAY<BIGINT>, n BIGINT, ingest_batch BIGINT"
+  protected def sourceDir(cfg: Cfg): String = cfg.docsDir
 
-  /** Stable lock owner per batch — replay-stable like
-    * [[CorpusIngest.batchLockOwner]]. */
-  def batchLockOwner(cfg: RegistryConfig, batchId: Long): String =
-    s"cluster-batch-$batchId@${cfg.checkpointDir}"
-
-  /**
-   * Label one batch; returns the number of docs labeled. The increment:
-   * build the batch's signatures ONCE, probe the persisted index for
-   * batch↔corpus pairs, self-join the batch bands for within-batch pairs,
-   * then [[UnionFind.increment]] turns the pair evidence into appended
-   * label rows and merge-log rows. All reads exclude the batch's own
-   * partitions, so an at-least-once replay recomputes — and dynamically
-   * overwrites — identical rows.
-   */
-  def ingestBatch(spark: SparkSession, cfg: RegistryConfig, batch: DataFrame,
-      batchId: Long): Long = StateStore.lockedBatch(spark, cfg.root,
-      batchLockOwner(cfg, batchId), cfg.lockStaleMs,
-      Seq(bandsPath(cfg), setsPath(cfg), UnionFindTables.labelsPath(cfg.root),
-        UnionFindTables.mergesPath(cfg.root), ledgerPath(cfg))) { (lock, fs) =>
-    StateStore.requireAboveCompactionHwm(fs, cfg.root, batchId)
-    Caching.scope {
-      def idx(path: String, ddl: String) =
-        StateStore.readOrEmpty(spark, path, ddl)
-          .filter(col("ingest_batch") =!= batchId)
-
-      val docs = Caching.scoped(batch.select(col("doc_id"), col("text")))
-      // ONE signature build: the index probe, the within-batch pair join,
-      // and the index append all read these two cached frames
-      val (bb, bs) = TextOps.minhashIndex(docs, "doc_id", "text")
-      val batchBands = Caching.scoped(bb)
-      val batchSets = Caching.scoped(bs)
-      // cached: each pair frame is read twice (the union-find increment
-      // and the ledger count) — without the cache the candidate join and
-      // Jaccard verify would run twice
-      val crossPairs = Caching.scoped(TextOps.minhashProbeIndexed(
-        idx(bandsPath(cfg), bandsDdl), idx(setsPath(cfg), setsDdl),
-        batchBands, batchSets, cfg.threshold,
-        pushIdLimit = CorpusIngest.MaxProbePushIds))
-      val batchPairs = Caching.scoped(TextOps.minhashNearDupsIndexed(
-        batchBands, batchSets, cfg.threshold))
-      // the pair computation may outlive the staleness window on a huge
-      // batch; refresh BEFORE the first state write
-      IngestLock.heartbeat(spark, lock)
-      val stamp = lit(batchId).as("ingest_batch")
-      // the two signature appends are independent directories over warm
-      // cached frames — overlap their commit latency
-      CorpusIngest.parallelAppends(Seq(
-        bandsPath(cfg) -> batchBands
-          .select(col("doc_id"), col("band"), col("sig"), stamp),
-        setsPath(cfg) -> batchSets
-          .select(col("doc_id"), col("s"), col("n"), stamp)))
-      val nMerges = UnionFindTables.incrementAndAppend(spark, cfg.root,
-        batchId, docs.select(col("doc_id")), batchPairs, crossPairs)
-      val nIn = docs.count()
-      val nPairs = crossPairs.count() + batchPairs.count()
-      spark.createDataFrame(Seq((batchId, nIn, nPairs, nMerges)))
-        .toDF("ingest_batch", "n_in", "n_pairs", "n_merges")
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch").parquet(ledgerPath(cfg))
-      nIn
-    }
+  /** MinHash signs at one fixed shape: the bands dir never moves. */
+  protected def bandsAt(spark: SparkSession, cfg: Cfg,
+      locked: Option[FileSystem]): (String, Int, Int) = {
+    locked.foreach(StateStore.rollbackIfStranded(_, s"${cfg.root}/bands"))
+    (s"${cfg.root}/bands", 0, 0)
   }
-
-  /** Probe a batch WITHOUT labeling it — the read-only what-if face
-    * ([[CorpusIngest.probe]]'s labeling twin): per batch doc, the cluster
-    * it WOULD land in and how many existing clusters its would-be
-    * component touches (`n_existing`; ≥ 2 = a bridge). Takes no lock,
-    * writes nothing; same signature build + index probe cost as
-    * [[ingestBatch]] minus the appends. Scoped intermediates follow the
-    * query-function contract (caller releases via
-    * [[graft.Caching.releaseAll]] or an enclosing scope). */
-  def probe(spark: SparkSession, cfg: RegistryConfig,
-      batch: DataFrame): DataFrame = {
+  protected def sign(batch: DataFrame, bits: Int,
+      bandBits: Int): (DataFrame, DataFrame, DataFrame) = {
     val docs = Caching.scoped(batch.select(col("doc_id"), col("text")))
-    val (bb, bs) = TextOps.minhashIndex(docs, "doc_id", "text")
-    val batchBands = Caching.scoped(bb)
-    val batchSets = Caching.scoped(bs)
-    // cached like ingestBatch's: the increment reads the pair frames more
-    // than once — uncached, the candidate join + verify would re-run
-    val crossPairs = Caching.scoped(TextOps.minhashProbeIndexed(
-      StateStore.readOrEmptyRO(spark, bandsPath(cfg), bandsDdl),
-      StateStore.readOrEmptyRO(spark, setsPath(cfg), setsDdl),
-      batchBands, batchSets, cfg.threshold,
-      pushIdLimit = CorpusIngest.MaxProbePushIds))
-    val batchPairs = Caching.scoped(TextOps.minhashNearDupsIndexed(
-      batchBands, batchSets, cfg.threshold))
-    UnionFindTables.probeReport(
-      StateStore.readOrEmptyRO(spark, UnionFindTables.labelsPath(cfg.root),
-        UnionFindTables.labelsDdl),
-      StateStore.readOrEmptyRO(spark, UnionFindTables.mergesPath(cfg.root),
-        UnionFindTables.mergesDdl),
-      docs.select(col("doc_id")), batchPairs, crossPairs)
+    val (bands, sets) = TextOps.minhashIndex(docs, "doc_id", "text")
+    (docs.select(col("doc_id")), bands, sets)
   }
-
-  /** The pair-evidence stage of [[probe]] ALONE — signature build, index
-    * probe, within-batch pairs — without the would-label union-find tail:
-    * [[probe]]'s cost decomposes as this + the labeling tail, and the
-    * bench records both so a tail regression is attributable (VERDICT r10
-    * item 4). Output canonicalized to (doc_a < doc_b, jaccard). */
-  def probePairs(spark: SparkSession, cfg: RegistryConfig,
-      batch: DataFrame): DataFrame = {
-    val docs = Caching.scoped(batch.select(col("doc_id"), col("text")))
-    val (bb, bs) = TextOps.minhashIndex(docs, "doc_id", "text")
-    val batchBands = Caching.scoped(bb)
-    val batchSets = Caching.scoped(bs)
-    val crossPairs = TextOps.minhashProbeIndexed(
-      StateStore.readOrEmptyRO(spark, bandsPath(cfg), bandsDdl),
-      StateStore.readOrEmptyRO(spark, setsPath(cfg), setsDdl),
-      batchBands, batchSets, cfg.threshold,
-      pushIdLimit = CorpusIngest.MaxProbePushIds)
-    val batchPairs = TextOps.minhashNearDupsIndexed(
-      batchBands, batchSets, cfg.threshold)
-    crossPairs.select(
-        least(col("batch_id"), col("corpus_id")).as("doc_a"),
-        greatest(col("batch_id"), col("corpus_id")).as("doc_b"),
-        col("jaccard"))
-      .unionByName(batchPairs.select(col("doc_a"), col("doc_b"), col("jaccard")))
-  }
-
-  /** Current cluster label of every registered doc — the read-only serving
-    * face: `labels` joined once against the root-resolved merge log
-    * ([[UnionFind.resolveLabels]]). Lock-free; reads through stranded
-    * compactions via [[StateStore.readOrEmptyRO]]. */
-  def resolvedLabels(spark: SparkSession, cfg: RegistryConfig): DataFrame =
-    UnionFindTables.resolvedLabels(spark, cfg.root)
-
-  /** Pairwise same-cluster check for a list of (a, b) doc-id probes — the
-    * lookup face a sampling or eval pipeline asks per pair. Two joins of
-    * the (small) probe frame against the resolved labels. */
-  def sameCluster(spark: SparkSession, cfg: RegistryConfig,
-      probes: DataFrame): DataFrame =
-    UnionFindTables.sameCluster(spark, cfg.root, probes)
-
-  /** Registry health: (n_clusters, n_docs, max_cluster, n_dups) — see
-    * [[UnionFindTables.clusterStats]]. */
-  def clusterStats(spark: SparkSession, cfg: RegistryConfig): DataFrame =
-    UnionFindTables.clusterStats(spark, cfg.root)
-
-  /** 1/|cluster| doc-equivalent weights off the registry state — see
-    * [[UnionFindTables.samplingWeights]]. */
-  def samplingWeights(spark: SparkSession, cfg: RegistryConfig): DataFrame =
-    UnionFindTables.samplingWeights(spark, cfg.root)
-
-  /** One winning doc per cluster given caller-supplied (doc_id, score) —
-    * see [[UnionFindTables.keepBest]]. */
-  def keepBest(spark: SparkSession, cfg: RegistryConfig,
-      scores: DataFrame): DataFrame =
-    UnionFindTables.keepBest(spark, cfg.root, scores)
-
-  /**
-   * Fold the registry: signature tables concatenate into the `-1`
-   * partition ([[StateStore.foldBatchPartitions]]); `labels` folds to
-   * its RESOLVED form and `merges` then truncates to empty
-   * ([[UnionFindTables.compactLabels]] — union-find path compression as a
-   * maintenance job, resetting the resolution chain depth to zero). Same
-   * quiesced-maintenance contract as [[CorpusIngest.compact]], enforced
-   * by the same lock.
-   */
-  def compact(spark: SparkSession, cfg: RegistryConfig): Unit =
-    IngestLock.withLock(spark, cfg.root,
-        s"cluster-compact-${java.util.UUID.randomUUID()}", cfg.lockStaleMs) { lock =>
-      val fs = StateStore.fsOf(spark, cfg.root)
-      // audit BEFORE any fold: a failure must leave the state untouched
-      UnionFindTables.auditNoOrphans(spark, cfg.root,
-        StateStore.readOrEmpty(spark, setsPath(cfg), setsDdl)
-          .select(col("doc_id")), cfg.root)
-      StateStore.markCompactionHwm(fs, cfg.root,
-        StateStore.ledgerMaxBatch(spark, ledgerPath(cfg)))
-      IngestLock.heartbeat(spark, lock)
-      // the signature folds and the label path-compression rewrite
-      // disjoint directories — overlap them on the bounded pool. Folds
-      // are PROBE-KEY-SORTED (the CorpusIngest.compact discipline) so the
-      // ingest probe's cap-bounded IN pushdown prunes row groups.
-      CorpusIngest.parallelUnits(Seq(
-        () => StateStore.foldBatchPartitions(spark, fs, bandsPath(cfg),
-          _.repartitionByRange(col("sig")).sortWithinPartitions(col("sig"))),
-        () => StateStore.foldBatchPartitions(spark, fs, setsPath(cfg),
-          _.repartitionByRange(col("doc_id"))
-            .sortWithinPartitions(col("doc_id"))),
-        () => UnionFindTables.compactLabels(spark, fs, cfg.root)))
-    }
-
-  /** Start the continuous labeling stream (AvailableNow — the reference's
-    * budgeted-run cadence, ST1; same wiring as [[CorpusIngest.start]]). */
-  def start(spark: SparkSession, cfg: RegistryConfig): StreamingQuery =
-    StateStore.start(spark, StructType.fromDDL("doc_id BIGINT, text STRING"),
-        cfg.docsDir, cfg.maxFilesPerTrigger, cfg.checkpointDir) { (batch, batchId) =>
-      ingestBatch(spark, cfg, batch, batchId): Unit
-    }
+  protected def crossPairs(indexBands: DataFrame, indexPayload: DataFrame,
+      bands: DataFrame, payload: DataFrame, threshold: Double): DataFrame =
+    TextOps.minhashProbeIndexed(indexBands, indexPayload, bands, payload,
+      threshold, pushIdLimit = StateStore.MaxProbePushIds)
+  protected def selfPairs(bands: DataFrame, payload: DataFrame,
+      threshold: Double): DataFrame =
+    TextOps.minhashNearDupsIndexed(bands, payload, threshold)
+  /** Probe-key sorted, so the ingest probe's IN pushdown prunes row groups. */
+  override protected def bandsFold(bands: DataFrame): DataFrame =
+    bands.repartitionByRange(col("sig")).sortWithinPartitions(col("sig"))
 }
 
 /**
- * The embedding twin of [[ClusterRegistry]]: semantic near-dup cluster
- * labels over vectors, maintained incrementally per arriving batch — SRP
+ * The SRP registry over vectors: semantic near-dup cluster labels — SRP
  * band codes for the candidate equi-join (the [[EmbeddingIngest]] index
- * schema), exact-cosine verify, and the same [[UnionFindTables]] state.
- * Where [[EmbeddingIngest]] REJECTS near-duplicate vectors at the gate,
- * this registry admits all of them and labels their clusters — the state
- * a semantic-dedup sampler (SemDeDup-style 1/|cluster| down-weighting)
- * reads instead of re-running the pair self-join per refresh.
+ * schema) and an exact-cosine verify. Where [[EmbeddingIngest]] REJECTS
+ * near-duplicate vectors at the gate, this registry admits all of them and
+ * labels their clusters — the state a semantic-dedup sampler
+ * (SemDeDup-style 1/|cluster| down-weighting) reads instead of re-running
+ * the pair self-join per refresh.
  *
- * Tables under `root`: `bands/` (vec_id, band, bv), `vecs/` (vec_id, e,
- * n — the double-cast vectors the cosine verify reads), `labels/`,
- * `merges/`, `ledger/`. Same lock, replay, and compaction contracts as
- * the text face.
+ * Tables under `root`: the bands dir (vec_id, band, bv) resolved through
+ * the width marker ([[SrpBands]]), `vecs/` (vec_id, e, n — the
+ * double-cast vectors the cosine verify reads), `labels/`, `merges/`,
+ * `ledger/`.
  */
-object EmbeddingClusterRegistry {
+object EmbeddingClusterRegistry extends SignatureRegistry(idCol = "vec_id",
+    scoreCol = "cos", sourceDdl = "vec_id BIGINT, embedding ARRAY<FLOAT>",
+    ownerTag = "emb-cluster", payloadName = "vecs",
+    payloadDdl = "vec_id BIGINT, e ARRAY<DOUBLE>, n DOUBLE, ingest_batch BIGINT",
+    bandsDdl = SrpBands.bandsDdl) {
 
   final case class RegistryConfig(
       /** Streaming source dir (parquet: vec_id, embedding ARRAY<FLOAT>). */
@@ -660,250 +733,56 @@ object EmbeddingClusterRegistry {
       bits: Int = 16,
       bandBits: Int = 4,
       maxFilesPerTrigger: Int = 20,
-      lockStaleMs: Long = 30 * 60 * 1000L)
+      lockStaleMs: Long = 30 * 60 * 1000L) extends RegistryFields
 
-  private def bandsPath(cfg: RegistryConfig) = s"${cfg.root}/bands"
-  private def vecsPath(cfg: RegistryConfig) = s"${cfg.root}/vecs"
-  def ledgerPath(cfg: RegistryConfig): String = s"${cfg.root}/ledger"
-  def bandWidthPath(cfg: RegistryConfig): String = s"${cfg.root}/bandwidth"
+  type Cfg = RegistryConfig
 
-  /** (bands dir, bits, bandBits) through the width marker — see
-    * [[CorpusIngest.resolvedSrpBands]] and [[EmbeddingIngest.reband]]'s
-    * crash contract (shared structurally: the directory name ties rows to
-    * their width, the marker swap is the atomic commit). */
-  private def resolvedBands(spark: SparkSession,
-      cfg: RegistryConfig): (String, Int, Int) =
-    CorpusIngest.resolvedSrpBands(spark, cfg.root, bandsPath(cfg),
-      cfg.bits, cfg.bandBits)
+  def bandWidthPath(cfg: RegistryConfig): String = SrpBands.markerPath(cfg.root)
 
-  private val bandsDdl = "vec_id BIGINT, band INT, bv BIGINT, ingest_batch BIGINT"
-  private val vecsDdl =
-    "vec_id BIGINT, e ARRAY<DOUBLE>, n DOUBLE, ingest_batch BIGINT"
+  protected def sourceDir(cfg: Cfg): String = cfg.vecsDir
 
-  def batchLockOwner(cfg: RegistryConfig, batchId: Long): String =
-    s"emb-cluster-batch-$batchId@${cfg.checkpointDir}"
-
-  /** Label one batch of vectors; returns the number labeled. Same
-    * increment shape as [[ClusterRegistry.ingestBatch]], with the SRP
-    * probe/pair faces supplying the pair evidence. */
-  def ingestBatch(spark: SparkSession, cfg: RegistryConfig, batch: DataFrame,
-      batchId: Long): Long = StateStore.lockedBatch(spark, cfg.root,
-      batchLockOwner(cfg, batchId), cfg.lockStaleMs,
-      Seq(vecsPath(cfg), bandWidthPath(cfg), UnionFindTables.labelsPath(cfg.root),
-        UnionFindTables.mergesPath(cfg.root), ledgerPath(cfg))) { (lock, fs) =>
-    val (bandsDir, wBits, wBb) = resolvedBands(spark, cfg)
-    StateStore.rollbackIfStranded(fs, bandsDir)
-    StateStore.requireAboveCompactionHwm(fs, cfg.root, batchId)
-    Caching.scope {
-      def idx(path: String, ddl: String) =
-        StateStore.readOrEmpty(spark, path, ddl)
-          .filter(col("ingest_batch") =!= batchId)
-
-      // ONE signature build feeds probe, self-pairs, and both appends —
-      // signed at the ROOT's width (reband marker), never the cfg's
-      val (bb, bv) = VectorOps.srpIndex(batch, bits = wBits, bandBits = wBb)
-      val batchBands = Caching.scoped(bb)
-      val batchVecs = Caching.scoped(bv)
-      // cached: read by both the increment and the ledger count
-      val crossPairs = Caching.scoped(VectorOps.srpProbeIndexed(
-        idx(bandsDir, bandsDdl), idx(vecsPath(cfg), vecsDdl),
-        batchBands, batchVecs, cfg.threshold,
-        pushIdLimit = CorpusIngest.MaxProbePushIds))
-      val batchPairs = Caching.scoped(VectorOps.srpNearDupsIndexed(
-        batchBands, batchVecs, cfg.threshold)
-        .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
-      IngestLock.heartbeat(spark, lock)
-      val stamp = lit(batchId).as("ingest_batch")
-      // independent directories over warm cached frames — overlap commits
-      CorpusIngest.parallelAppends(Seq(
-        bandsDir -> batchBands
-          .select(col("vec_id"), col("band"), col("bv"), stamp),
-        vecsPath(cfg) -> batchVecs
-          .select(col("vec_id"), col("e"), col("n"), stamp)))
-      val nMerges = UnionFindTables.incrementAndAppend(spark, cfg.root,
-        batchId, batchVecs.select(col("vec_id").as("doc_id")),
-        batchPairs, crossPairs)
-      val nIn = batchVecs.count()
-      val nPairs = crossPairs.count() + batchPairs.count()
-      spark.createDataFrame(Seq((batchId, nIn, nPairs, nMerges)))
-        .toDF("ingest_batch", "n_in", "n_pairs", "n_merges")
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch").parquet(ledgerPath(cfg))
-      nIn
-    }
+  /** Signed at the ROOT's width (the reband marker), never the cfg's. */
+  protected def bandsAt(spark: SparkSession, cfg: Cfg,
+      locked: Option[FileSystem]): (String, Int, Int) =
+    SrpBands.resolved(spark, cfg.root, cfg.bits, cfg.bandBits, locked)
+  protected def sign(batch: DataFrame, bits: Int,
+      bandBits: Int): (DataFrame, DataFrame, DataFrame) = {
+    val (bands, vecs) = VectorOps.srpIndex(batch, bits = bits, bandBits = bandBits)
+    (vecs.select(col("vec_id").as("doc_id")), bands, vecs)
   }
-
-  /** Probe a batch of vectors WITHOUT labeling — the read-only what-if
-    * face, see [[ClusterRegistry.probe]]. Output: (vec_id, label,
-    * n_existing). */
-  def probe(spark: SparkSession, cfg: RegistryConfig,
-      batch: DataFrame): DataFrame = {
-    val (bandsDir, wBits, wBb) = resolvedBands(spark, cfg)
-    val (bb, bv) = VectorOps.srpIndex(batch, bits = wBits, bandBits = wBb)
-    val batchBands = Caching.scoped(bb)
-    val batchVecs = Caching.scoped(bv)
-    // cached like ingestBatch's pair frames (see ClusterRegistry.probe)
-    val crossPairs = Caching.scoped(VectorOps.srpProbeIndexed(
-      StateStore.readOrEmptyRO(spark, bandsDir, bandsDdl),
-      StateStore.readOrEmptyRO(spark, vecsPath(cfg), vecsDdl),
-      batchBands, batchVecs, cfg.threshold,
-      pushIdLimit = CorpusIngest.MaxProbePushIds))
-    val batchPairs = Caching.scoped(VectorOps.srpNearDupsIndexed(
-      batchBands, batchVecs, cfg.threshold)
-      .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
-    UnionFindTables.probeReport(
-      StateStore.readOrEmptyRO(spark, UnionFindTables.labelsPath(cfg.root),
-        UnionFindTables.labelsDdl),
-      StateStore.readOrEmptyRO(spark, UnionFindTables.mergesPath(cfg.root),
-        UnionFindTables.mergesDdl),
-      batchVecs.select(col("vec_id").as("doc_id")), batchPairs, crossPairs)
-      .select(col("doc_id").as("vec_id"), col("label"), col("n_existing"))
-  }
-
-  /** The pair-evidence stage of [[probe]] ALONE — SRP signature build,
-    * index probe, within-batch pairs — without the would-label union-find
-    * tail: the embedding twin of [[ClusterRegistry.probePairs]], so the
-    * probe's bench cost decomposes into attributable halves here too
-    * (VERDICT r11 item 2). Output canonicalized to (vec_a < vec_b, cos). */
-  def probePairs(spark: SparkSession, cfg: RegistryConfig,
-      batch: DataFrame): DataFrame = {
-    val (bandsDir, wBits, wBb) = resolvedBands(spark, cfg)
-    val (bb, bv) = VectorOps.srpIndex(batch, bits = wBits, bandBits = wBb)
-    val batchBands = Caching.scoped(bb)
-    val batchVecs = Caching.scoped(bv)
-    val crossPairs = VectorOps.srpProbeIndexed(
-      StateStore.readOrEmptyRO(spark, bandsDir, bandsDdl),
-      StateStore.readOrEmptyRO(spark, vecsPath(cfg), vecsDdl),
-      batchBands, batchVecs, cfg.threshold,
-      pushIdLimit = CorpusIngest.MaxProbePushIds)
-    val batchPairs = VectorOps.srpNearDupsIndexed(
-      batchBands, batchVecs, cfg.threshold)
-    crossPairs.select(
-        least(col("batch_id"), col("corpus_id")).as("vec_a"),
-        greatest(col("batch_id"), col("corpus_id")).as("vec_b"),
-        col("cos"))
-      .unionByName(batchPairs.select(col("vec_a"), col("vec_b"), col("cos")))
-  }
-
-  /** Current cluster label of every registered vector (vec_id, label) —
-    * read-only, lock-free. */
-  def resolvedLabels(spark: SparkSession, cfg: RegistryConfig): DataFrame =
-    UnionFindTables.resolvedLabels(spark, cfg.root)
-      .select(col("doc_id").as("vec_id"), col("label"))
-
-  /** Pairwise same-cluster probes (a, b) over vec ids. */
-  def sameCluster(spark: SparkSession, cfg: RegistryConfig,
-      probes: DataFrame): DataFrame =
-    UnionFindTables.sameCluster(spark, cfg.root, probes)
-
-  /** Registry health gauge — see [[UnionFindTables.clusterStats]]. */
-  def clusterStats(spark: SparkSession, cfg: RegistryConfig): DataFrame =
-    UnionFindTables.clusterStats(spark, cfg.root)
-
-  /** 1/|cluster| vec-equivalent weights (SemDeDup-style down-weighting)
-    * off the registry state — see [[UnionFindTables.samplingWeights]]. */
-  def samplingWeights(spark: SparkSession, cfg: RegistryConfig): DataFrame =
-    UnionFindTables.samplingWeights(spark, cfg.root)
-      .select(col("doc_id").as("vec_id"), col("label"),
-        col("cluster_size"), col("weight"))
-
-  /** One winning vector per semantic cluster given (doc_id, score) rows —
-    * see [[UnionFindTables.keepBest]]. */
-  def keepBest(spark: SparkSession, cfg: RegistryConfig,
-      scores: DataFrame): DataFrame =
-    UnionFindTables.keepBest(spark, cfg.root, scores)
-
-  /** Fold signature tables, path-compress labels, truncate the merge log —
-    * see [[ClusterRegistry.compact]]. */
-  def compact(spark: SparkSession, cfg: RegistryConfig): Unit =
-    IngestLock.withLock(spark, cfg.root,
-        s"emb-cluster-compact-${java.util.UUID.randomUUID()}",
-        cfg.lockStaleMs) { lock =>
-      val fs = StateStore.fsOf(spark, cfg.root)
-      // roll back a marker stranded mid-reband BEFORE resolving the bands
-      // dir (ADVICE r12) — see EmbeddingIngest.compact for the hazard
-      StateStore.rollbackIfStranded(fs, bandWidthPath(cfg))
-      StateStore.rollbackIfStranded(fs, resolvedBands(spark, cfg)._1)
-      // audit BEFORE any fold: a failure must leave the state untouched
-      UnionFindTables.auditNoOrphans(spark, cfg.root,
-        StateStore.readOrEmpty(spark, vecsPath(cfg), vecsDdl)
-          .select(col("vec_id").as("doc_id")), cfg.root)
-      StateStore.markCompactionHwm(fs, cfg.root,
-        StateStore.ledgerMaxBatch(spark, ledgerPath(cfg)))
-      IngestLock.heartbeat(spark, lock)
-      // disjoint directories — overlap on the bounded pool (see
-      // [[ClusterRegistry.compact]]); the vec store folds vec_id-sorted
-      // so the probe's candidate-id IN pushdown prunes the verify read
-      CorpusIngest.parallelUnits(Seq(
-        () => StateStore.foldBatchPartitions(spark, fs,
-          resolvedBands(spark, cfg)._1),
-        () => StateStore.foldBatchPartitions(spark, fs, vecsPath(cfg),
-          _.repartitionByRange(col("vec_id"))
-            .sortWithinPartitions(col("vec_id"))),
-        () => UnionFindTables.compactLabels(spark, fs, cfg.root)))
-    }
+  protected def crossPairs(indexBands: DataFrame, indexPayload: DataFrame,
+      bands: DataFrame, payload: DataFrame, threshold: Double): DataFrame =
+    VectorOps.srpProbeIndexed(indexBands, indexPayload, bands, payload,
+      threshold, pushIdLimit = StateStore.MaxProbePushIds)
+  protected def selfPairs(bands: DataFrame, payload: DataFrame,
+      threshold: Double): DataFrame =
+    VectorOps.srpNearDupsIndexed(bands, payload, threshold)
+      .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"), col("cos"))
 
   /** Re-sign the registry's SRP index at a new width — the registry twin
-    * of [[EmbeddingIngest.reband]] (same gauge, same marker commit, same
-    * crash contract; the persisted labels/merges are untouched — reband
-    * changes how FUTURE batches find pair evidence, never what was
-    * already labeled). The vectors are persisted (`vecs/`), so the
-    * re-sign is a pure function of root state. The TEXT registry has no
-    * such op by construction: it persists only the one-hash shingle sets,
-    * not the documents, so a MinHash re-sign needs the upstream corpus. */
+    * of [[EmbeddingIngest.reband]] ([[SrpBands.reband]]: same gauge, same
+    * marker commit, same crash contract; the persisted labels/merges are
+    * untouched — reband changes how FUTURE batches find pair evidence,
+    * never what was already labeled). The vectors are persisted (`vecs/`),
+    * so the re-sign is a pure function of root state. The TEXT registry
+    * has no such op by construction: it persists only the one-hash
+    * shingle sets, not the documents, so a MinHash re-sign needs the
+    * upstream corpus. */
   def reband(spark: SparkSession, cfg: RegistryConfig, bits: Int,
-      bandBits: Int): Unit = IngestLock.withLock(spark, cfg.root,
-      s"emb-cluster-reband-${java.util.UUID.randomUUID()}",
-      cfg.lockStaleMs) { lock =>
-    val fs = StateStore.fsOf(spark, cfg.root)
-    Seq(vecsPath(cfg), bandWidthPath(cfg), ledgerPath(cfg))
-      .foreach(StateStore.rollbackIfStranded(fs, _))
-    val (curDir, curBits, curBb) = resolvedBands(spark, cfg)
-    CorpusIngest.sweepSupersededSrpBands(spark, fs, cfg.root, curDir)
-    // no-op at the already-committed width (ADVICE r12) — see
-    // [[EmbeddingIngest.reband]]: re-running at the marker's width must
-    // not swap the LIVE serving directory under lock-free probes
-    if (curBits != bits || curBb != bandBits) {
-      StateStore.markCompactionHwm(fs, cfg.root,
-        StateStore.ledgerMaxBatch(spark, ledgerPath(cfg)))
-      val vecs = StateStore.readOrEmpty(spark, vecsPath(cfg), vecsDdl)
+      bandBits: Int): Unit =
+    SrpBands.reband(spark, cfg.root, s"$ownerTag-reband", cfg.lockStaleMs,
+        cfg.bits, cfg.bandBits, payloadPath(cfg), ledgerPath(cfg), bits,
+        bandBits) {
+      StateStore.readOrEmpty(spark, payloadPath(cfg), payloadDdl)
         .select(col("vec_id"), col("e").as("embedding"))
-      val (nb, _) = VectorOps.srpIndex(vecs, bits = bits, bandBits = bandBits)
-      IngestLock.heartbeat(spark, lock)
-      StateStore.swap(fs, s"${cfg.root}/bands_w${bits}x$bandBits",
-        nb.select(col("vec_id"), col("band"), col("bv"),
-          lit(-1L).as("ingest_batch")),
-        partitionCols = Seq("ingest_batch"))
-      IngestLock.heartbeat(spark, lock)
-      // the commit point: from here every face signs and reads at the
-      // new width
-      StateStore.swap(fs, bandWidthPath(cfg),
-        spark.createDataFrame(Seq((bits, bandBits))).toDF("bits", "band_bits"))
     }
-  }
 
   /** The wired reband policy — the registry twin of
-    * [[EmbeddingIngest.rebandIfNeeded]]: gauge → [[VectorOps.srpRebandPlan]]
-    * → [[reband]] when it fires; safe to call unconditionally at every
-    * maintenance cadence. Returns the width rebanded to, None when
-    * healthy. */
+    * [[EmbeddingIngest.rebandIfNeeded]] ([[SrpBands.rebandIfNeeded]]);
+    * safe to call unconditionally at every maintenance cadence. Returns
+    * the width rebanded to, None when healthy. */
   def rebandIfNeeded(spark: SparkSession,
-      cfg: RegistryConfig): Option[(Int, Int)] = {
-    val fs = StateStore.fsOf(spark, cfg.root)
-    StateStore.rollbackIfStranded(fs, bandWidthPath(cfg))
-    val (dir, bits, bb) = resolvedBands(spark, cfg)
-    StateStore.rollbackIfStranded(fs, dir)
-    val plan = VectorOps.srpRebandPlan(
-      VectorOps.srpBandHealth(StateStore.readOrEmpty(spark, dir, bandsDdl)),
-      bits, bb)
-    plan.foreach { case (nb, nbb) => reband(spark, cfg, nb, nbb) }
-    plan
-  }
-
-  /** Start the continuous labeling stream (AvailableNow). */
-  def start(spark: SparkSession, cfg: RegistryConfig): StreamingQuery =
-    StateStore.start(spark, StructType.fromDDL("vec_id BIGINT, embedding ARRAY<FLOAT>"),
-        cfg.vecsDir, cfg.maxFilesPerTrigger, cfg.checkpointDir) { (batch, batchId) =>
-      ingestBatch(spark, cfg, batch, batchId): Unit
-    }
+      cfg: RegistryConfig): Option[(Int, Int)] =
+    SrpBands.rebandIfNeeded(spark, cfg.root, cfg.bits, cfg.bandBits)(
+      reband(spark, cfg, _, _))
 }

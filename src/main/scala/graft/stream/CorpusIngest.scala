@@ -71,93 +71,6 @@ object CorpusIngest {
   private val phashDdl =
     "doc_id BIGINT, phash BIGINT, band INT, v BIGINT, ingest_batch BIGINT"
 
-  /** Cap on driver-collected ids/hashes pushed into an index scan as an
-    * IN filter (the [[UnionFind]] MaxLabelFetchIds pattern) — at or below
-    * [[graft.Sessions]]'s parquet IN-pushdown threshold, above which the
-    * push degrades to a min/max range that prunes nothing for scattered
-    * keys. Over the cap the probes fall back to the full join — correct
-    * either way, the pushdown only prunes IO. */
-  private[stream] val MaxProbePushIds = 1000
-
-  /** Append independent per-layer partitions CONCURRENTLY (bounded pool):
-    * each job writes a DIFFERENT directory and reads only frames the
-    * caller has already materialized, so the fixed per-commit latency
-    * (task scheduling, footer writes, directory renames) overlaps instead
-    * of serializing — on an 8-layer ingest batch the commits are the
-    * dominant wall-clock. `invokeAll` BLOCKS until every write settles
-    * (success or failure) before rethrowing the first failure: a straggler
-    * writer must never outlive the batch's ingest lock, and a failed batch
-    * replays with every layer rewritten idempotently (per-partition
-    * dynamic overwrite), so partial completion in any order is safe. */
-  private[stream] def parallelAppends(jobs: Seq[(String, DataFrame)]): Unit =
-    parallelUnits(jobs.map { case (path, df) =>
-      () => df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch").parquet(path)
-    })
-
-  /** The bounded-pool runner behind [[parallelAppends]] (and the
-    * compaction folds): every unit must touch a DIFFERENT directory.
-    * `invokeAll` blocks until every unit settles before the first failure
-    * rethrows — no straggler outlives the caller's lock. */
-  private[stream] def parallelUnits(jobs: Seq[() => Unit]): Unit = {
-    if (jobs.sizeIs <= 1) jobs.foreach(_())
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(jobs.size, 8))
-      try {
-        import scala.jdk.CollectionConverters._
-        val tasks: Seq[java.util.concurrent.Callable[Option[Throwable]]] =
-          jobs.map { job =>
-            () => try { job(); None }
-                  catch { case e: Throwable => Some(e) }
-          }
-        val failures = pool.invokeAll(tasks.asJava).asScala.flatMap(_.get())
-        failures.headOption.foreach { e =>
-          // keep the co-failures: three writers dying of three causes must
-          // not collapse to one arbitrary stack trace
-          failures.drop(1).foreach(e.addSuppressed)
-          throw e
-        }
-      } finally pool.shutdown()
-    }
-  }
-
-  /** Resolve (bands dir, bits, bandBits) from an SRP root's width marker —
-    * shared by the SRP-indexed roots ([[EmbeddingIngest]],
-    * [[EmbeddingClusterRegistry]]): reband re-signs the bands into a
-    * width-suffixed directory and swaps the 1-row marker as the atomic
-    * commit, so the directory NAME ties rows to their width and every
-    * face (appends, probes, folds) agrees on both through this resolver.
-    * See [[EmbeddingIngest.reband]] for the full crash contract. */
-  private[stream] def resolvedSrpBands(spark: SparkSession, root: String,
-      legacyDir: String, defBits: Int, defBandBits: Int): (String, Int, Int) =
-    StateStore.readOrEmptyRO(spark, s"$root/bandwidth", "bits INT, band_bits INT")
-      .limit(1).collect().headOption match {
-      case Some(r) =>
-        val (b, bb) = (r.getInt(0), r.getInt(1))
-        (s"$root/bands_w${b}x$bb", b, bb)
-      case None => (legacyDir, defBits, defBandBits)
-    }
-
-  /** Delete band directories a prior reband superseded — called at the
-    * start of the NEXT reband, one maintenance cadence later, so a
-    * lock-free reader that resolved the pre-swap marker never loses its
-    * directory mid-scan (an absent bands dir reads as an EMPTY index —
-    * silently wrong). Matches exact band-directory names only. */
-  private[stream] def sweepSupersededSrpBands(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, root: String,
-      keepDir: String): Unit = {
-    val keep = new org.apache.hadoop.fs.Path(keepDir).getName
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    if (!fs.exists(rootPath)) return
-    fs.listStatus(rootPath).foreach { st =>
-      val name = st.getPath.getName
-      if (name != keep && name.matches("bands(_w\\d+x\\d+)?"))
-        fs.delete(st.getPath, true): Unit
-    }
-  }
-
   // Every partitioned state overwrite sets partitionOverwriteMode=dynamic
   // PER WRITE via DataFrameWriter.option (which takes precedence over the
   // session conf, SPARK-20236). The prior session-conf toggle was not
@@ -229,9 +142,9 @@ object CorpusIngest {
       val hashIdx0 = idx(hashesPath(cfg), "text_hash STRING, ingest_batch BIGINT")
         .select(col("text_hash"))
       val batchHashes = firstOfHash.select(col("text_hash")).distinct()
-        .limit(MaxProbePushIds + 1).collect().map(_.getString(0))
+        .limit(StateStore.MaxProbePushIds + 1).collect().map(_.getString(0))
       val hashIdx =
-        if (batchHashes.length > MaxProbePushIds) hashIdx0
+        if (batchHashes.length > StateStore.MaxProbePushIds) hashIdx0
         else hashIdx0.filter(col("text_hash").isin(batchHashes.toSeq: _*))
       val fresh = Caching.scoped(firstOfHash.join(hashIdx,
         Seq("text_hash"), "left_anti"))
@@ -249,7 +162,8 @@ object CorpusIngest {
       val probeHits = TextOps.minhashProbeIndexed(
         idx(bandsPath(cfg), "doc_id BIGINT, band INT, sig STRING, ingest_batch BIGINT"),
         idx(setsPath(cfg), "doc_id BIGINT, s ARRAY<BIGINT>, n BIGINT, ingest_batch BIGINT"),
-        freshBands, freshSets, cfg.threshold, pushIdLimit = MaxProbePushIds)
+        freshBands, freshSets, cfg.threshold,
+        pushIdLimit = StateStore.MaxProbePushIds)
       // CACHED: the probe subtree above is the only stage that READS the
       // accumulated index (bands + sets scans — cost tracks the ROOT, not
       // the batch), and without the cache every downstream consumer
@@ -293,7 +207,8 @@ object CorpusIngest {
       // accepted's chain materializes here) — overlap them on the bounded
       // pool instead of paying two sequential job latencies
       var (nIn, nAccepted) = (0L, 0L)
-      parallelUnits(Seq(() => nIn = norm.count(), () => nAccepted = accepted.count()))
+      StateStore.parallelUnits(Seq(() => nIn = norm.count(),
+        () => nAccepted = accepted.count()))
       def ofAccepted(f: DataFrame) =
         f.join(accepted.select(col("doc_id")), Seq("doc_id"), "left_semi")
       // the probe-key tables append RANGE-LAID-OUT by their probe key
@@ -303,7 +218,7 @@ object CorpusIngest {
       // NOT-yet-compacted partitions too, not only after the sorted fold
       def ranged(df: DataFrame, c: String) =
         df.repartitionByRange(col(c)).sortWithinPartitions(col(c))
-      parallelAppends(Seq(
+      StateStore.parallelAppends(Seq(
         docsPath(cfg) -> accepted.select(col("doc_id"), col("text"), stamp),
         hashesPath(cfg) -> ranged(
           accepted.select(col("text_hash"), stamp), "text_hash"),
@@ -383,9 +298,9 @@ object CorpusIngest {
     // semi and the anti join only depend on index rows whose hash the
     // batch holds
     val batchHashes = norm.select(col("text_hash")).distinct()
-      .limit(MaxProbePushIds + 1).collect().map(_.getString(0))
+      .limit(StateStore.MaxProbePushIds + 1).collect().map(_.getString(0))
     val hashIdx =
-      if (batchHashes.length > MaxProbePushIds) hashIdx0
+      if (batchHashes.length > StateStore.MaxProbePushIds) hashIdx0
       else hashIdx0.filter(col("text_hash").isin(batchHashes.toSeq: _*))
     val exact = norm.join(hashIdx, Seq("text_hash"), "left_semi")
       .select(col("doc_id"), lit("exact").as("kind"),
@@ -401,7 +316,7 @@ object CorpusIngest {
       StateStore.readOrEmptyRO(spark, setsPath(cfg),
         "doc_id BIGINT, s ARRAY<BIGINT>, n BIGINT, ingest_batch BIGINT"),
       fresh, "doc_id", "text", n = 3, k = 12, r = 3,
-      threshold = cfg.threshold, pushIdLimit = MaxProbePushIds)
+      threshold = cfg.threshold, pushIdLimit = StateStore.MaxProbePushIds)
       .select(col("batch_id").as("doc_id"), lit("near").as("kind"),
         col("corpus_id"), col("jaccard"))
     quality
@@ -605,7 +520,7 @@ object CorpusIngest {
     // never changes them.
     def sortedBy(c: String): DataFrame => DataFrame =
       df => df.repartitionByRange(col(c)).sortWithinPartitions(col(c))
-    parallelUnits(Seq(docsPath(cfg) -> identity[DataFrame] _,
+    StateStore.parallelUnits(Seq(docsPath(cfg) -> identity[DataFrame] _,
         hashesPath(cfg) -> sortedBy("text_hash"),
         bandsPath(cfg) -> sortedBy("sig"),
         setsPath(cfg) -> sortedBy("doc_id"),

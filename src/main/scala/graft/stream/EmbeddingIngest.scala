@@ -91,26 +91,9 @@ object EmbeddingIngest {
       metaProbe: Int = 3)
 
   def vecsPath(cfg: IngestConfig): String = s"${cfg.corpusRoot}/vecs"
-  private def bandsPath(cfg: IngestConfig) = s"${cfg.corpusRoot}/bands"
-  /** The persisted signature-width marker ([[reband]]'s commit point):
-    * 1 row (bits, band_bits), swap-written whole. Present ⇒ the serving
-    * bands live in the width-suffixed directory; absent ⇒ the legacy
-    * `bands/` at the cfg's creation width. */
-  def bandWidthPath(cfg: IngestConfig): String = s"${cfg.corpusRoot}/bandwidth"
-
-  /** Resolve (bands directory, bits, bandBits) for every SRP face: the
-    * width is ROOT STATE, not configuration — a batch signed at a width
-    * other than the index's joins garbage (band values live in different
-    * ranges), so ingest appends, probes, and compaction folds all read
-    * the marker first. The suffixed-directory scheme makes the marker
-    * swap the ATOMIC commit: data is tied to its width by the directory
-    * name, so no marker/bands tear can pair new-width signatures with an
-    * old-width index (the recluster epoch problem, solved structurally
-    * instead of with a stamp check). */
-  private[stream] def resolvedBands(spark: SparkSession,
-      cfg: IngestConfig): (String, Int, Int) =
-    CorpusIngest.resolvedSrpBands(spark, cfg.corpusRoot, bandsPath(cfg),
-      cfg.bits, cfg.bandBits)
+  /** The persisted signature-width marker ([[reband]]'s commit point) —
+    * see [[SrpBands]]. */
+  def bandWidthPath(cfg: IngestConfig): String = SrpBands.markerPath(cfg.corpusRoot)
   def ledgerPath(cfg: IngestConfig): String = s"${cfg.corpusRoot}/ledger"
   /** Append-only IVF assignment rows (vec_id, centroid_id, ingest_batch). */
   def ivfPath(cfg: IngestConfig): String = s"${cfg.corpusRoot}/ivf"
@@ -289,11 +272,10 @@ object EmbeddingIngest {
   def ingestBatch(spark: SparkSession, cfg: IngestConfig, batch: DataFrame,
       batchId: Long): Long = StateStore.lockedBatch(spark, cfg.corpusRoot,
       batchLockOwner(cfg, batchId), cfg.lockStaleMs,
-      Seq(vecsPath(cfg), bandWidthPath(cfg), ledgerPath(cfg), ivfPath(cfg),
-        centroidsPath(cfg), pqPath(cfg), pqCodebooksPath(cfg),
-        metaRoutePath(cfg))) { (lock, rootFs) =>
-    val (bandsDir, wBits, wBb) = resolvedBands(spark, cfg)
-    StateStore.rollbackIfStranded(rootFs, bandsDir)
+      Seq(vecsPath(cfg), ledgerPath(cfg), ivfPath(cfg), centroidsPath(cfg),
+        pqPath(cfg), pqCodebooksPath(cfg), metaRoutePath(cfg))) { (lock, rootFs) =>
+    val (bandsDir, wBits, wBb) = SrpBands.resolved(spark, cfg.corpusRoot,
+      cfg.bits, cfg.bandBits, Some(rootFs))
     StateStore.requireAboveCompactionHwm(rootFs, cfg.corpusRoot, batchId)
     Caching.scope {
       // a replayed batch must not probe the rows IT wrote before crashing
@@ -304,17 +286,15 @@ object EmbeddingIngest {
       // ONE signature build for the whole batch: the index probe, the
       // within-batch dedup, and the accepted-index append all read these
       // two cached frames. Signed at the ROOT's width (reband marker),
-      // never the cfg's — see resolvedBands.
+      // never the cfg's — see SrpBands.
       val (bb, bv) = VectorOps.srpIndex(batch, "vec_id", "embedding",
         wBits, wBb)
       val batchBands = Caching.scoped(bb)
       val batchVecs = Caching.scoped(bv)
-      val indexBands = idx(bandsDir,
-        "vec_id BIGINT, band INT, bv BIGINT, ingest_batch BIGINT")
+      val indexBands = idx(bandsDir, SrpBands.bandsDdl)
       // the stored norm keeps the verify to one cross dot per candidate —
       // no corpus-side norm folds at probe time
-      val indexVecs = idx(vecsPath(cfg),
-        "vec_id BIGINT, embedding ARRAY<FLOAT>, n DOUBLE, ingest_batch BIGINT")
+      val indexVecs = idx(vecsPath(cfg), vecsDdl)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("e"),
           col("n"))
       // probe the persisted index FIRST — same batch-boundary-independence
@@ -322,7 +302,7 @@ object EmbeddingIngest {
       // near-duplicated in the corpus must not act as a within-batch winner
       val probeHits = VectorOps.srpProbeIndexed(
         indexBands, indexVecs, batchBands, batchVecs, cfg.threshold,
-        pushIdLimit = CorpusIngest.MaxProbePushIds)
+        pushIdLimit = StateStore.MaxProbePushIds)
       // CACHED like CorpusIngest's corpusNovelIds (VERDICT r13 item 4):
       // the probe subtree is the one stage whose cost tracks the ROOT
       // (index bands + vecs scans); uncached it would recompute inside
@@ -370,7 +350,7 @@ object EmbeddingIngest {
       // persist the ORIGINAL float embedding (storage stays float-sized)
       // plus the double-fold norm used by every later verify; the two
       // appends are independent directories — overlap their commits
-      CorpusIngest.parallelUnits(Seq(
+      StateStore.parallelUnits(Seq(
         () => nIn = batchVecs.count(),
         () => nAccepted = accepted.count(),
         () => epochRows = priorCents
@@ -550,7 +530,7 @@ object EmbeddingIngest {
       // disjoint directories, both inputs warm — overlap the commits (the
       // parallelAppends discipline); crash anywhere simply replays the
       // batch, whose partition overwrites are byte-identical idempotent
-      CorpusIngest.parallelUnits(Seq(() => writeIvfRows(), () => writePqRows()))
+      StateStore.parallelUnits(Seq(() => writeIvfRows(), () => writePqRows()))
 
       spark.createDataFrame(Seq((batchId, nIn, nAccepted)))
         .toDF("ingest_batch", "n_in", "n_accepted")
@@ -566,18 +546,17 @@ object EmbeddingIngest {
     * vector within `cfg.threshold` of an accepted one. Takes no lock and
     * writes nothing; cost follows the batch. */
   def probe(spark: SparkSession, cfg: IngestConfig, batch: DataFrame): DataFrame = {
-    val (bandsDir, wBits, wBb) = resolvedBands(spark, cfg)
+    val (bandsDir, wBits, wBb) =
+      SrpBands.resolved(spark, cfg.corpusRoot, cfg.bits, cfg.bandBits)
     val (bb, bv) = VectorOps.srpIndex(batch, "vec_id", "embedding",
       wBits, wBb)
-    val indexBands = StateStore.readOrEmptyRO(spark, bandsDir,
-      "vec_id BIGINT, band INT, bv BIGINT, ingest_batch BIGINT")
-    val indexVecs = StateStore.readOrEmptyRO(spark, vecsPath(cfg),
-      "vec_id BIGINT, embedding ARRAY<FLOAT>, n DOUBLE, ingest_batch BIGINT")
+    val indexBands = StateStore.readOrEmptyRO(spark, bandsDir, SrpBands.bandsDdl)
+    val indexVecs = StateStore.readOrEmptyRO(spark, vecsPath(cfg), vecsDdl)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"),
         col("n"))
     VectorOps.srpProbeIndexed(indexBands, indexVecs,
         graft.Caching.scoped(bb), graft.Caching.scoped(bv), cfg.threshold,
-        pushIdLimit = CorpusIngest.MaxProbePushIds)
+        pushIdLimit = StateStore.MaxProbePushIds)
       .select(col("batch_id").as("vec_id"), col("corpus_id"), col("cos"))
   }
 
@@ -790,8 +769,7 @@ object EmbeddingIngest {
     * backfills the codes. Takes no lock, writes nothing. */
   def pqDriftReport(spark: SparkSession, cfg: IngestConfig): DataFrame = {
     val (cbs, codes) = loadCoherentPq(spark, cfg)
-    val vecs = StateStore.readOrEmptyRO(spark, vecsPath(cfg),
-      "vec_id BIGINT, embedding ARRAY<FLOAT>, n DOUBLE, ingest_batch BIGINT")
+    val vecs = StateStore.readOrEmptyRO(spark, vecsPath(cfg), vecsDdl)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     VectorOps.pqReconstructionError(
       cbs.select(col("j"), col("code_id"), col("ce")),
@@ -817,8 +795,7 @@ object EmbeddingIngest {
   def driftReport(spark: SparkSession, cfg: IngestConfig): DataFrame = {
     val (cents, rawAssigns, _) = loadCoherentIvf(spark, cfg)
     val assigns = rawAssigns.select(col("vec_id"), col("centroid_id"))
-    val vecs = StateStore.readOrEmptyRO(spark, vecsPath(cfg),
-      "vec_id BIGINT, embedding ARRAY<FLOAT>, n DOUBLE, ingest_batch BIGINT")
+    val vecs = StateStore.readOrEmptyRO(spark, vecsPath(cfg), vecsDdl)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"),
         col("n"))
     VectorOps.ivfBucketHealth(cents, assigns.join(vecs, Seq("vec_id")))
@@ -846,6 +823,16 @@ object EmbeddingIngest {
    * both deterministically and restores coherence. Assignments land as one
    * `ingest_batch = -1` partition (compacted form); like [[compact]], run
    * this at post-batch maintenance points, not between a batch's replays.
+   *
+   * Refusal window after a mid-group crash: the assignment swap, the
+   * serving-lists rebuild and the PQ half run concurrently, so the lists
+   * (and PQ) can land before the ivf swap. A crash inside that group can
+   * leave new-epoch centroids and lists next to a stale-epoch ivf table.
+   * Lock-free readers stay safe (the lists are coherent; the split layout
+   * refuses loudly), but every [[ingestBatch]] refuses on its epoch
+   * coherence gate until recluster is re-run — expect ingest refusals
+   * after any crash inside the group, not only after one between the
+   * codebook and assignment swaps.
    */
   def recluster(spark: SparkSession, cfg: IngestConfig): Unit =
     IngestLock.withLock(spark, cfg.corpusRoot,
@@ -854,8 +841,7 @@ object EmbeddingIngest {
       Seq(vecsPath(cfg), ivfPath(cfg), centroidsPath(cfg), pqPath(cfg),
           pqCodebooksPath(cfg))
         .foreach(StateStore.rollbackIfStranded(fs, _))
-      val vecs = StateStore.readOrEmpty(spark, vecsPath(cfg),
-          "vec_id BIGINT, embedding ARRAY<FLOAT>, n DOUBLE, ingest_batch BIGINT")
+      val vecs = StateStore.readOrEmpty(spark, vecsPath(cfg), vecsDdl)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("e"),
           col("n"))
         .localCheckpoint()
@@ -963,7 +949,7 @@ object EmbeddingIngest {
         // stamps (readers refuse or fall back), and re-running recluster
         // rewrites everything deterministically.
         IngestLock.heartbeat(spark, lock)
-        CorpusIngest.parallelUnits(Seq(
+        StateStore.parallelUnits(Seq(
           () => StateStore.swap(fs, ivfPath(cfg), assigns,
             partitionCols = Seq("ingest_batch")),
           // rebuild the serving lists against the NEW codebook generation —
@@ -1019,82 +1005,31 @@ object EmbeddingIngest {
     * corpus (the r12 maintenance curve measured a 4.3× ingest cost at
     * 100× corpus under constant 4-bit bands; the occupancy-constant
     * discipline is to widen bands as the corpus grows). Rebuilds the
-    * bands table from the persisted vectors at (bits, bandBits) into a
-    * width-suffixed directory, then swaps the 1-row width marker — the
-    * atomic commit point: ingest appends, probes, and compaction folds
+    * bands from the persisted vectors at (bits, bandBits) and commits by
+    * the width-marker swap; ingest appends, probes, and compaction folds
     * all resolve both the directory and the batch-signature width
-    * through the marker ([[resolvedBands]]), so a new-width batch always
-    * joins a new-width index.
-    *
-    * Crash contract (the recluster pattern, minus the epoch stamp — the
-    * directory NAME ties rows to their width, so no crash can pair a
-    * batch signed at one width with an index at another):
-    *  - died after the hwm mark: replays at or below the mark refuse
-    *    (the rebanded table subsumes them); re-running reband completes;
-    *  - died after the new-directory swap, before the marker: readers
-    *    still resolve the complete old directory; the stray new dir is
-    *    overwritten by the re-run;
-    *  - died after the marker swap: committed — the superseded directory
-    *    is dead weight until the NEXT reband sweeps it
-    *    ([[sweepSupersededBands]], deferred one maintenance cadence so a
-    *    lock-free reader that resolved the pre-swap marker never loses
-    *    its directory mid-scan: an absent bands dir reads as an EMPTY
-    *    index, the one silently-wrong answer a tombstone cannot excuse
-    *    here).
+    * through the marker, so a new-width batch always joins a new-width
+    * index. Crash contract and the same-width no-op: [[SrpBands.reband]].
     */
   def reband(spark: SparkSession, cfg: IngestConfig, bits: Int,
-      bandBits: Int): Unit = IngestLock.withLock(spark, cfg.corpusRoot,
-      s"reband-${java.util.UUID.randomUUID()}", cfg.lockStaleMs) { lock =>
-    val fs = StateStore.fsOf(spark, cfg.corpusRoot)
-    Seq(vecsPath(cfg), bandWidthPath(cfg), ledgerPath(cfg))
-      .foreach(StateStore.rollbackIfStranded(fs, _))
-    val (curDir, curBits, curBb) = resolvedBands(spark, cfg)
-    CorpusIngest.sweepSupersededSrpBands(spark, fs, cfg.corpusRoot, curDir)
-    // no-op at the already-committed width (ADVICE r12): "re-running
-    // reband completes" must NOT swap the LIVE serving directory —
-    // between its swap-out and swap-in renames a lock-free probe that
-    // resolved the marker would read an absent dir as an EMPTY index.
-    // The marker already points at (bits, bandBits); the only remaining
-    // work — sweeping dirs a prior reband superseded — just ran above.
-    if (curBits != bits || curBb != bandBits) {
-      StateStore.markCompactionHwm(fs, cfg.corpusRoot,
-        StateStore.ledgerMaxBatch(spark, ledgerPath(cfg)))
-      val vecs = StateStore.readOrEmpty(spark, vecsPath(cfg), vecsDdl)
+      bandBits: Int): Unit =
+    SrpBands.reband(spark, cfg.corpusRoot, "reband", cfg.lockStaleMs,
+        cfg.bits, cfg.bandBits, vecsPath(cfg), ledgerPath(cfg), bits, bandBits) {
+      StateStore.readOrEmpty(spark, vecsPath(cfg), vecsDdl)
         .select(col("vec_id"), col("embedding"))
-      val (nb, _) = VectorOps.srpIndex(vecs, bits = bits, bandBits = bandBits)
-      IngestLock.heartbeat(spark, lock)
-      StateStore.swap(fs, s"${cfg.corpusRoot}/bands_w${bits}x$bandBits",
-        nb.select(col("vec_id"), col("band"), col("bv"),
-          lit(-1L).as("ingest_batch")),
-        partitionCols = Seq("ingest_batch"))
-      IngestLock.heartbeat(spark, lock)
-      // the commit point: from here every face signs and reads at the
-      // new width
-      StateStore.swap(fs, bandWidthPath(cfg),
-        spark.createDataFrame(Seq((bits, bandBits))).toDF("bits", "band_bits"))
     }
-  }
 
   /** The wired reband policy (VERDICT r12 item 4): gauge the serving
-    * bands ([[VectorOps.srpBandHealth]]), derive the width the occupancy
-    * constant calls for ([[VectorOps.srpRebandPlan]] — fires at 4× the
-    * 64-rows-per-band operating point, well below the measured
-    * 4.3×-ingest-cost failure regime), and run [[reband]] when it fires.
-    * Safe on every maintenance cadence: a healthy index returns None and
-    * nothing runs; the same-width no-op in reband makes double-fires
-    * harmless. Returns the width rebanded to, None when healthy. */
-  def rebandIfNeeded(spark: SparkSession, cfg: IngestConfig): Option[(Int, Int)] = {
-    val fs = StateStore.fsOf(spark, cfg.corpusRoot)
-    StateStore.rollbackIfStranded(fs, bandWidthPath(cfg))
-    val (dir, bits, bb) = resolvedBands(spark, cfg)
-    StateStore.rollbackIfStranded(fs, dir)
-    val plan = VectorOps.srpRebandPlan(
-      VectorOps.srpBandHealth(StateStore.readOrEmpty(spark, dir,
-        "vec_id BIGINT, band INT, bv BIGINT, ingest_batch BIGINT")),
-      bits, bb)
-    plan.foreach { case (nb, nbb) => reband(spark, cfg, nb, nbb) }
-    plan
-  }
+    * bands, derive the width the occupancy constant calls for
+    * ([[VectorOps.srpRebandPlan]] — fires at 4× the 64-rows-per-band
+    * operating point, well below the measured 4.3×-ingest-cost failure
+    * regime), and run [[reband]] when it fires. Safe on every maintenance
+    * cadence: a healthy index returns None and nothing runs; the
+    * same-width no-op in reband makes double-fires harmless. Returns the
+    * width rebanded to, None when healthy. */
+  def rebandIfNeeded(spark: SparkSession, cfg: IngestConfig): Option[(Int, Int)] =
+    SrpBands.rebandIfNeeded(spark, cfg.corpusRoot, cfg.bits, cfg.bandBits)(
+      reband(spark, cfg, _, _))
 
   /** Remove the serving lists without exposing a partial table to the
     * lock-free [[search]]: one atomic rename to a `.__gone` tombstone
@@ -1151,13 +1086,8 @@ object EmbeddingIngest {
     IngestLock.withLock(spark, cfg.corpusRoot,
         s"compact-${java.util.UUID.randomUUID()}", cfg.lockStaleMs) { lock =>
       val fs = StateStore.fsOf(spark, cfg.corpusRoot)
-      // a reband that died inside the marker swap window leaves the
-      // width marker stranded at `.__old` — roll it back BEFORE the first
-      // resolvedBands call, or this fold resolves (and folds) the
-      // superseded pre-reband directory while the live rebanded one goes
-      // unfolded (ADVICE r12); same ordering as ingestBatch/reband
-      StateStore.rollbackIfStranded(fs, bandWidthPath(cfg))
-      StateStore.rollbackIfStranded(fs, resolvedBands(spark, cfg)._1)
+      val (bandsDir, _, _) = SrpBands.resolved(spark, cfg.corpusRoot,
+        cfg.bits, cfg.bandBits, Some(fs))
       // high-water mark before the fold (see StateStore.markCompactionHwm)
       val hwm = StateStore.ledgerMaxBatch(spark, ledgerPath(cfg))
       StateStore.markCompactionHwm(fs, cfg.corpusRoot, hwm)
@@ -1181,14 +1111,13 @@ object EmbeddingIngest {
       // vecs, bands, and the centroid-sorted ivf fold rewrite disjoint
       // directories — overlap them; the pq re-annotation below reads the
       // FOLDED ivf table, so it stays sequential after the group
-      CorpusIngest.parallelUnits(Seq(
+      StateStore.parallelUnits(Seq(
         // vec_id-sorted: the SRP probe's candidate-id IN pushdown prunes
         // the wide embedding column to the touched row groups
         () => StateStore.foldBatchPartitions(spark, fs, vecsPath(cfg),
           _.repartitionByRange(col("vec_id"))
             .sortWithinPartitions(col("vec_id"))),
-        () => StateStore.foldBatchPartitions(spark, fs,
-          resolvedBands(spark, cfg)._1),
+        () => StateStore.foldBatchPartitions(spark, fs, bandsDir),
         () => StateStore.foldBatchPartitions(spark, fs, ivfPath(cfg),
           _.repartitionByRange(col("centroid_id"))
             .sortWithinPartitions(col("centroid_id")))))

@@ -28,6 +28,9 @@ import graft.Frames
  *  - read-or-empty ([[read]], [[readOrEmpty]], [[readOrEmptyRO]]): an absent
  *    dir, or one holding no data files, reads as an empty frame;
  *  - the per-batch partition fold ([[foldBatchPartitions]]);
+ *  - the bounded-pool overlap of independent per-directory writes
+ *    ([[parallelUnits]], [[parallelAppends]]) and the cap on ids pushed
+ *    into an index scan ([[MaxProbePushIds]]);
  *  - the `_compact_hwm` replay fence ([[markCompactionHwm]],
  *    [[requireAboveCompactionHwm]]);
  *  - how a stateful pipeline starts ([[start]]) and how each of its locked
@@ -160,6 +163,58 @@ object StateStore {
       // and are reclaimed by the ContextCleaner once unreferenced
       swap(fs, dir, layout(df).withColumn("ingest_batch", lit(-1L))
         .localCheckpoint(), Seq("ingest_batch"))
+    }
+  }
+
+  /** Cap on driver-collected ids/hashes pushed into an index scan as an
+    * IN filter (the [[UnionFind]] MaxLabelFetchIds pattern) — at or below
+    * [[graft.Sessions]]'s parquet IN-pushdown threshold, above which the
+    * push degrades to a min/max range that prunes nothing for scattered
+    * keys. Over the cap the probes fall back to the full join — correct
+    * either way, the pushdown only prunes IO. */
+  private[stream] val MaxProbePushIds = 1000
+
+  /** Append independent per-layer partitions CONCURRENTLY (bounded pool):
+    * each job writes a DIFFERENT directory and reads only frames the
+    * caller has already materialized, so the fixed per-commit latency
+    * (task scheduling, footer writes, directory renames) overlaps instead
+    * of serializing — on an 8-layer ingest batch the commits are the
+    * dominant wall-clock. `invokeAll` BLOCKS until every write settles
+    * (success or failure) before rethrowing the first failure: a straggler
+    * writer must never outlive the batch's ingest lock, and a failed batch
+    * replays with every layer rewritten idempotently (per-partition
+    * dynamic overwrite), so partial completion in any order is safe. */
+  private[stream] def parallelAppends(jobs: Seq[(String, DataFrame)]): Unit =
+    parallelUnits(jobs.map { case (path, df) =>
+      () => df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("ingest_batch").parquet(path)
+    })
+
+  /** The bounded-pool runner behind [[parallelAppends]] (and the
+    * compaction folds): every unit must touch a DIFFERENT directory.
+    * `invokeAll` blocks until every unit settles before the first failure
+    * rethrows — no straggler outlives the caller's lock. */
+  private[stream] def parallelUnits(jobs: Seq[() => Unit]): Unit = {
+    if (jobs.sizeIs <= 1) jobs.foreach(_())
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(jobs.size, 8))
+      try {
+        import scala.jdk.CollectionConverters._
+        val tasks: Seq[java.util.concurrent.Callable[Option[Throwable]]] =
+          jobs.map { job =>
+            () => try { job(); None }
+                  catch { case e: Throwable => Some(e) }
+          }
+        val failures = pool.invokeAll(tasks.asJava).asScala.flatMap(_.get())
+        failures.headOption.foreach { e =>
+          // keep the co-failures: three writers dying of three causes must
+          // not collapse to one arbitrary stack trace
+          failures.drop(1).foreach(e.addSuppressed)
+          throw e
+        }
+      } finally pool.shutdown()
     }
   }
 
