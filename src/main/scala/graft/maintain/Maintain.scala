@@ -62,8 +62,8 @@ object Maintain {
       appliedWatermark: Long, retainDays: Int, now: Column,
       lockRoot: String,
       lockStaleMs: Long = IngestLock.DefaultStaleMs): Seq[String] =
-    IngestLock.withLock(spark, lockRoot,
-        s"purge-changelog-${java.util.UUID.randomUUID()}", lockStaleMs) { _ =>
+    StateStore.maintenance(spark, lockRoot, "purge-changelog", lockStaleMs,
+        Nil) { h =>
     val p = new Path(changeLogDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) Nil
@@ -75,7 +75,7 @@ object Maintain {
         .filter(col("max_v") <= appliedWatermark &&
           col("max_ts") < now - expr(s"INTERVAL $retainDays DAYS"))
       val doomed = perFile.select(col("file")).collect().map(_.getString(0)).toSeq
-      doomed.foreach(f => fs.delete(new Path(new java.net.URI(f).getPath), false))
+      h.write(doomed.foreach(f => fs.delete(new Path(new java.net.URI(f).getPath), false)))
       doomed
     }
   }
@@ -115,14 +115,13 @@ object Maintain {
       windowPred: Option[Column] = None, lockRoot: Option[String] = None,
       lockStaleMs: Long = IngestLock.DefaultStaleMs): (Long, Long) = {
     val root = lockRoot.getOrElse(new Path(dir).getParent.toString)
-    IngestLock.withLock(spark, root,
-        s"compact-state-${java.util.UUID.randomUUID()}", lockStaleMs) { _ =>
+    StateStore.maintenance(spark, root, "compact-state", lockStaleMs, Nil) { h =>
       val state = StateStore.read(spark, dir, schema)
       val before = state.count()
       val next = Cdc.dedupPurge(state, keyCols, Schemas.VersionCol, windowPred)
         .localCheckpoint(true)
       val after = next.count()
-      StateStore.replace(next, dir)
+      h.write(StateStore.replace(next, dir))
       (before, after)
     }
   }

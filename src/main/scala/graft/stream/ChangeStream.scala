@@ -82,12 +82,11 @@ object ChangeStream {
     else payload
   }
 
-  /** The lock owner of an applying batch is its STABLE identity (checkpoint
-    * + batch id, the [[CorpusIngest.batchLockOwner]] discipline): a crashed
-    * batch's replay by the same stream is the reentrant-refresh case, never
-    * a foreign holder stalled behind its own dead incarnation. */
+  private val LockTag = "cdc"
+
+  /** An applying batch's stable lock owner ([[StateStore.batchOwner]]). */
   def batchLockOwner(cfg: StreamConfig, batchId: Long): String =
-    s"cdc-batch-$batchId@${cfg.checkpointDir}"
+    StateStore.batchOwner(LockTag, cfg.checkpointDir, batchId)
 
   /** Apply one micro-batch: filter → per-table typed apply → ledger append.
     *
@@ -103,13 +102,14 @@ object ChangeStream {
   def applyBatch(spark: SparkSession, cfg: StreamConfig)(
       batch: DataFrame, batchId: Long): Unit =
     if (cfg.dryRun) applyBatchBody(spark, cfg, None)(batch, batchId)
-    else IngestLock.withLock(spark, cfg.stateDir,
-        batchLockOwner(cfg, batchId), cfg.lockStaleMs) { h =>
+    else StateStore.lockedBatch(spark, cfg.stateDir, LockTag, cfg.checkpointDir,
+        batchId, cfg.lockStaleMs, Nil) { h =>
       applyBatchBody(spark, cfg, Some(h))(batch, batchId)
     }
 
+  /** `lock` is None exactly in dry-run mode. */
   private def applyBatchBody(spark: SparkSession, cfg: StreamConfig,
-      lock: Option[IngestLock.Handle])(batch: DataFrame, batchId: Long): Unit = {
+      lock: Option[StateStore.LockedBatch])(batch: DataFrame, batchId: Long): Unit = {
     val filtered = Cdc.filterEvents(batch,
       onlyTables = cfg.onlyTables, onlySchemas = cfg.onlySchemas)
       .persist()
@@ -144,57 +144,61 @@ object ChangeStream {
               now, cfg.deleteMaxAgeDays)
           else Cdc.applyMutable(state, typed, meta.keyCols)
         val dir = s"${cfg.stateDir}/$table"
-        // a long per-table apply must not outlive the staleness window:
-        // refresh (and fail loudly on a stolen lock) BEFORE each state write
-        lock.foreach(IngestLock.heartbeat(spark, _))
-        if (cfg.dryRun) {
-          // S9: inspect, don't apply — counts force the plan like the real write
-          val next = flatNext(readState(spark, cfg, table))
-          System.err.println(s"[dry-run] batch=$batchId table=$table " +
-            s"changes=${typed.count()} next_state_rows=${next.count()}")
-        } else if (cfg.jdbcSink.isDefined) {
-          // sink mode: every table applies to the JDBC target, like the
-          // reference; the sink bypasses applyVersioned's internal guard
-          if (meta.versioned)
-            JdbcState.applyVersioned(guarded, cfg.jdbcSink.get, table, meta.keyCols)
-          else JdbcState.applyMutable(guarded, cfg.jdbcSink.get, table, meta.keyCols)
-        } else meta.partitionCol match {
-          // scale path: tables with a monthly partition column apply
-          // partition-pruned — only touched months are read and rewritten
-          case Some(pc) if meta.versioned =>
-            PartitionedState.applyVersioned(spark, dir, stateSchema(table), typed,
-              meta.keyCols, pc, meta.deleteDateCol, now, cfg.deleteMaxAgeDays)
-          case Some(pc) =>
-            PartitionedState.applyMutable(spark, dir, stateSchema(table), typed,
-              meta.keyCols, pc)
-          case None => StateStore.replace(flatNext(readState(spark, cfg, table)), dir)
-        }
-        // maintained views see the same F7-guarded deltas as the table apply
-        if (!cfg.dryRun) cfg.maintainedAggs.filter(_.table == table).foreach { ma =>
-          val gField = Schemas.tableSchemas(table)(ma.groupCol)
-          val aggSchema = StructType(Seq(
-            gField.copy(name = ma.groupCol),
-            StructField("cnt", LongType, nullable = false),
-            StructField("sum_micro", LongType, nullable = false),
-            StructField("__batch_id", LongType, nullable = false)))
-          val aggDir = ma.dir(cfg.stateDir)
-          val state = StateStore.read(spark, aggDir, aggSchema)
-          // replay guard: foreachBatch is at-least-once — a crash between
-          // this replace and the checkpoint commit replays the batch, and
-          // deltas (unlike the idempotent table applies) would double-apply.
-          // The state records the last applied batch id; a replayed batch is
-          // a no-op. batchIds are monotone per checkpoint, so one max row
-          // decides (tiny state: one row per group)
-          val applied = state.agg(max(col("__batch_id"))).collect().head
-          val alreadyApplied = !applied.isNullAt(0) && applied.getLong(0) >= batchId
-          if (!alreadyApplied) StateStore.replace(
-            Cdc.incrementalAgg(state.drop("__batch_id"), guarded,
-                ma.groupCol, ma.valueCol)
-              .withColumn("__batch_id", lit(batchId)),
-            aggDir)
+        lock match {
+          case None =>
+            // S9: inspect, don't apply — counts force the plan like the real write
+            val next = flatNext(readState(spark, cfg, table))
+            System.err.println(s"[dry-run] batch=$batchId table=$table " +
+              s"changes=${typed.count()} next_state_rows=${next.count()}")
+          // a long per-table apply must not outlive the staleness window:
+          // the handle refreshes (and fails loudly on a stolen lock) BEFORE
+          // each table's state write
+          case Some(h) => h.write {
+            if (cfg.jdbcSink.isDefined) {
+              // sink mode: every table applies to the JDBC target, like the
+              // reference; the sink bypasses applyVersioned's internal guard
+              if (meta.versioned)
+                JdbcState.applyVersioned(guarded, cfg.jdbcSink.get, table, meta.keyCols)
+              else JdbcState.applyMutable(guarded, cfg.jdbcSink.get, table, meta.keyCols)
+            } else meta.partitionCol match {
+              // scale path: tables with a monthly partition column apply
+              // partition-pruned — only touched months are read and rewritten
+              case Some(pc) if meta.versioned =>
+                PartitionedState.applyVersioned(spark, dir, stateSchema(table), typed,
+                  meta.keyCols, pc, meta.deleteDateCol, now, cfg.deleteMaxAgeDays)
+              case Some(pc) =>
+                PartitionedState.applyMutable(spark, dir, stateSchema(table), typed,
+                  meta.keyCols, pc)
+              case None => StateStore.replace(flatNext(readState(spark, cfg, table)), dir)
+            }
+            // maintained views see the same F7-guarded deltas as the table apply
+            cfg.maintainedAggs.filter(_.table == table).foreach { ma =>
+              val gField = Schemas.tableSchemas(table)(ma.groupCol)
+              val aggSchema = StructType(Seq(
+                gField.copy(name = ma.groupCol),
+                StructField("cnt", LongType, nullable = false),
+                StructField("sum_micro", LongType, nullable = false),
+                StructField("__batch_id", LongType, nullable = false)))
+              val aggDir = ma.dir(cfg.stateDir)
+              val state = StateStore.read(spark, aggDir, aggSchema)
+              // replay guard: foreachBatch is at-least-once — a crash between
+              // this replace and the checkpoint commit replays the batch, and
+              // deltas (unlike the idempotent table applies) would double-apply.
+              // The state records the last applied batch id; a replayed batch is
+              // a no-op. batchIds are monotone per checkpoint, so one max row
+              // decides (tiny state: one row per group)
+              val applied = state.agg(max(col("__batch_id"))).collect().head
+              val alreadyApplied = !applied.isNullAt(0) && applied.getLong(0) >= batchId
+              if (!alreadyApplied) StateStore.replace(
+                Cdc.incrementalAgg(state.drop("__batch_id"), guarded,
+                    ma.groupCol, ma.valueCol)
+                  .withColumn("__batch_id", lit(batchId)),
+                aggDir)
+            }
+          }
         }
       }
-      if (!cfg.dryRun && partials.nonEmpty) {
+      for (h <- lock if partials.nonEmpty) h.write {
         // a driver-built row: the parquet ledger and the JDBC mirror hold
         // the same values, `created_at` included
         val ledger = Cdc.ledgerRow(filtered, partials, batchId)

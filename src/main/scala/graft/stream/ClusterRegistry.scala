@@ -37,35 +37,37 @@ private[stream] object UnionFindTables {
   def sizesPath(root: String): String = s"$root/sizes"
   def statsPath(root: String): String = s"$root/stats"
 
-  /** Run the union-find increment for one batch against the pre-batch
-    * state (reads exclude the batch's own partitions — at-least-once
-    * replay recomputes identical rows) and append the resulting label +
-    * merge rows. Returns the appended merge-row count for the ledger. */
-  def incrementAndAppend(spark: SparkSession, root: String, batchId: Long,
-      batchIds: DataFrame, batchPairs: DataFrame,
-      crossPairs: DataFrame): Long = {
-    def idx(path: String, ddl: String) =
-      StateStore.readOrEmpty(spark, path, ddl)
-        .filter(col("ingest_batch") =!= batchId)
+  /** Run the union-find increment for batch `h.batchId` against the
+    * pre-batch state (reads exclude the batch's own partitions —
+    * at-least-once replay recomputes identical rows) and append the
+    * resulting label + merge rows. Returns the appended merge-row count
+    * for the ledger. */
+  def incrementAndAppend(h: StateStore.LockedBatch, batchIds: DataFrame,
+      batchPairs: DataFrame, crossPairs: DataFrame): Long = {
     val (newLabels, newMerges) = UnionFind.increment(
-      idx(labelsPath(root), labelsDdl), idx(mergesPath(root), mergesDdl),
+      h.index(labelsPath(h.root), labelsDdl), h.index(mergesPath(h.root), mergesDdl),
       batchIds, batchPairs, crossPairs)
-    val stamp = lit(batchId).as("ingest_batch")
+    val stamp = lit(h.batchId).as("ingest_batch")
     // sorted by doc_id WITHIN the batch partition: the increment's pruned
     // label fetch (UnionFind.MaxLabelFetchIds) skips row groups by min/max
     // stats, so even not-yet-compacted appends carry useful stats
-    newLabels.select(col("doc_id"), col("label"), stamp)
-      .sortWithinPartitions(col("doc_id"))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch")
-      .parquet(labelsPath(root))
+    h.appends(labelsPath(h.root) -> newLabels
+      .select(col("doc_id"), col("label"), stamp)
+      .sortWithinPartitions(col("doc_id")))
     val mergesOut = Caching.scoped(newMerges)
-    mergesOut.select(col("child"), col("parent"), stamp)
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch")
-      .parquet(mergesPath(root))
+    h.appends(mergesPath(h.root) ->
+      mergesOut.select(col("child"), col("parent"), stamp))
     mergesOut.count()
   }
+
+  /** [[incrementAndAppend]] as its own locked batch of `root` (owner
+    * `union-find-batch-<batchId>@<root>`), for a caller that drives the
+    * increment outside a registry's ingest. */
+  def incrementAndAppend(spark: SparkSession, root: String, batchId: Long,
+      batchIds: DataFrame, batchPairs: DataFrame, crossPairs: DataFrame): Long =
+    StateStore.lockedBatch(spark, root, "union-find", root, batchId,
+        IngestLock.DefaultStaleMs, Nil)(
+      incrementAndAppend(_, batchIds, batchPairs, crossPairs))
 
   /** Current resolved label of every registered id — lock-free, reads
     * through stranded compactions. */
@@ -476,10 +478,9 @@ abstract class SignatureRegistry(protected val idCol: String,
   protected def payloadPath(cfg: Cfg): String = s"${cfg.root}/$payloadName"
   def ledgerPath(cfg: Cfg): String = s"${cfg.root}/ledger"
 
-  /** Stable lock owner per batch — replay-stable like
-    * [[CorpusIngest.batchLockOwner]]. */
+  /** A batch's stable lock owner ([[StateStore.batchOwner]]). */
   def batchLockOwner(cfg: Cfg, batchId: Long): String =
-    s"$ownerTag-batch-$batchId@${cfg.checkpointDir}"
+    StateStore.batchOwner(ownerTag, cfg.checkpointDir, batchId)
 
   private final class Evidence(val bandsDir: String, val ids: DataFrame,
       val bands: DataFrame, val payload: DataFrame, val cross: DataFrame,
@@ -488,16 +489,14 @@ abstract class SignatureRegistry(protected val idCol: String,
   /** ONE signature build of `batch` at the root's band width — the probe,
     * the within-batch pairs and the appends all read the two cached
     * signature frames — and its pair evidence against the persisted index.
-    * `ingest` = the locked batch (fs, batchId): stranded state rolls back
-    * and the index excludes the batch's own partitions, so a replay never
-    * probes the rows it wrote; None = the read-only faces' lock-free reads. */
+    * `ingest` = the locked batch: stranded state rolls back and the index
+    * excludes the batch's own partitions, so a replay never probes the
+    * rows it wrote; None = the read-only faces' lock-free reads. */
   private def evidence(spark: SparkSession, cfg: Cfg, batch: DataFrame,
-      ingest: Option[(FileSystem, Long)]): Evidence = {
-    val (bandsDir, bits, bandBits) = bandsAt(spark, cfg, ingest.map(_._1))
-    def index(path: String, ddl: String) = ingest.fold(
-      StateStore.readOrEmptyRO(spark, path, ddl)) { case (_, batchId) =>
-      StateStore.readOrEmpty(spark, path, ddl).filter(col("ingest_batch") =!= batchId)
-    }
+      ingest: Option[StateStore.LockedBatch]): Evidence = {
+    val (bandsDir, bits, bandBits) = bandsAt(spark, cfg, ingest.map(_.fs))
+    def index(path: String, ddl: String) =
+      ingest.fold(StateStore.readOrEmptyRO(spark, path, ddl))(_.index(path, ddl))
     val (ids, bb, bp) = sign(batch, bits, bandBits)
     val (bands, payload) = (Caching.scoped(bb), Caching.scoped(bp))
     new Evidence(bandsDir, ids, bands, payload,
@@ -516,33 +515,27 @@ abstract class SignatureRegistry(protected val idCol: String,
    * identical rows.
    */
   def ingestBatch(spark: SparkSession, cfg: Cfg, batch: DataFrame,
-      batchId: Long): Long = StateStore.lockedBatch(spark, cfg.root,
-      batchLockOwner(cfg, batchId), cfg.lockStaleMs,
+      batchId: Long): Long = StateStore.lockedBatch(spark, cfg.root, ownerTag,
+      cfg.checkpointDir, batchId, cfg.lockStaleMs,
       Seq(payloadPath(cfg), UnionFindTables.labelsPath(cfg.root),
-        UnionFindTables.mergesPath(cfg.root), ledgerPath(cfg))) { (lock, fs) =>
-    StateStore.requireAboveCompactionHwm(fs, cfg.root, batchId)
+        UnionFindTables.mergesPath(cfg.root), ledgerPath(cfg))) { h =>
     Caching.scope {
-      val ev = evidence(spark, cfg, batch, Some((fs, batchId)))
+      val ev = evidence(spark, cfg, batch, Some(h))
       // cached: each pair frame is read twice (the union-find increment
       // and the ledger count) — uncached, the candidate join and verify
       // would run twice
       Seq(ev.cross, ev.self).foreach(Caching.scoped(_))
-      // the pair computation may outlive the staleness window on a huge
-      // batch; refresh BEFORE the first state write
-      IngestLock.heartbeat(spark, lock)
-      // the two signature appends are independent directories over warm
-      // cached frames — overlap their commit latency
-      StateStore.parallelAppends(Seq(
-        ev.bandsDir -> ev.bands.withColumn("ingest_batch", lit(batchId)),
-        payloadPath(cfg) -> ev.payload.withColumn("ingest_batch", lit(batchId))))
-      val nMerges = UnionFindTables.incrementAndAppend(spark, cfg.root,
-        batchId, ev.ids, ev.self, ev.cross)
+      // the two signature appends run one after the other: overlapped, they
+      // made the union-find increment's first action below run 8 or 9
+      // jobs from run to run for the same batch; in sequence it runs the
+      // same jobs every time
+      h.appends(ev.bandsDir -> ev.bands.withColumn("ingest_batch", lit(batchId)))
+      h.appends(payloadPath(cfg) -> ev.payload.withColumn("ingest_batch", lit(batchId)))
+      val nMerges = UnionFindTables.incrementAndAppend(h, ev.ids, ev.self, ev.cross)
       val nIn = ev.ids.count()
       val nPairs = ev.cross.count() + ev.self.count()
-      spark.createDataFrame(Seq((batchId, nIn, nPairs, nMerges)))
-        .toDF("ingest_batch", "n_in", "n_pairs", "n_merges")
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch").parquet(ledgerPath(cfg))
+      h.ledger(ledgerPath(cfg), "n_in" -> nIn, "n_pairs" -> nPairs,
+        "n_merges" -> nMerges)
       nIn
     }
   }
@@ -620,27 +613,24 @@ abstract class SignatureRegistry(protected val idCol: String,
    * the same lock.
    */
   def compact(spark: SparkSession, cfg: Cfg): Unit =
-    IngestLock.withLock(spark, cfg.root,
-        s"$ownerTag-compact-${java.util.UUID.randomUUID()}",
-        cfg.lockStaleMs) { lock =>
-      val fs = StateStore.fsOf(spark, cfg.root)
+    StateStore.maintenance(spark, cfg.root, s"$ownerTag-compact",
+        cfg.lockStaleMs, Nil) { h =>
+      val fs = h.fs
       val (bandsDir, _, _) = bandsAt(spark, cfg, Some(fs))
       // audit BEFORE any fold: a failure must leave the state untouched
       UnionFindTables.auditNoOrphans(spark, cfg.root,
         StateStore.readOrEmpty(spark, payloadPath(cfg), payloadDdl)
           .select(col(idCol).as("doc_id")), cfg.root)
-      StateStore.markCompactionHwm(fs, cfg.root,
-        StateStore.ledgerMaxBatch(spark, ledgerPath(cfg)))
-      IngestLock.heartbeat(spark, lock)
+      h.markHwm(ledgerPath(cfg))
       // the signature folds and the label path-compression rewrite
       // disjoint directories — overlap them on the bounded pool. The
       // payload folds id-sorted (the CorpusIngest.compact discipline) so
       // the probe's cap-bounded candidate-id IN pushdown prunes row groups.
-      StateStore.parallelUnits(Seq(
+      h.parallel(
         () => StateStore.foldBatchPartitions(spark, fs, bandsDir, bandsFold),
         () => StateStore.foldBatchPartitions(spark, fs, payloadPath(cfg),
           _.repartitionByRange(col(idCol)).sortWithinPartitions(col(idCol))),
-        () => UnionFindTables.compactLabels(spark, fs, cfg.root)))
+        () => UnionFindTables.compactLabels(spark, fs, cfg.root))
     }
 
   /** Start the continuous labeling stream (AvailableNow — the reference's
@@ -670,7 +660,7 @@ object ClusterRegistry extends SignatureRegistry(idCol = "doc_id",
       threshold: Double = 0.8,
       maxFilesPerTrigger: Int = 20,
       /** [[IngestLock]] staleness window (see [[CorpusIngest]]). */
-      lockStaleMs: Long = 30 * 60 * 1000L) extends RegistryFields
+      lockStaleMs: Long = IngestLock.DefaultStaleMs) extends RegistryFields
 
   type Cfg = RegistryConfig
 
@@ -733,7 +723,7 @@ object EmbeddingClusterRegistry extends SignatureRegistry(idCol = "vec_id",
       bits: Int = 16,
       bandBits: Int = 4,
       maxFilesPerTrigger: Int = 20,
-      lockStaleMs: Long = 30 * 60 * 1000L) extends RegistryFields
+      lockStaleMs: Long = IngestLock.DefaultStaleMs) extends RegistryFields
 
   type Cfg = RegistryConfig
 

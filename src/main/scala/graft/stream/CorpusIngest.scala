@@ -45,7 +45,7 @@ object CorpusIngest {
       /** [[IngestLock]] staleness window: a holder whose heartbeat (one per
         * micro-batch) is older than this is presumed dead and its lock
         * broken — the reference's `replication_max_minutes * 2` rule. */
-      lockStaleMs: Long = 30 * 60 * 1000L,
+      lockStaleMs: Long = IngestLock.DefaultStaleMs,
       /** Misra–Gries capacity of the per-batch vocabulary summaries:
         * [[frequentTerms]] guarantees every word above an n/(mgK+1) share
         * of all corpus words is reported. */
@@ -71,25 +71,11 @@ object CorpusIngest {
   private val phashDdl =
     "doc_id BIGINT, phash BIGINT, band INT, v BIGINT, ingest_batch BIGINT"
 
-  // Every partitioned state overwrite sets partitionOverwriteMode=dynamic
-  // PER WRITE via DataFrameWriter.option (which takes precedence over the
-  // session conf, SPARK-20236). The prior session-conf toggle was not
-  // reentrant: with four ingest paths sharing one SparkSession, one path's
-  // finally-restore could flip the mode back to `static` while another
-  // path's partitioned overwrite was being planned — silently truncating
-  // the whole table instead of its own partition (ADVICE round 9).
+  private val LockTag = "ingest"
 
-  /** The lock owner of a batch is its STABLE identity — checkpoint dir +
-    * batch id, not a per-invocation UUID. A batch that crashed after
-    * acquiring the lock is replayed BY THE SAME STREAM under the same
-    * checkpoint and batch id; with a stable owner that restart is the
-    * reentrant-refresh case and proceeds immediately, instead of stalling
-    * behind its own dead incarnation's non-stale lock for up to
-    * `lockStaleMs`. Two processes can only share this owner by running the
-    * same checkpoint's same batch — whose writes are byte-identical
-    * idempotent partition overwrites by construction. */
+  /** A batch's stable lock owner ([[StateStore.batchOwner]]). */
   def batchLockOwner(cfg: IngestConfig, batchId: Long): String =
-    s"ingest-batch-$batchId@${cfg.checkpointDir}"
+    StateStore.batchOwner(LockTag, cfg.checkpointDir, batchId)
 
   /** Ingest one batch; returns the accepted-doc count. Public so batch
     * callers (backfills, tests) can drive it without a streaming query.
@@ -100,21 +86,15 @@ object CorpusIngest {
       batchId: Long): Long =
     // recover every table a crashed compaction may have stranded — not
     // just the index tables the dedup reads, but docs and ledger too
-    StateStore.lockedBatch(spark, cfg.corpusRoot, batchLockOwner(cfg, batchId),
-      cfg.lockStaleMs, Seq(docsPath(cfg), hashesPath(cfg), bandsPath(cfg),
-        setsPath(cfg), postingsPath(cfg), docstatsPath(cfg), mgPath(cfg),
-        phashPath(cfg), ledgerPath(cfg))) { (lock, rootFs) =>
-    StateStore.requireAboveCompactionHwm(rootFs, cfg.corpusRoot, batchId)
+    StateStore.lockedBatch(spark, cfg.corpusRoot, LockTag, cfg.checkpointDir,
+      batchId, cfg.lockStaleMs, Seq(docsPath(cfg), hashesPath(cfg),
+        bandsPath(cfg), setsPath(cfg), postingsPath(cfg), docstatsPath(cfg),
+        mgPath(cfg), phashPath(cfg), ledgerPath(cfg))) { h =>
     // Caching.scope: the batch's cached intermediates are released when the
     // batch ends — and ONLY them, never a concurrent pipeline's caches (a
     // blanket releaseAll here would silently uncache an enclosing job's
     // scoped frames mid-flight)
     Caching.scope {
-      // a replayed batch must not probe the rows IT wrote before crashing —
-      // its decisions would then flip from accept to reject
-      def idx(path: String, ddl: String) =
-        StateStore.readOrEmpty(spark, path, ddl).filter(col("ingest_batch") =!= batchId)
-
       val norm = Caching.scoped(batch
         .select(col("doc_id"), col("text"),
           md5(TextOps.normalizeText(col("text"))).as("text_hash")))
@@ -139,7 +119,7 @@ object CorpusIngest {
       // min/max stats prune the corpus-sized hash table to the touched
       // row groups instead of scanning it per batch (the 100 TB shape;
       // VERDICT r13 item 4's O(root) floor, removed)
-      val hashIdx0 = idx(hashesPath(cfg), "text_hash STRING, ingest_batch BIGINT")
+      val hashIdx0 = h.index(hashesPath(cfg), "text_hash STRING, ingest_batch BIGINT")
         .select(col("text_hash"))
       val batchHashes = firstOfHash.select(col("text_hash")).distinct()
         .limit(StateStore.MaxProbePushIds + 1).collect().map(_.getString(0))
@@ -160,8 +140,8 @@ object CorpusIngest {
       // content that has no accepted near-duplicate at all, and would make
       // the accepted set depend on batch boundaries
       val probeHits = TextOps.minhashProbeIndexed(
-        idx(bandsPath(cfg), "doc_id BIGINT, band INT, sig STRING, ingest_batch BIGINT"),
-        idx(setsPath(cfg), "doc_id BIGINT, s ARRAY<BIGINT>, n BIGINT, ingest_batch BIGINT"),
+        h.index(bandsPath(cfg), "doc_id BIGINT, band INT, sig STRING, ingest_batch BIGINT"),
+        h.index(setsPath(cfg), "doc_id BIGINT, s ARRAY<BIGINT>, n BIGINT, ingest_batch BIGINT"),
         freshBands, freshSets, cfg.threshold,
         pushIdLimit = StateStore.MaxProbePushIds)
       // CACHED: the probe subtree above is the only stage that READS the
@@ -193,10 +173,6 @@ object CorpusIngest {
       val accepted = Caching.scoped(
         ofNovel(fresh).join(inBatchDrops, Seq("doc_id"), "left_anti"))
 
-      // the dedup computation above may outlive the staleness window on a
-      // huge batch; refresh the heartbeat (and fail loudly on a stolen
-      // lock) BEFORE the first state write, not after
-      IngestLock.heartbeat(spark, lock)
       val stamp = lit(batchId).as("ingest_batch")
       // materialize the cached inputs (and the ledger counts) BEFORE the
       // write group: every layer below reads these warm blocks, so the
@@ -218,7 +194,7 @@ object CorpusIngest {
       // NOT-yet-compacted partitions too, not only after the sorted fold
       def ranged(df: DataFrame, c: String) =
         df.repartitionByRange(col(c)).sortWithinPartitions(col(c))
-      StateStore.parallelAppends(Seq(
+      h.appends(
         docsPath(cfg) -> accepted.select(col("doc_id"), col("text"), stamp),
         hashesPath(cfg) -> ranged(
           accepted.select(col("text_hash"), stamp), "text_hash"),
@@ -253,14 +229,8 @@ object CorpusIngest {
         // [[graft.ml.Multimodal.phash]]'s length guard.
         phashPath(cfg) -> graft.ml.Multimodal.phashBands(
             graft.ml.Multimodal.withPayload(accepted, "doc_id", "text"))
-          .select(col("doc_id"), col("phash"), col("band"), col("v"), stamp)))
-      // the ledger row stays LAST and sequential: compaction takes the
-      // ledger max as the high-water mark it fences replays with, so the
-      // row must never land before every data layer it vouches for
-      spark.createDataFrame(Seq((batchId, nIn, nAccepted)))
-        .toDF("ingest_batch", "n_in", "n_accepted")
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch").parquet(ledgerPath(cfg))
+          .select(col("doc_id"), col("phash"), col("band"), col("v"), stamp))
+      h.ledger(ledgerPath(cfg), "n_in" -> nIn, "n_accepted" -> nAccepted)
       nAccepted
     }
   }
@@ -489,14 +459,12 @@ object CorpusIngest {
    * [[StateStore.foldBatchPartitions]].
    */
   def compact(spark: SparkSession, cfg: IngestConfig): Unit =
-    IngestLock.withLock(spark, cfg.corpusRoot,
-        s"compact-${java.util.UUID.randomUUID()}", cfg.lockStaleMs) { lock =>
-    val fs = StateStore.fsOf(spark, cfg.corpusRoot)
+    StateStore.maintenance(spark, cfg.corpusRoot, "compact", cfg.lockStaleMs,
+        Nil) { h =>
     // mark the high-water batch id FIRST (see
     // [[StateStore.markCompactionHwm]]) so a pre-compaction replay can
     // never silently duplicate folded rows
-    StateStore.markCompactionHwm(fs, cfg.corpusRoot,
-      StateStore.ledgerMaxBatch(spark, ledgerPath(cfg)))
+    h.markHwm(ledgerPath(cfg))
     // the ledger stays per-batch: its ingest_batch is the AUDIT key, not
     // provenance, and one row per batch never needs compaction. Every
     // fold rewrites a DIFFERENT table, so they run on the bounded pool —
@@ -509,7 +477,6 @@ object CorpusIngest {
     // (sound: the n/(k+1) bound is additive, see
     // [[graft.text.HeavyHitters.mgSummary]]) — state stays O(1)/O(vocab)
     // forever instead of growing a row set per historical batch
-    IngestLock.heartbeat(spark, lock)
     // probe-key-sorted fold layouts (the buildRegistryState labels
     // precedent): the ingest probes push cap-bounded IN filters into the
     // hashes (by text_hash) and sets (by doc_id) scans, and [[search]]
@@ -520,7 +487,7 @@ object CorpusIngest {
     // never changes them.
     def sortedBy(c: String): DataFrame => DataFrame =
       df => df.repartitionByRange(col(c)).sortWithinPartitions(col(c))
-    StateStore.parallelUnits(Seq(docsPath(cfg) -> identity[DataFrame] _,
+    h.parallel(Seq(docsPath(cfg) -> identity[DataFrame] _,
         hashesPath(cfg) -> sortedBy("text_hash"),
         bandsPath(cfg) -> sortedBy("sig"),
         setsPath(cfg) -> sortedBy("doc_id"),
@@ -532,7 +499,7 @@ object CorpusIngest {
         mgPath(cfg) -> ((df: DataFrame) =>
           df.groupBy(col("word")).agg(sum(col("cnt")).as("cnt"))))
       .map { case (dir, layout) =>
-        () => StateStore.foldBatchPartitions(spark, fs, dir, layout) })
+        () => StateStore.foldBatchPartitions(spark, h.fs, dir, layout) }: _*)
   }
 
   /** Start the continuous ingest (AvailableNow: drain pending files, stop —

@@ -158,9 +158,19 @@ object EmbeddingIngest {
     * range anyway — useless for scattered centroid ids). */
   private[graft] val MaxCentroidPushIds = 1000
 
-  /** Stable lock identity — see [[CorpusIngest.batchLockOwner]]. */
+  private val LockTag = "embed"
+
+  /** A batch's stable lock owner ([[StateStore.batchOwner]]). */
   def batchLockOwner(cfg: IngestConfig, batchId: Long): String =
-    s"embed-batch-$batchId@${cfg.checkpointDir}"
+    StateStore.batchOwner(LockTag, cfg.checkpointDir, batchId)
+
+  /** The refusal of an epoch-torn IVF (or PQ) index, `who` naming the
+    * face or layer that found it. */
+  private def tornIndex(who: String, cbEpoch: Long) = new IllegalStateException(
+    s"IVF index torn ($who): codebook epoch $cbEpoch but stale- or " +
+      "missing-epoch rows exist — a recluster is in flight, died " +
+      "between its two swaps, or the rows predate epoch stamping; " +
+      "retry after it completes (or run recluster() to rebuild)")
 
   /** Fail loudly unless every assignment row's `epoch` equals the
     * codebook's `frozen_batch` — the coherence gate between [[recluster]]'s
@@ -177,11 +187,7 @@ object EmbeddingIngest {
     // must not silently score against a codebook they may not match
     if (!assignEpochs.filter(col("epoch").isNull || col("epoch") =!= cbEpoch)
         .isEmpty)
-      throw new IllegalStateException(
-        s"IVF index torn ($who): codebook epoch $cbEpoch but stale- or " +
-          "missing-epoch rows exist — a recluster is in flight, died " +
-          "between its two swaps, or the rows predate epoch stamping; " +
-          "retry after it completes (or run recluster() to rebuild)")
+      throw tornIndex(who, cbEpoch)
   }
 
   /** Centroids + epoch-checked assignments for the read faces ([[search]],
@@ -254,35 +260,29 @@ object EmbeddingIngest {
     else VectorOps.ivfHierRouting(cents, cfg.metaMod)
   }
 
-  /** Persist the routing table for one codebook generation — called wherever
-    * the codebook itself is (re)written (ingest freeze, [[recluster]]) and
-    * by [[compact]] as the healing point for stale/absent tables. */
-  private def writeMetaRoute(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, cfg: IngestConfig,
-      codebook: DataFrame, epoch: Long): Unit = {
-    StateStore.rollbackIfStranded(fs, metaRoutePath(cfg))
-    val (_, children) = VectorOps.ivfHierRouting(codebook, cfg.metaMod)
-    StateStore.swap(fs, metaRoutePath(cfg),
-      children.select(col("centroid_id"), col("meta_id"),
-        lit(epoch).as("frozen_batch")))
+  /** Derive the routing of one codebook generation, persist it, and return
+    * the (metas, children) frames it derived — called wherever the
+    * codebook itself is (re)written (ingest freeze, [[recluster]]) and by
+    * [[compact]] as the healing point for stale/absent tables. */
+  private def writeMetaRoute(h: StateStore.Locked, cfg: IngestConfig,
+      codebook: DataFrame, epoch: Long): (DataFrame, DataFrame) = {
+    StateStore.rollbackIfStranded(h.fs, metaRoutePath(cfg))
+    val frames = VectorOps.ivfHierRouting(codebook, cfg.metaMod)
+    h.swap(metaRoutePath(cfg), frames._2.select(col("centroid_id"),
+      col("meta_id"), lit(epoch).as("frozen_batch")))
+    frames
   }
 
   /** Ingest one batch; returns the accepted-vector count. Public so batch
     * callers (backfills, tests) can drive it without a streaming query. */
   def ingestBatch(spark: SparkSession, cfg: IngestConfig, batch: DataFrame,
       batchId: Long): Long = StateStore.lockedBatch(spark, cfg.corpusRoot,
-      batchLockOwner(cfg, batchId), cfg.lockStaleMs,
+      LockTag, cfg.checkpointDir, batchId, cfg.lockStaleMs,
       Seq(vecsPath(cfg), ledgerPath(cfg), ivfPath(cfg), centroidsPath(cfg),
-        pqPath(cfg), pqCodebooksPath(cfg), metaRoutePath(cfg))) { (lock, rootFs) =>
+        pqPath(cfg), pqCodebooksPath(cfg), metaRoutePath(cfg))) { h =>
     val (bandsDir, wBits, wBb) = SrpBands.resolved(spark, cfg.corpusRoot,
-      cfg.bits, cfg.bandBits, Some(rootFs))
-    StateStore.requireAboveCompactionHwm(rootFs, cfg.corpusRoot, batchId)
+      cfg.bits, cfg.bandBits, Some(h.fs))
     Caching.scope {
-      // a replayed batch must not probe the rows IT wrote before crashing
-      def idx(path: String, ddl: String) =
-        StateStore.readOrEmpty(spark, path, ddl)
-          .filter(col("ingest_batch") =!= batchId)
-
       // ONE signature build for the whole batch: the index probe, the
       // within-batch dedup, and the accepted-index append all read these
       // two cached frames. Signed at the ROOT's width (reband marker),
@@ -291,10 +291,10 @@ object EmbeddingIngest {
         wBits, wBb)
       val batchBands = Caching.scoped(bb)
       val batchVecs = Caching.scoped(bv)
-      val indexBands = idx(bandsDir, SrpBands.bandsDdl)
+      val indexBands = h.index(bandsDir, SrpBands.bandsDdl)
       // the stored norm keeps the verify to one cross dot per candidate —
       // no corpus-side norm folds at probe time
-      val indexVecs = idx(vecsPath(cfg), vecsDdl)
+      val indexVecs = h.index(vecsPath(cfg), vecsDdl)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("e"),
           col("n"))
       // probe the persisted index FIRST — same batch-boundary-independence
@@ -326,9 +326,6 @@ object EmbeddingIngest {
       val accepted = Caching.scoped(
         ofNovel(batchVecs).join(inBatchDrops, Seq("vec_id"), "left_anti"))
 
-      // refresh the heartbeat (and fail loudly on a stolen lock) BEFORE the
-      // first state write — the dedup above may outlive the stale window
-      IngestLock.heartbeat(spark, lock)
       val stamp = lit(batchId).as("ingest_batch")
       val priorCents = StateStore.readOrEmpty(spark, centroidsPath(cfg), centDdl)
         .filter(col("frozen_batch") =!= batchId)
@@ -350,7 +347,7 @@ object EmbeddingIngest {
       // persist the ORIGINAL float embedding (storage stays float-sized)
       // plus the double-fold norm used by every later verify; the two
       // appends are independent directories — overlap their commits
-      StateStore.parallelUnits(Seq(
+      h.parallel(
         () => nIn = batchVecs.count(),
         () => nAccepted = accepted.count(),
         () => epochRows = priorCents
@@ -358,16 +355,12 @@ object EmbeddingIngest {
           .unionByName(priorPqCb.select(lit(1).as("l"), col("frozen_batch")))
           .filter(col("frozen_batch").isNotNull)
           .groupBy(col("l")).agg(max(col("frozen_batch")).as("m")).collect(),
-        () => accepted
+        () => StateStore.appendBatch(vecsPath(cfg), accepted
           .join(batch.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-          .select(col("vec_id"), col("embedding"), col("n"), stamp)
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("ingest_batch").parquet(vecsPath(cfg)),
-        () => batchBands
+          .select(col("vec_id"), col("embedding"), col("n"), stamp)),
+        () => StateStore.appendBatch(bandsDir, batchBands
           .join(accepted.select(col("vec_id")), Seq("vec_id"), "left_semi")
-          .select(col("vec_id"), col("band"), col("bv"), stamp)
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("ingest_batch").parquet(bandsDir)))
+          .select(col("vec_id"), col("band"), col("bv"), stamp)))
       def layerEpoch(layer: Int): Option[Long] =
         epochRows.find(_.getInt(0) == layer).map(_.getLong(1))
 
@@ -395,12 +388,9 @@ object EmbeddingIngest {
         } else
           (priorCents.select(col("centroid_id"), col("ce"), col("cn")),
            acceptedVecs)
-      if (freezing && !codebook.isEmpty) {
-        IngestLock.heartbeat(spark, lock)
-        // the codebook plan reads vecs/ and the batch, never centroids/
-        StateStore.swap(rootFs, centroidsPath(cfg),
-          codebook.withColumn("frozen_batch", lit(batchId)))
-      }
+      // the codebook plan reads vecs/ and the batch, never centroids/
+      if (freezing && !codebook.isEmpty)
+        h.swap(centroidsPath(cfg), codebook.withColumn("frozen_batch", lit(batchId)))
       // the shared recluster EPOCH: every assignment row carries the
       // frozen_batch of the codebook it was computed against, and the read
       // faces require all-stamps-match (see [[requireEpochCoherent]]) — a
@@ -426,19 +416,14 @@ object EmbeddingIngest {
         def staleOf(df: DataFrame, e: Long, who: String) =
           df.filter(col("epoch").isNull || col("epoch") =!= e)
             .select(lit(who).as("who"))
-        val torn = staleOf(idx(ivfPath(cfg), ivfDdl).select(col("epoch")),
+        val torn = staleOf(h.index(ivfPath(cfg), ivfDdl).select(col("epoch")),
             cbEpoch, "ingest")
-          .unionByName(staleOf(idx(pqPath(cfg), pqDdl).select(col("epoch")),
+          .unionByName(staleOf(h.index(pqPath(cfg), pqDdl).select(col("epoch")),
             pqEpoch, "ingest-pq"))
           .limit(1).collect()
         torn.headOption.foreach { r =>
-          throw new IllegalStateException(
-            s"IVF index torn (${r.getString(0)}): codebook epoch " +
-              s"${if (r.getString(0) == "ingest") cbEpoch else pqEpoch} but " +
-              "stale- or missing-epoch rows exist — a recluster is in " +
-              "flight, died between its two swaps, or the rows predate " +
-              "epoch stamping; retry after it completes (or run " +
-              "recluster() to rebuild)")
+          val who = r.getString(0)
+          throw tornIndex(who, if (who == "ingest") cbEpoch else pqEpoch)
         }
       }
       // two-level router, decided ONCE per codebook generation (hierActive
@@ -448,10 +433,7 @@ object EmbeddingIngest {
       val hierFrames =
         if (!hierActive(cfg, codebook)) None
         else {
-          if (freezing) {
-            IngestLock.heartbeat(spark, lock)
-            writeMetaRoute(spark, rootFs, cfg, codebook, batchId)
-          }
+          if (freezing) writeMetaRoute(h, cfg, codebook, batchId): Unit
           val (m, ch) = hierRouting(spark, cfg, codebook, Some(cbEpoch))
           Some((Caching.scoped(m), Caching.scoped(ch)))
         }
@@ -463,7 +445,6 @@ object EmbeddingIngest {
         case None => VectorOps.ivfAssign(codebook, t)
           .select(col("vec_id"), col("centroid_id"))
       }
-      IngestLock.heartbeat(spark, lock)
       // sorted by centroid_id WITHIN the batch partition: the serve faces
       // push the probes' bucket ids as an IN predicate, and the sort makes
       // parquet row-group min/max stats prune even not-yet-compacted
@@ -478,12 +459,10 @@ object EmbeddingIngest {
       // serialized ~1 s of independent work per batch); the ledger stays
       // last and sequential per its fencing contract
       assignedIvf.count(): Unit
-      def writeIvfRows(): Unit = assignedIvf
+      def writeIvfRows(): Unit = StateStore.appendBatch(ivfPath(cfg), assignedIvf
         .select(col("vec_id"), col("centroid_id"),
           lit(cbEpoch).as("epoch"), stamp)
-        .sortWithinPartitions(col("centroid_id"))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch").parquet(ivfPath(cfg))
+        .sortWithinPartitions(col("centroid_id")))
 
       // ---- PQ code layer: frozen per-subspace codebooks, append-only
       // codes — the same freeze/backfill/append discipline as the IVF
@@ -499,17 +478,13 @@ object EmbeddingIngest {
             m = cfg.pqM, codebookMod = cfg.pqCodebookMod), allVecs)
         } else
           (priorPqCb.select(col("j"), col("code_id"), col("ce")), acceptedVecs)
-      if (pqFreezing && !pqCb.isEmpty) {
-        IngestLock.heartbeat(spark, lock)
-        StateStore.swap(rootFs, pqCodebooksPath(cfg),
-          pqCb.withColumn("frozen_batch", lit(batchId)))
-      }
+      if (pqFreezing && !pqCb.isEmpty)
+        h.swap(pqCodebooksPath(cfg), pqCb.withColumn("frozen_batch", lit(batchId)))
       // the PQ layer carries the same per-generation epoch discipline as
       // the IVF layer: every code row is stamped with the codebook
       // generation it was encoded against, and appends against a torn
       // state (codebooks swapped by a died recluster, codes not) refuse —
       // checked in the fused two-layer coherence gate above
-      IngestLock.heartbeat(spark, lock)
       // bucket annotation for the searchPq code-scan pruning: assignment
       // against the same frozen codebook (a pure function, so the column
       // agrees with the ivf table rows whatever batch wrote them); the
@@ -518,24 +493,19 @@ object EmbeddingIngest {
       // coherence check sees the mismatch after the freeze and falls back
       // to the unpruned scan until compact() re-annotates.
       val pqAssigns = assignTo(pqTargets)
-      def writePqRows(): Unit = VectorOps.pqEncodeWith(pqCb,
-          pqTargets.select(col("vec_id"), col("e")), cfg.pqM)
-        .join(pqAssigns, Seq("vec_id"), "left")
-        .select(col("vec_id"), col("j"), col("code_id"),
-          lit(pqEpoch).as("epoch"), col("centroid_id"),
-          lit(cbEpoch).as("ivf_epoch"), stamp)
-        .sortWithinPartitions(col("centroid_id"))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch").parquet(pqPath(cfg))
+      def writePqRows(): Unit = StateStore.appendBatch(pqPath(cfg),
+        VectorOps.pqEncodeWith(pqCb,
+            pqTargets.select(col("vec_id"), col("e")), cfg.pqM)
+          .join(pqAssigns, Seq("vec_id"), "left")
+          .select(col("vec_id"), col("j"), col("code_id"),
+            lit(pqEpoch).as("epoch"), col("centroid_id"),
+            lit(cbEpoch).as("ivf_epoch"), stamp)
+          .sortWithinPartitions(col("centroid_id")))
       // disjoint directories, both inputs warm — overlap the commits (the
-      // parallelAppends discipline); crash anywhere simply replays the
+      // Locked.appends discipline); crash anywhere simply replays the
       // batch, whose partition overwrites are byte-identical idempotent
-      StateStore.parallelUnits(Seq(() => writeIvfRows(), () => writePqRows()))
-
-      spark.createDataFrame(Seq((batchId, nIn, nAccepted)))
-        .toDF("ingest_batch", "n_in", "n_accepted")
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch").parquet(ledgerPath(cfg))
+      h.parallel(() => writeIvfRows(), () => writePqRows())
+      h.ledger(ledgerPath(cfg), "n_in" -> nIn, "n_accepted" -> nAccepted)
       nAccepted
     }
   }
@@ -835,12 +805,9 @@ object EmbeddingIngest {
    * codebook and assignment swaps.
    */
   def recluster(spark: SparkSession, cfg: IngestConfig): Unit =
-    IngestLock.withLock(spark, cfg.corpusRoot,
-        s"recluster-${java.util.UUID.randomUUID()}", cfg.lockStaleMs) { lock =>
-      val fs = StateStore.fsOf(spark, cfg.corpusRoot)
-      Seq(vecsPath(cfg), ivfPath(cfg), centroidsPath(cfg), pqPath(cfg),
-          pqCodebooksPath(cfg))
-        .foreach(StateStore.rollbackIfStranded(fs, _))
+    StateStore.maintenance(spark, cfg.corpusRoot, "recluster", cfg.lockStaleMs,
+        Seq(vecsPath(cfg), ivfPath(cfg), centroidsPath(cfg), pqPath(cfg),
+          pqCodebooksPath(cfg))) { h =>
       val vecs = StateStore.readOrEmpty(spark, vecsPath(cfg), vecsDdl)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("e"),
           col("n"))
@@ -865,8 +832,7 @@ object EmbeddingIngest {
         // the ledger max is read ONCE and serves both the hwm fence and the
         // serving lists' upto stamp below — the lock is held throughout, so
         // no batch can land in between and the two reads were always equal
-        val ledgerMax = StateStore.ledgerMaxBatch(spark, ledgerPath(cfg))
-        StateStore.markCompactionHwm(fs, cfg.corpusRoot, ledgerMax)
+        val ledgerMax = h.markHwm(ledgerPath(cfg))
         // a fresh epoch per codebook generation, strictly below every prior
         // stamp (first recluster = ReclusterStamp, then −3, −4, …) — BOTH
         // quantization layers' prior stamps resolved in one action over the
@@ -903,9 +869,7 @@ object EmbeddingIngest {
             else VectorOps.kmeansCentroids(vecs, cfg.centroidMod,
               vCount = nVecs))
             .localCheckpoint()
-        IngestLock.heartbeat(spark, lock)
-        StateStore.swap(fs, centroidsPath(cfg),
-          codebook.withColumn("frozen_batch", lit(epoch)))
+        h.swap(centroidsPath(cfg), codebook.withColumn("frozen_batch", lit(epoch)))
         // retrained-generation routing, persisted right after the codebook
         // it routes (same epoch stamp); assignment then runs in the
         // generation's mode — meta-first above the threshold, flat below.
@@ -914,19 +878,7 @@ object EmbeddingIngest {
         // re-derives bit-identically; re-running recluster re-persists it.
         val hierFrames =
           if (!hierActive(cfg, codebook)) None
-          else {
-            IngestLock.heartbeat(spark, lock)
-            // derive the routing ONCE and both persist and return it
-            // (r16: writeMetaRoute re-derived internally — two eager
-            // emptiness guards and two routing aggregations per
-            // recluster for one table)
-            val frames = VectorOps.ivfHierRouting(codebook, cfg.metaMod)
-            StateStore.rollbackIfStranded(fs, metaRoutePath(cfg))
-            StateStore.swap(fs, metaRoutePath(cfg),
-              frames._2.select(col("centroid_id"), col("meta_id"),
-                lit(epoch).as("frozen_batch")))
-            Some(frames)
-          }
+          else Some(writeMetaRoute(h, cfg, codebook, epoch))
         val assigns =
           (hierFrames match {
               case Some((m, ch)) => VectorOps.ivfAssignHierRouted(m, ch, vecs)
@@ -948,15 +900,14 @@ object EmbeddingIngest {
         // swap, every torn combination is already detected by the epoch
         // stamps (readers refuse or fall back), and re-running recluster
         // rewrites everything deterministically.
-        IngestLock.heartbeat(spark, lock)
-        StateStore.parallelUnits(Seq(
-          () => StateStore.swap(fs, ivfPath(cfg), assigns,
+        h.parallel(
+          () => StateStore.swap(h.fs, ivfPath(cfg), assigns,
             partitionCols = Seq("ingest_batch")),
           // rebuild the serving lists against the NEW codebook generation —
           // until this write lands, readers see stale-epoch lists and fall
           // back to the (coherent) split layout; a crash here leaves
           // exactly that state, and re-running recluster is the repair
-          () => writeIvfLists(spark, fs, cfg,
+          () => writeIvfLists(spark, h.fs, cfg,
             StateStore.readOrEmpty(spark, vecsPath(cfg), vecsDdl),
             assigns, epoch, ledgerMax),
           // ---- PQ half of the drift repair (VERDICT r9 item 4): retrain
@@ -967,7 +918,7 @@ object EmbeddingIngest {
                 vecs.select(col("vec_id"), col("e").as("embedding")),
                 m = cfg.pqM, codebookMod = cfg.pqCodebookMod)
               .localCheckpoint()
-            StateStore.swap(fs, pqCodebooksPath(cfg),
+            StateStore.swap(h.fs, pqCodebooksPath(cfg),
               pqCb.withColumn("frozen_batch", lit(pqEpoch)))
             // materialize the UNSORTED codes once, BEFORE the range
             // layout: repartitionByRange's sampling pass re-executes its
@@ -991,9 +942,9 @@ object EmbeddingIngest {
             val codes = codes0
               .repartitionByRange(col("centroid_id"))
               .sortWithinPartitions(col("centroid_id"))
-            StateStore.swap(fs, pqPath(cfg), codes,
+            StateStore.swap(h.fs, pqPath(cfg), codes,
               partitionCols = Seq("ingest_batch"))
-          }))
+          })
       }
     }
 
@@ -1083,14 +1034,13 @@ object EmbeddingIngest {
     * path's pruned base covers everything up to the fold's high-water
     * mark and the per-query delta stays one compaction cadence deep. */
   def compact(spark: SparkSession, cfg: IngestConfig): Unit =
-    IngestLock.withLock(spark, cfg.corpusRoot,
-        s"compact-${java.util.UUID.randomUUID()}", cfg.lockStaleMs) { lock =>
-      val fs = StateStore.fsOf(spark, cfg.corpusRoot)
+    StateStore.maintenance(spark, cfg.corpusRoot, "compact", cfg.lockStaleMs,
+        Nil) { h =>
+      val fs = h.fs
       val (bandsDir, _, _) = SrpBands.resolved(spark, cfg.corpusRoot,
         cfg.bits, cfg.bandBits, Some(fs))
       // high-water mark before the fold (see StateStore.markCompactionHwm)
-      val hwm = StateStore.ledgerMaxBatch(spark, ledgerPath(cfg))
-      StateStore.markCompactionHwm(fs, cfg.corpusRoot, hwm)
+      val hwm = h.markHwm(ledgerPath(cfg))
       // invalidate the serving lists BEFORE the folds: once a batch's
       // partition folds into -1 the old lists' `upto_batch` delta predicate
       // can no longer see it, so a crash between fold and rebuild would
@@ -1106,12 +1056,11 @@ object EmbeddingIngest {
       // listsUsable passes and the base candidate set is silently
       // incomplete. After the rename, readers see either the complete old
       // table or an absent dir (split-layout fallback), never a partial one.
-      deleteListsAtomic(fs, cfg)
-      IngestLock.heartbeat(spark, lock)
+      h.write(deleteListsAtomic(fs, cfg))
       // vecs, bands, and the centroid-sorted ivf fold rewrite disjoint
       // directories — overlap them; the pq re-annotation below reads the
       // FOLDED ivf table, so it stays sequential after the group
-      StateStore.parallelUnits(Seq(
+      h.parallel(
         // vec_id-sorted: the SRP probe's candidate-id IN pushdown prunes
         // the wide embedding column to the touched row groups
         () => StateStore.foldBatchPartitions(spark, fs, vecsPath(cfg),
@@ -1120,15 +1069,14 @@ object EmbeddingIngest {
         () => StateStore.foldBatchPartitions(spark, fs, bandsDir),
         () => StateStore.foldBatchPartitions(spark, fs, ivfPath(cfg),
           _.repartitionByRange(col("centroid_id"))
-            .sortWithinPartitions(col("centroid_id")))))
+            .sortWithinPartitions(col("centroid_id"))))
       val cents = StateStore.readOrEmpty(spark, centroidsPath(cfg), centDdl)
       val cbEpoch = cents.agg(max(col("frozen_batch"))).first
       // fold the PQ codes RE-ANNOTATED against the post-fold assignments
       // and bucket-clustered — the maintenance point that repairs any
       // stale/null bucket columns (pre-freeze appends) so searchPq's
       // pruned scan is coherent again
-      IngestLock.heartbeat(spark, lock)
-      StateStore.foldBatchPartitions(spark, fs, pqPath(cfg), { df =>
+      h.write(StateStore.foldBatchPartitions(spark, fs, pqPath(cfg), { df =>
         if (cbEpoch.isNullAt(0)) df
         else df.drop("centroid_id", "ivf_epoch")
           .join(StateStore.readOrEmpty(spark, ivfPath(cfg), ivfDdl)
@@ -1136,7 +1084,7 @@ object EmbeddingIngest {
           .withColumn("ivf_epoch", lit(cbEpoch.getLong(0)))
           .repartitionByRange(col("centroid_id"))
           .sortWithinPartitions(col("centroid_id"))
-      })
+      }))
       if (!cbEpoch.isNullAt(0)) {
         val assigns = StateStore.readOrEmpty(spark, ivfPath(cfg), ivfDdl)
         requireEpochCoherent(cbEpoch.getLong(0),
@@ -1151,15 +1099,12 @@ object EmbeddingIngest {
         if (hierActive(cfg, centsOnly)) {
           val stamp = StateStore.readOrEmpty(spark, metaRoutePath(cfg),
             routeDdl).select(col("frozen_batch")).limit(1).collect()
-          if (!(stamp.nonEmpty && stamp.head.getLong(0) == cbEpoch.getLong(0))) {
-            IngestLock.heartbeat(spark, lock)
-            writeMetaRoute(spark, fs, cfg, centsOnly, cbEpoch.getLong(0))
-          }
+          if (!(stamp.nonEmpty && stamp.head.getLong(0) == cbEpoch.getLong(0)))
+            writeMetaRoute(h, cfg, centsOnly, cbEpoch.getLong(0)): Unit
         }
-        IngestLock.heartbeat(spark, lock)
-        writeIvfLists(spark, fs, cfg,
+        h.write(writeIvfLists(spark, fs, cfg,
           StateStore.readOrEmpty(spark, vecsPath(cfg), vecsDdl),
-          assigns, cbEpoch.getLong(0), hwm)
+          assigns, cbEpoch.getLong(0), hwm))
       }
     }
 

@@ -199,9 +199,10 @@ object IngestLock {
     }
   }
 
-  /** Acquire → body(handle) → release, the shape every mutating corpus
-    * operation uses; the handle lets long bodies [[heartbeat]] before
-    * critical sections so a slow-but-alive holder is never presumed dead. */
+  /** Acquire → body(handle) → release. Mutators reach it only through
+    * [[StateStore.lockedBatch]] and [[StateStore.maintenance]], whose
+    * handle [[heartbeat]]s before every state write so a slow-but-alive
+    * holder is never presumed dead. */
   def withLock[A](spark: SparkSession, root: String, owner: String,
       staleMs: Long)(body: Handle => A): A = {
     val h = acquire(spark, root, owner, staleMs)

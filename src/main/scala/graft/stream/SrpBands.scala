@@ -73,24 +73,19 @@ object SrpBands {
   def reband(spark: SparkSession, root: String, ownerPrefix: String,
       lockStaleMs: Long, defaultBits: Int, defaultBandBits: Int,
       vecsPath: String, ledgerPath: String, bits: Int, bandBits: Int)(
-      vecs: => DataFrame): Unit = IngestLock.withLock(spark, root,
-      s"$ownerPrefix-${java.util.UUID.randomUUID()}", lockStaleMs) { lock =>
-    val fs = StateStore.fsOf(spark, root)
-    Seq(vecsPath, ledgerPath).foreach(StateStore.rollbackIfStranded(fs, _))
+      vecs: => DataFrame): Unit = StateStore.maintenance(spark, root,
+      ownerPrefix, lockStaleMs, Seq(vecsPath, ledgerPath)) { h =>
     val (curDir, curBits, curBb) =
-      resolved(spark, root, defaultBits, defaultBandBits, Some(fs))
-    sweepSuperseded(fs, root, curDir)
+      resolved(spark, root, defaultBits, defaultBandBits, Some(h.fs))
+    h.write(sweepSuperseded(h.fs, root, curDir))
     if (curBits != bits || curBb != bandBits) {
-      StateStore.markCompactionHwm(fs, root,
-        StateStore.ledgerMaxBatch(spark, ledgerPath))
+      h.markHwm(ledgerPath)
       val (nb, _) = VectorOps.srpIndex(vecs, bits = bits, bandBits = bandBits)
-      IngestLock.heartbeat(spark, lock)
-      StateStore.swap(fs, widthDir(root, bits, bandBits),
+      h.swap(widthDir(root, bits, bandBits),
         nb.withColumn("ingest_batch", lit(-1L)), partitionCols = Seq("ingest_batch"))
-      IngestLock.heartbeat(spark, lock)
       // the commit point: from here every face signs and reads at the
       // new width
-      StateStore.swap(fs, markerPath(root),
+      h.swap(markerPath(root),
         spark.createDataFrame(Seq((bits, bandBits))).toDF("bits", "band_bits"))
     }
   }

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.Frames
 
@@ -28,13 +28,15 @@ import graft.Frames
  *  - read-or-empty ([[read]], [[readOrEmpty]], [[readOrEmptyRO]]): an absent
  *    dir, or one holding no data files, reads as an empty frame;
  *  - the per-batch partition fold ([[foldBatchPartitions]]);
- *  - the bounded-pool overlap of independent per-directory writes
- *    ([[parallelUnits]], [[parallelAppends]]) and the cap on ids pushed
- *    into an index scan ([[MaxProbePushIds]]);
+ *  - the per-batch partition append ([[appendBatch]]), the bounded-pool
+ *    overlap of independent per-directory writes ([[parallelUnits]]) and
+ *    the cap on ids pushed into an index scan ([[MaxProbePushIds]]);
  *  - the `_compact_hwm` replay fence ([[markCompactionHwm]],
  *    [[requireAboveCompactionHwm]]);
- *  - how a stateful pipeline starts ([[start]]) and how each of its locked
- *    batches begins ([[lockedBatch]]).
+ *  - the locked root ([[Locked]], [[LockedBatch]]): the lock owners
+ *    ([[lockedBatch]], [[maintenance]]), the heartbeat before every state
+ *    write, the replay-excluding index read and the ledger row;
+ *  - how a stateful pipeline starts ([[start]]).
  */
 object StateStore {
 
@@ -174,25 +176,21 @@ object StateStore {
     * either way, the pushdown only prunes IO. */
   private[stream] val MaxProbePushIds = 1000
 
-  /** Append independent per-layer partitions CONCURRENTLY (bounded pool):
-    * each job writes a DIFFERENT directory and reads only frames the
-    * caller has already materialized, so the fixed per-commit latency
-    * (task scheduling, footer writes, directory renames) overlaps instead
-    * of serializing — on an 8-layer ingest batch the commits are the
-    * dominant wall-clock. `invokeAll` BLOCKS until every write settles
-    * (success or failure) before rethrowing the first failure: a straggler
-    * writer must never outlive the batch's ingest lock, and a failed batch
-    * replays with every layer rewritten idempotently (per-partition
-    * dynamic overwrite), so partial completion in any order is safe. */
-  private[stream] def parallelAppends(jobs: Seq[(String, DataFrame)]): Unit =
-    parallelUnits(jobs.map { case (path, df) =>
-      () => df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch").parquet(path)
-    })
+  /** Dynamic-overwrite `df`'s `ingest_batch` partitions under `path` — the
+    * append every per-batch layer (and ledger row) makes. The mode is set
+    * PER WRITE (the option beats the session conf, SPARK-20236): a
+    * session-conf toggle is not reentrant across pipelines sharing one
+    * session, and a `static` overwrite would truncate the whole table
+    * instead of the batch's own partition. A replayed batch rewrites
+    * exactly its partition, so the append is idempotent. Callers hold the
+    * root's lock ([[Locked.appends]], [[Locked.ledger]], or a unit of
+    * [[Locked.parallel]]). */
+  private[stream] def appendBatch(path: String, df: DataFrame): Unit =
+    df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("ingest_batch").parquet(path)
 
-  /** The bounded-pool runner behind [[parallelAppends]] (and the
-    * compaction folds): every unit must touch a DIFFERENT directory.
+  /** The bounded-pool runner behind [[Locked.appends]] and
+    * [[Locked.parallel]]: every unit must touch a DIFFERENT directory.
     * `invokeAll` blocks until every unit settles before the first failure
     * rethrows — no straggler outlives the caller's lock. */
   private[stream] def parallelUnits(jobs: Seq[() => Unit]): Unit = {
@@ -277,18 +275,123 @@ object StateStore {
         "would duplicate them; advance the stream checkpoint past the mark")
   }
 
-  /** The prologue of every locked ingest batch: hold `root`'s
-    * [[IngestLock]] under the batch's stable `owner` for the body's
-    * duration, then roll back every table in `tables` a crashed swap
-    * stranded. `body` gets the lock (to heartbeat before state writes) and
-    * the root's filesystem. */
+  // ---- the locked root ----------------------------------------------------
+
+  /** A root held under its [[IngestLock]]: the one door to its state
+    * writes. Every write method refreshes the heartbeat first (and throws
+    * [[IngestLock.LockHeldException]] when the lock was stolen), so no
+    * write lands on a root this run no longer holds. */
+  class Locked private[stream] (protected val spark: SparkSession,
+      lock: IngestLock.Handle) {
+    val root: String = lock.root
+    val fs: FileSystem = fsOf(spark, root)
+
+    protected def beat(): Unit = IngestLock.heartbeat(spark, lock)
+
+    /** [[StateStore.swap]] `df` in at `dir`. */
+    def swap(dir: String, df: DataFrame, partitionCols: Seq[String] = Nil): Unit = {
+      beat()
+      StateStore.swap(fs, dir, df, partitionCols)
+    }
+
+    /** [[appendBatch]] independent per-layer partitions CONCURRENTLY
+      * (bounded pool): each job writes a DIFFERENT directory and reads only
+      * frames the caller has already materialized, so the fixed per-commit
+      * latency (task scheduling, footer writes, directory renames) overlaps
+      * instead of serializing — on an 8-layer ingest batch the commits are
+      * the dominant wall-clock. Every write settles before the first
+      * failure rethrows ([[parallelUnits]]), and a failed batch replays
+      * with every layer rewritten idempotently, so partial completion in
+      * any order is safe. */
+    def appends(jobs: (String, DataFrame)*): Unit = {
+      beat()
+      parallelUnits(jobs.map { case (path, df) => () => appendBatch(path, df) })
+    }
+
+    /** Run independent units on the bounded pool ([[parallelUnits]]) behind
+      * ONE heartbeat: concurrent heartbeats of the same owner race each
+      * other's in-place rewrite, so the units themselves must not beat. */
+    def parallel(units: (() => Unit)*): Unit = {
+      beat()
+      parallelUnits(units)
+    }
+
+    /** Any other write — a per-table apply, a JDBC sink, a file delete. */
+    def write[A](body: => A): A = {
+      beat()
+      body
+    }
+
+    /** Mark the compaction high-water mark at the ledger's max batch id and
+      * return it ([[markCompactionHwm]]: marked BEFORE the fold). */
+    def markHwm(ledgerPath: String): Long = {
+      beat()
+      val hwm = ledgerMaxBatch(spark, ledgerPath)
+      markCompactionHwm(fs, root, hwm)
+      hwm
+    }
+  }
+
+  /** A [[Locked]] root inside one stream batch `batchId`. */
+  final class LockedBatch private[stream] (session: SparkSession,
+      lock: IngestLock.Handle, val batchId: Long) extends Locked(session, lock) {
+
+    /** The persisted index at `path` MINUS this batch's own partition: a
+      * replayed batch must not probe the rows it wrote before crashing, or
+      * its decisions flip from accept to reject. */
+    def index(path: String, ddl: String): DataFrame =
+      readOrEmpty(spark, path, ddl).filter(col("ingest_batch") =!= batchId)
+
+    /** The batch's one audit row (`ingest_batch`, then `counts` in order,
+      * all BIGINT) appended under its own partition of `path`. Callers
+      * write it LAST and sequentially: compaction takes the ledger max as
+      * the high-water mark it fences replays with, so the row must never
+      * land before every data layer it vouches for. */
+    def ledger(path: String, counts: (String, Long)*): Unit = {
+      beat()
+      val row = ("ingest_batch" -> batchId) +: counts
+      appendBatch(path, spark.createDataFrame(
+        java.util.List.of(org.apache.spark.sql.Row.fromSeq(row.map(_._2))),
+        StructType(row.map { case (n, _) => StructField(n, LongType, nullable = false) })))
+    }
+  }
+
+  /** The lock owner of a stream batch is its STABLE identity — `tag`,
+    * batch id and checkpoint dir, never a per-invocation UUID. A batch that
+    * crashed holding the lock is replayed BY THE SAME STREAM under the same
+    * checkpoint and batch id; with a stable owner that restart is the
+    * reentrant-refresh case and proceeds at once, instead of stalling
+    * behind its own dead incarnation's non-stale lock for up to the stale
+    * window. Two processes share this owner only by running the same
+    * checkpoint's same batch — whose writes are byte-identical idempotent
+    * partition overwrites by construction. */
+  private[stream] def batchOwner(tag: String, checkpointDir: String,
+      batchId: Long): String = s"$tag-batch-$batchId@$checkpointDir"
+
+  /** Hold `root` for one stream batch: lock under [[batchOwner]], roll back
+    * every table in `tables` a crashed swap stranded, and refuse a batch
+    * at or below the compaction high-water mark. */
   private[stream] def lockedBatch[A](spark: SparkSession, root: String,
-      owner: String, staleMs: Long, tables: Seq[String])(
-      body: (IngestLock.Handle, FileSystem) => A): A =
-    IngestLock.withLock(spark, root, owner, staleMs) { lock =>
-      val fs = fsOf(spark, root)
-      tables.foreach(rollbackIfStranded(fs, _))
-      body(lock, fs)
+      tag: String, checkpointDir: String, batchId: Long, staleMs: Long,
+      tables: Seq[String])(body: LockedBatch => A): A =
+    IngestLock.withLock(spark, root, batchOwner(tag, checkpointDir, batchId),
+        staleMs) { lock =>
+      val h = new LockedBatch(spark, lock, batchId)
+      tables.foreach(rollbackIfStranded(h.fs, _))
+      requireAboveCompactionHwm(h.fs, root, batchId)
+      body(h)
+    }
+
+  /** Hold `root` for one maintenance pass under the owner
+    * `<tag>-<random UUID>` (no replay identity: a died pass is re-run, not
+    * resumed), rolling back every table in `tables` first. */
+  private[graft] def maintenance[A](spark: SparkSession, root: String,
+      tag: String, staleMs: Long, tables: Seq[String])(body: Locked => A): A =
+    IngestLock.withLock(spark, root, s"$tag-${java.util.UUID.randomUUID()}",
+        staleMs) { lock =>
+      val h = new Locked(spark, lock)
+      tables.foreach(rollbackIfStranded(h.fs, _))
+      body(h)
     }
 
   /** Start one bounded run of a stateful pipeline (AvailableNow: process

@@ -125,6 +125,28 @@ class RegistryFacesSpec extends SparkSpec {
     assert(embJobs <= 55L, s"embedding ingest ran $embJobs jobs")
   }
 
+  test("three repeated warm ingest batches run identical Spark job counts, per kind") {
+    def warmJobs(ingest: (String, Long) => Long): Long = {
+      val root = tmpDir()
+      ingest(root, 0L)
+      val (n, counts) = SparkCounts.measure(spark)(ingest(root, 1L))
+      assert(n == 3L)
+      counts.jobs
+    }
+    val textJobs = Seq.fill(3)(warmJobs { (root, b) =>
+      ClusterRegistry.ingestBatch(spark, ClusterRegistry.RegistryConfig(
+        "unused", root, "unused"), text(if (b == 0L) docs0 else docs1), b)
+    })
+    val embJobs = Seq.fill(3)(warmJobs { (root, b) =>
+      EmbeddingClusterRegistry.ingestBatch(spark,
+        EmbeddingClusterRegistry.RegistryConfig("unused", root, "unused"),
+        vecs(if (b == 0L) vecs0 else vecs1), b)
+    })
+    info(s"warm ingest jobs: text $textJobs, embedding $embJobs")
+    assert(textJobs.distinct.size == 1, s"text ingest job counts differ: $textJobs")
+    assert(embJobs.distinct.size == 1, s"embedding ingest job counts differ: $embJobs")
+  }
+
   test("text keepBest takes an INT id column and answers as with BIGINT ids") {
     val scores = Seq(1 -> 0.5, 5 -> 0.9, 2 -> 0.7, 6 -> 0.7, 3 -> 0.1, 7 -> 0.2)
     def kept(df: DataFrame) = {
