@@ -3,7 +3,7 @@ package graft.cdc
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.model.Schemas
 
@@ -477,31 +477,60 @@ object Cdc {
   }
 
   /** One table's share of a micro-batch: the [[ledgerEntry]] aggregates over
-    * that table's events alone. `None` is SQL NULL — the aggregate saw no
-    * non-null input. */
+    * that table's events alone, plus the sorted months its row images
+    * touch (empty unless the table is month-partitioned). `None` is SQL
+    * NULL — the aggregate saw no non-null input. */
   final case class TablePartial(table: String, rows: Long,
       dateid: Option[Long], logTime: Option[java.sql.Timestamp],
       logFile: Option[String], logPosStart: Option[Long],
-      logPosEnd: Option[Long])
+      logPosEnd: Option[Long], months: Seq[String])
+
+  /** The `yyyyMM` month key of a date or timestamp: the partition value of
+    * month-partitioned state. */
+  def monthOf(c: Column): Column = date_format(c, "yyyyMM")
+
+  /** Each month-partitioned registry table's partition field, as its
+    * payload carries it. */
+  val partitionFields: Map[String, StructField] = Schemas.tableMeta.collect {
+    case (t, m) if m.partitionCol.isDefined => t -> Schemas.tableSchemas(t)(m.partitionCol.get)
+  }
 
   /** Per-table summary of a micro-batch in ONE action: which tables it
-    * touches plus every input of its ledger row. Evaluating the version
-    * here makes an overflowing coordinate `raise_error` before any state
-    * write. */
-  def batchSummary(events: DataFrame): Seq[TablePartial] = {
+    * touches, every input of its ledger row, and the months the row images
+    * of each table in `partitioned` touch. Evaluating the version here
+    * makes an overflowing coordinate `raise_error` before any state write;
+    * the months are parsed strictly, so a malformed payload of a
+    * month-partitioned table raises here too.
+    *
+    * The months are those of the RAW before- and after-images, the set
+    * [[graft.stream.PartitionedState.touchedMonths]] returns over the
+    * strict `typedChanges`: a superset of the months of any filtered frame
+    * (F7 drops whole events), which is all a partition-pruned apply needs
+    * (an extra month is read and rewritten unchanged). */
+  def batchSummary(events: DataFrame,
+      partitioned: Map[String, StructField] = partitionFields): Seq[TablePartial] = {
     def opt[T](r: org.apache.spark.sql.Row, i: Int)(get: Int => T): Option[T] =
       if (r.isNullAt(i)) None else Some(get(i))
+    // only the matching table's branch is evaluated, so each payload is
+    // parsed once, against its own table's one-field schema
+    def imageMonth(side: String): Column =
+      partitioned.foldLeft(lit(null).cast("string")) { case (other, (t, f)) =>
+        when(col("table") === t, monthOf(from_json(col(side), StructType(Seq(f)),
+          Map("mode" -> "FAILFAST")).getField(f.name))).otherwise(other)
+      }
     withVersion(events).groupBy(col("table")).agg(
         count(lit(1)),
         max(col(Schemas.VersionCol)),
         max(col("ts")),
         max_by(col("log_file"), col(Schemas.VersionCol)),
         min(col("log_pos")),
-        max(col("log_pos")))
+        max(col("log_pos")),
+        // sets, not lists: a catch-up batch buffers each month once
+        array_union(collect_set(imageMonth("after")), collect_set(imageMonth("before"))))
       .collect().toSeq.map { r =>
         TablePartial(r.getString(0), r.getLong(1), opt(r, 2)(r.getLong),
           opt(r, 3)(r.getTimestamp), opt(r, 4)(r.getString),
-          opt(r, 5)(r.getLong), opt(r, 6)(r.getLong))
+          opt(r, 5)(r.getLong), opt(r, 6)(r.getLong), r.getSeq[String](7).sorted)
       }
   }
 

@@ -114,9 +114,10 @@ object ChangeStream {
       onlyTables = cfg.onlyTables, onlySchemas = cfg.onlySchemas)
       .persist()
     try {
-      // one action answers which tables the batch touches and folds every
-      // ledger input; it also raises on an overflowing version before any
-      // state write
+      // one action answers which tables the batch touches, folds every
+      // ledger input and finds each month-partitioned table's touched
+      // months; it also raises on an overflowing version or a malformed
+      // month-partitioned payload before any state write
       val partials = Cdc.batchSummary(filtered)
       val present = partials.map(_.table)
       // schema drift is a hard error, exactly like the reference
@@ -125,7 +126,8 @@ object ChangeStream {
       val unknown = present.filterNot(Schemas.tableMeta.contains)
       require(unknown.isEmpty,
         s"change events for unregistered tables: ${unknown.mkString(", ")}")
-      present.sorted.foreach { table =>
+      partials.sortBy(_.table).foreach { partial =>
+        val table = partial.table
         val meta = Schemas.tableMeta(table)
         val now = cfg.nowOverride.map(lit(_)).getOrElse(current_timestamp())
         // strict: corrupt payloads fail the batch loudly, like unregistered
@@ -162,13 +164,16 @@ object ChangeStream {
               else JdbcState.applyMutable(guarded, cfg.jdbcSink.get, table, meta.keyCols)
             } else meta.partitionCol match {
               // scale path: tables with a monthly partition column apply
-              // partition-pruned — only touched months are read and rewritten
+              // partition-pruned — only touched months are read and
+              // rewritten; the summary's months are the raw images', a
+              // superset of the F7-guarded frame's
               case Some(pc) if meta.versioned =>
                 PartitionedState.applyVersioned(spark, dir, stateSchema(table), typed,
-                  meta.keyCols, pc, meta.deleteDateCol, now, cfg.deleteMaxAgeDays)
+                  meta.keyCols, pc, meta.deleteDateCol, now, cfg.deleteMaxAgeDays,
+                  Some(partial.months))
               case Some(pc) =>
                 PartitionedState.applyMutable(spark, dir, stateSchema(table), typed,
-                  meta.keyCols, pc)
+                  meta.keyCols, pc, Some(partial.months))
               case None => StateStore.replace(flatNext(readState(spark, cfg, table)), dir)
             }
             // maintained views see the same F7-guarded deltas as the table apply

@@ -22,11 +22,18 @@ import graft.model.Schemas
  *    partition column (Schemas.tableMeta.partitionCol);
  *  - a change batch first yields its TOUCHED month set (from the row images —
  *    the union of before- and after-image months, so a row migrating across
- *    months invalidates both sides);
+ *    months invalidates both sides). The stream takes it off the batch
+ *    summary it already runs ([[graft.cdc.Cdc.batchSummary]]); a direct
+ *    caller that passes none gets [[touchedMonths]], the reference the
+ *    summary's months are tested against;
  *  - only those partitions are read (Catalyst prunes the scan: the month
  *    filter is a partition predicate, so untouched months cost zero I/O);
  *  - the applied result is written back with dynamic partition overwrite —
- *    untouched month directories are never rewritten.
+ *    untouched month directories are never rewritten. The write reads the
+ *    very months it replaces, straight from the lazy plan: a dynamic
+ *    overwrite stages every file and swaps the partition directories in
+ *    only at job commit, after every task has read its input (a STATIC
+ *    overwrite deletes the directory before the job runs, so it could not).
  *
  * At a 1000-executor / 100 TB scale this turns per-batch cost from
  * O(total state) into O(state of months with changes) — for CDC traffic that
@@ -47,11 +54,9 @@ object PartitionedState {
 
   val PartCol = "yyyymm"
 
-  private def monthOf(c: org.apache.spark.sql.Column) = date_format(c, "yyyyMM")
-
   /** Initialize (or fully rewrite) partitioned state from a frame. */
   def init(df: DataFrame, dir: String, dateCol: String): Unit =
-    df.withColumn(PartCol, monthOf(col(dateCol)))
+    df.withColumn(PartCol, Cdc.monthOf(col(dateCol)))
       .write.partitionBy(PartCol).mode("overwrite").parquet(dir)
 
   /** Read only the given months of state (partition-pruned scan). A state
@@ -77,40 +82,39 @@ object PartitionedState {
     * both the partition it leaves and the one it enters. */
   def touchedMonths(changes: DataFrame, dateCol: String): Seq[String] =
     changes.select(explode(array(
-        monthOf(col("after").getField(dateCol)),
-        monthOf(col("before").getField(dateCol)))).as(PartCol))
+        Cdc.monthOf(col("after").getField(dateCol)),
+        Cdc.monthOf(col("before").getField(dateCol)))).as(PartCol))
       .where(col(PartCol).isNotNull)
       .distinct().collect().map(_.getString(0)).toSeq.sorted
 
   /**
    * Partition-pruned versioned apply: read only touched months, apply the
    * batch, rewrite only those months (dynamic partition overwrite).
+   * `touched` must hold every month of `changes` (a superset is safe: an
+   * extra month is rewritten unchanged); None computes [[touchedMonths]].
    * Returns the touched month list (for observability/tests).
    */
   def applyVersioned(spark: SparkSession, dir: String, schema: StructType,
       changes: DataFrame, keyCols: Seq[String], dateCol: String,
       deleteDateCol: Option[String] = None,
       now: org.apache.spark.sql.Column = current_timestamp(),
-      maxAgeDays: Int = 31): Seq[String] = {
-    val months = touchedMonths(changes, dateCol)
-    if (months.isEmpty) return months
-    val state = readMonths(spark, dir, schema, months)
-    val next = Cdc.applyVersioned(state, changes, keyCols, deleteDateCol, now, maxAgeDays)
-      // sever lineage from the directory being rewritten (cannot overwrite a
-      // path while a lazy plan still reads it)
-      .localCheckpoint(true)
-    writeTouched(spark, next, dir, dateCol, months)
-    months
-  }
+      maxAgeDays: Int = 31, touched: Option[Seq[String]] = None): Seq[String] =
+    applyPruned(spark, dir, schema, changes, dateCol, touched)(
+      Cdc.applyVersioned(_, changes, keyCols, deleteDateCol, now, maxAgeDays))
 
   /** Same discipline for the mutable apply path. */
   def applyMutable(spark: SparkSession, dir: String, schema: StructType,
-      changes: DataFrame, keyCols: Seq[String], dateCol: String): Seq[String] = {
-    val months = touchedMonths(changes, dateCol)
-    if (months.isEmpty) return months
-    val state = readMonths(spark, dir, schema, months)
-    val next = Cdc.applyMutable(state, changes, keyCols).localCheckpoint(true)
-    writeTouched(spark, next, dir, dateCol, months)
+      changes: DataFrame, keyCols: Seq[String], dateCol: String,
+      touched: Option[Seq[String]] = None): Seq[String] =
+    applyPruned(spark, dir, schema, changes, dateCol, touched)(
+      Cdc.applyMutable(_, changes, keyCols))
+
+  private def applyPruned(spark: SparkSession, dir: String, schema: StructType,
+      changes: DataFrame, dateCol: String, touched: Option[Seq[String]])(
+      apply: DataFrame => DataFrame): Seq[String] = {
+    val months = touched.getOrElse(touchedMonths(changes, dateCol))
+    if (months.nonEmpty)
+      writeTouched(spark, apply(readMonths(spark, dir, schema, months)), dir, dateCol, months)
     months
   }
 
@@ -130,7 +134,7 @@ object PartitionedState {
     // per-write dynamic overwrite (the option beats the session conf,
     // SPARK-20236) — a session-conf toggle is not safe under concurrent
     // writers sharing the session (ADVICE round 9)
-    next.withColumn(PartCol, monthOf(col(dateCol)))
+    next.withColumn(PartCol, Cdc.monthOf(col(dateCol)))
       .observe(landed, collect_set(col(PartCol)).as("months"))
       .write.partitionBy(PartCol).mode("overwrite")
       .option("partitionOverwriteMode", "dynamic").parquet(dir)

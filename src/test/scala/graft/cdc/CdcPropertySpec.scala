@@ -4,12 +4,13 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.Random
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.lit
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DateType, StructType}
 
 import graft.SparkSpec
 import graft.model.Schemas
+import graft.stream.PartitionedState
 import CdcFixtures._
 
 /**
@@ -23,7 +24,10 @@ import CdcFixtures._
  *  (c) dedup purge never removes a key's max-version row
  *      (reference: _settings.py:230-287);
  *  (d) the ledger row the stream folds on the driver from per-table
- *      partials equals the one-aggregate [[Cdc.ledgerEntry]].
+ *      partials equals the one-aggregate [[Cdc.ledgerEntry]];
+ *  (e) the months the batch summary folds per table equal
+ *      [[PartitionedState.touchedMonths]] over the strict typed changes and
+ *      cover those of the frame the apply receives.
  */
 class CdcPropertySpec extends SparkSpec {
 
@@ -131,7 +135,7 @@ class CdcPropertySpec extends SparkSpec {
     * every `ts` is null, and the batch's greatest `log_pos` planted in its
     * LOWEST file, so the ledger's `log_file` (taken at the greatest
     * version) and its `log_pos_end` come from different files. */
-  private def genEnvelopes(rnd: Random): org.apache.spark.sql.DataFrame = {
+  private def genEnvelopes(rnd: Random): DataFrame = {
     val tables = Schemas.tableMeta.keys.toSeq.sorted.take(5)
     val nullTsTable = tables(rnd.nextInt(tables.size))
     val coords = Iterator.continually(
@@ -167,5 +171,80 @@ class CdcPropertySpec extends SparkSpec {
     assert(Cdc.ledgerRow(empty, Nil, 0L).drop("created_at").collect().toSeq ==
       Cdc.ledgerEntry(empty).withColumn("batch_id", lit(0L))
         .drop("created_at").collect().toSeq)
+  }
+
+  /** Envelopes over every month-partitioned registry table plus one flat
+    * table: INSERTs (null before-image), DELETEs (null after-image),
+    * UPDATEs whose images may lie in different months, partition fields
+    * that are JSON null, an UPDATE across a year boundary and, on
+    * `matomo_log_conversion`, a DELETE older than F7's window. The tables
+    * in `dates` carry their partition field as a DATE, the rest as a
+    * TIMESTAMP. */
+  private def genMonthEnvelopes(rnd: Random, dates: Set[String]): DataFrame = {
+    val tables = Cdc.partitionFields.keys.toSeq.sorted :+ "matomo_site"
+    def stamp(table: String, day: String, hour: Int): String =
+      if (dates(table)) s""""$day"""" else f""""${day}T$hour%02d:30:00""""
+    def image(table: String, day: String = null, hour: Int = 0): String =
+      Cdc.partitionFields.get(table).fold("""{"idsite":1,"name":"s"}""") { f =>
+        val d = Option(day).getOrElse(
+          f"${Seq("2023-11", "2023-12", "2024-01", "2024-02")(rnd.nextInt(4))}-${1 + rnd.nextInt(28)}%02d")
+        val v = if (day == null && rnd.nextInt(8) == 0) "null" else stamp(table, d, hour)
+        s"""{"idsite":1,"${f.name}":$v}"""
+      }
+    val random = tables.flatMap(t => Seq.fill(3 + rnd.nextInt(4))(t)).map { t =>
+      rnd.nextInt(3) match {
+        case 0 => ("INSERT", t, null, image(t, hour = rnd.nextInt(24)))
+        case 1 => ("UPDATE", t, image(t, hour = rnd.nextInt(24)), image(t, hour = rnd.nextInt(24)))
+        case _ => ("DELETE", t, image(t, hour = rnd.nextInt(24)), null)
+      }
+    }
+    val planted = Seq(
+      ("UPDATE", "matomo_log_link_visit_action",
+        image("matomo_log_link_visit_action", "2023-12-31", 23),
+        image("matomo_log_link_visit_action", "2024-01-01", 0)),
+      ("DELETE", "matomo_log_conversion", image("matomo_log_conversion", "2023-06-15"), null))
+    val rows = rnd.shuffle(random ++ planted).zipWithIndex.map { case ((op, t, b, a), i) =>
+      Row(op, "db", t, java.sql.Timestamp.valueOf("2024-01-05 10:00:00"),
+        "mysql-bin.000001", 4L + i, 0, b, a)
+    }
+    val schema = StructType(Schemas.changeEventSchema.map(_.copy(nullable = true)))
+    spark.createDataFrame(rows.asJava, schema)
+  }
+
+  test("property: the summary's months ≡ touchedMonths of the strict typed changes, ⊇ the applied frame's (3 seeds)") {
+    val now = lit(java.sql.Timestamp.valueOf("2024-01-06 00:00:00"))
+    Seq(4, 23, 81).foreach { seed =>
+      val rnd = new Random(seed)
+      val tables = Cdc.partitionFields.keys.toSeq.sorted
+      // a different pair of tables reads its partition field as a DATE per seed
+      val dates = rnd.shuffle(tables).take(2).toSet
+      val fields = Cdc.partitionFields.map { case (t, f) =>
+        t -> (if (dates(t)) f.copy(dataType = DateType) else f)
+      }
+      val events = genMonthEnvelopes(rnd, dates)
+      val folded = Cdc.batchSummary(events, fields).map(p => p.table -> p.months).toMap
+      assert(folded("matomo_site").isEmpty, s"seed=$seed")
+      tables.foreach { t =>
+        val meta = Schemas.tableMeta(t)
+        val pc = meta.partitionCol.get
+        val schema = StructType(Schemas.tableSchemas(t).fields
+          .filterNot(_.name == Schemas.VersionCol)
+          .map(f => if (f.name == pc) fields(t) else f))
+        val raw = Cdc.typedChanges(events, t, Some(schema), strict = true)
+        assert(folded(t) == PartitionedState.touchedMonths(raw, pc), s"seed=$seed table=$t")
+        // the frame ChangeStream hands the apply: raw on the versioned path
+        // (it guards internally), F7-guarded on the mutable one
+        val applied =
+          if (meta.versioned) raw
+          else meta.deleteDateCol.fold(raw)(Cdc.suppressOldDeletes(raw, _, now))
+        val appliedMonths = PartitionedState.touchedMonths(applied, pc)
+        assert(appliedMonths.toSet.subsetOf(folded(t).toSet), s"seed=$seed table=$t")
+        if (t == "matomo_log_conversion")
+          assert(folded(t).contains("202306") && !appliedMonths.contains("202306"),
+            s"seed=$seed: the F7-old DELETE's month is folded but not applied")
+      }
+      assert(Seq("202312", "202401").forall(folded("matomo_log_link_visit_action").contains),
+        s"seed=$seed")
+    }
   }
 }

@@ -146,10 +146,71 @@ class ChangeStreamSpec extends SparkSpec {
     }
     assert(siteState(cfg) == Set((1L, "alpha2")))
     assert(visitLatest(cfg) == Set((10L, "fr")))
-    // 19 jobs before the batch summary, the driver-built ledger row and the
-    // observed months: the distinct tables, an emptiness probe, a persisted
-    // ledger aggregate and the written-months distinct each cost their own
-    assert(counts.jobs <= 14L, s"a steady micro-batch ran ${counts.jobs} Spark jobs")
+    // 11 jobs: 3 for the batch summary (tables, ledger inputs and touched
+    // months in one action), 3 for the visit table's partition-pruned
+    // write (its read and reduce run inside the write), 4 for the site
+    // table's flat swap, 1 for the ledger row
+    assert(counts.jobs <= 11L, s"a steady micro-batch ran ${counts.jobs} Spark jobs")
+  }
+
+  test("a malformed month-partitioned payload fails the batch before any state write") {
+    val cfg = freshCfg(tmpDir())
+    // the flat action table sorts first and is valid; the visit-action
+    // payload is not JSON. The summary parses the partition field of every
+    // month-partitioned image, so the batch fails before the action table
+    // is swapped
+    val batch = envFrame(Seq(
+      env("INSERT", "matomo_log_action", 100, null,
+        """{"idaction":1,"name":"a","hash":7,"type":1}"""),
+      env("INSERT", "matomo_log_link_visit_action", 200, null,
+        """{"idlink_va":1,"server_time":"2024-01-05T09:00:00"""")))
+    intercept[Exception](ChangeStream.applyBatch(spark, cfg)(batch, 0L))
+    assert(!Files.exists(java.nio.file.Paths.get(cfg.stateDir, "matomo_log_action")))
+    assert(!Files.exists(java.nio.file.Paths.get(cfg.stateDir, "matomo_log_link_visit_action")))
+    assert(!Files.exists(java.nio.file.Paths.get(cfg.ledgerDir)))
+  }
+
+  test("an UPDATE that moves a row across months rewrites both months (end to end)") {
+    val logDir = tmpDir()
+    def va(id: Long, serverTime: String) =
+      s"""{"idlink_va":$id,"idsite":1,"idvisitor":"v","idvisit":10,"server_time":"$serverTime"}"""
+    def conv(buster: Long, serverTime: String) =
+      s"""{"idvisit":1,"idsite":1,"idgoal":2,"buster":$buster,"server_time":"$serverTime","url":"u"}"""
+    // each table holds one row in December and a bystander in January
+    writeLog(logDir, "f1", Seq(
+      env("INSERT", "matomo_log_link_visit_action", 100, null, va(1, "2023-12-20T09:00:00")),
+      env("INSERT", "matomo_log_link_visit_action", 110, null, va(2, "2024-01-02T09:00:00")),
+      env("INSERT", "matomo_log_conversion", 120, null, conv(1, "2023-12-20T09:00:00")),
+      env("INSERT", "matomo_log_conversion", 130, null, conv(2, "2024-01-02T09:00:00"))))
+    val cfg = freshCfg(logDir)
+    ChangeStream.run(spark, cfg).awaitTermination()
+    def months(table: String): Set[String] =
+      new java.io.File(s"${cfg.stateDir}/$table").listFiles()
+        .map(_.getName).filter(_.startsWith("yyyymm=")).toSet
+    assert(months("matomo_log_conversion") == Set("yyyymm=202312", "yyyymm=202401"))
+    // the moves: both December rows are updated into January. Missing the
+    // before-month would leave the old mutable row behind; missing the
+    // after-month would overwrite January without reading its bystander
+    writeLog(logDir, "f2", Seq(
+      env("UPDATE", "matomo_log_link_visit_action", 200,
+        va(1, "2023-12-20T09:00:00"), va(1, "2024-01-03T09:00:00")),
+      env("UPDATE", "matomo_log_conversion", 210,
+        conv(1, "2023-12-20T09:00:00"), conv(1, "2024-01-03T09:00:00"))))
+    ChangeStream.run(spark, cfg).awaitTermination()
+    // mutable: the row left December, whose directory is gone
+    assert(months("matomo_log_conversion") == Set("yyyymm=202401"))
+    val convRows = ChangeStream.readState(spark, cfg, "matomo_log_conversion")
+      .select($"buster", date_format($"server_time", "yyyyMM"))
+      .as[(Long, String)].collect().toSet
+    assert(convRows == Set((1L, "202401"), (2L, "202401")))
+    // versioned: the fresh version lands in January next to the bystander;
+    // December keeps the superseded version the latest-wins view hides
+    assert(months("matomo_log_link_visit_action") == Set("yyyymm=202312", "yyyymm=202401"))
+    val vaLatest = Cdc.latestWins(
+        ChangeStream.readState(spark, cfg, "matomo_log_link_visit_action"), Seq("idlink_va"))
+      .select($"idlink_va", date_format($"server_time", "yyyyMM"))
+      .as[(Long, String)].collect().toSet
+    assert(vaLatest == Set((1L, "202401"), (2L, "202401")))
   }
 
   test("a flat table stranded at .__old by a died swap rolls back on the next cycle") {
