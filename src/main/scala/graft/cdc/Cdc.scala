@@ -134,21 +134,23 @@ object Cdc {
    */
   def suppressOldDeletes(changes: DataFrame, dateCol: String,
       now: Column, maxAgeDays: Int = 31): DataFrame =
-    changes.filter(!(col("op") === "DELETE" &&
-      datediff(to_date(now),
-        // a missing/unparseable row date defaults to NOW — the DELETE is then
-        // APPLIED, exactly like the reference's .get(col_date, datetime.now())
-        // fallback (matomo2clickhouse.py:592); a bare null comparison would
-        // silently suppress instead
-        coalesce(to_date(col("before").getField(dateCol)), to_date(now))) > maxAgeDays))
+    changes.filter(!oldDelete(dateCol, now, maxAgeDays))
 
   /** Count of the DELETEs F7 would reject, per reporting counter A6
     * (reference: matomo2clickhouse.py:598-601, 728-731). */
   def rejectedDeleteCount(changes: DataFrame, dateCol: String,
       now: Column, maxAgeDays: Int = 31): Long =
-    changes.filter(col("op") === "DELETE" &&
+    changes.filter(oldDelete(dateCol, now, maxAgeDays)).count()
+
+  /** The F7 predicate, shared by the guard and its A6 counter. */
+  private def oldDelete(dateCol: String, now: Column, maxAgeDays: Int): Column =
+    col("op") === "DELETE" &&
       datediff(to_date(now),
-        coalesce(to_date(col("before").getField(dateCol)), to_date(now))) > maxAgeDays).count()
+        // a missing/unparseable row date defaults to NOW — the DELETE is then
+        // APPLIED, exactly like the reference's .get(col_date, datetime.now())
+        // fallback (matomo2clickhouse.py:592); a bare null comparison would
+        // silently suppress instead
+        coalesce(to_date(col("before").getField(dateCol)), to_date(now))) > maxAgeDays
 
   /** Shared key derivation for the apply reductions: the change frame with
     * `__key_<k>` columns (null-safe, from whichever image carries the key)
@@ -171,14 +173,8 @@ object Cdc {
     * whose key was INSERTed earlier in the same batch must materialize the row
     * (the reference applies sequentially, matomo2clickhouse.py:648-653: the
     * INSERT lands first, then the UPDATE mutates it). */
-  def lastEventPerKey(changes: DataFrame, keyCols: Seq[String]): DataFrame = {
-    val (kd, wAll, wOrd) = keyed(changes, keyCols)
-    kd.withColumn("__rn", row_number().over(wOrd))
-      .withColumn("__had_insert",
-        max(when(col("op") === "INSERT", 1).otherwise(0)).over(wAll) === 1)
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-  }
+  def lastEventPerKey(changes: DataFrame, keyCols: Seq[String]): DataFrame =
+    mutableLast(changes, keyCols, Nil)
 
   /**
    * Apply a change batch to a MUTABLE table (plain UPDATE path,
@@ -271,24 +267,18 @@ object Cdc {
   /**
    * Apply a change batch to a VERSIONED table (`tables_not_updated`):
    * INSERT and UPDATE both append the after-image with the engine version
-   * (`INS-UPD` rewrite, reference: binlog2sql_util.py:305-327); fresh DELETEs
-   * remove all versions of the key; old DELETEs are suppressed by F7.
+   * (`INS-UPD` rewrite, reference: binlog2sql_util.py:305-327); DELETEs
+   * remove all versions of the key. Old DELETEs are the caller's to
+   * suppress first (F7, [[suppressOldDeletes]]), as for every other apply.
    * The physical result is an append-only history; the logical table is
    * `latestWins` over it (J1).
    */
-  def applyVersioned(history: DataFrame, changes: DataFrame, keyCols: Seq[String],
-      deleteDateCol: Option[String] = None, now: Column = current_timestamp(),
-      maxAgeDays: Int = 31): DataFrame = {
-    val guarded = deleteDateCol match {
-      case Some(dc) => suppressOldDeletes(changes, dc, now, maxAgeDays)
-      case None => changes
-    }
-    val deleteMax = deleteFrontier(guarded, keyCols)
-    def delCond(side: String) =
-      keyCols.map(k => col(s"$side.$k") <=> col(s"d.$k")).reduce(_ && _)
+  def applyVersioned(history: DataFrame, changes: DataFrame,
+      keyCols: Seq[String]): DataFrame = {
+    val deleteMax = deleteFrontier(changes, keyCols)
     val afterDeletes = history.alias("h")
-      .join(deleteMax.alias("d"), delCond("h"), "left_anti")
-    val keptAppends = survivingAppends(guarded, keyCols, deleteMax)
+      .join(deleteMax.alias("d"), frontierKeyEq("h", keyCols), "left_anti")
+    val keptAppends = survivingAppends(changes, keyCols, deleteMax)
     afterDeletes.unionByName(keptAppends.select(afterDeletes.columns.map(col): _*))
   }
 
@@ -305,22 +295,20 @@ object Cdc {
       .groupBy(keyCols.map(col): _*)
       .agg(max(col("__del_v")).as("__del_v"))
 
-  /** The batch's INS-UPD appends surviving its own delete frontier — the
-    * after-images (+ version) whose version lies beyond the key's max
-    * same-batch DELETE. Null-safe key equality throughout (F13). */
-  def survivingAppends(changes: DataFrame, keyCols: Seq[String]): DataFrame =
-    survivingAppends(changes, keyCols, deleteFrontier(changes, keyCols))
+  /** Null-safe (F13) equality of the key columns of the `side` alias and
+    * the delete frontier, aliased `d`. */
+  private def frontierKeyEq(side: String, keyCols: Seq[String]): Column =
+    keyCols.map(k => col(s"$side.$k") <=> col(s"d.$k")).reduce(_ && _)
 
-  /** As above, reusing an already-built delete frontier so callers that also
-    * need the frontier (the versioned applies) build its aggregation once. */
+  /** The batch's INS-UPD appends surviving its own delete frontier
+    * `deleteMax` ([[deleteFrontier]]) — the after-images (+ version) whose
+    * version lies beyond the key's max same-batch DELETE. */
   def survivingAppends(changes: DataFrame, keyCols: Seq[String],
       deleteMax: DataFrame): DataFrame = {
     val appends = changes.filter(col("op") =!= "DELETE")
       .select(col("after.*"), col(Schemas.VersionCol))
-    def delCond(side: String) =
-      keyCols.map(k => col(s"$side.$k") <=> col(s"d.$k")).reduce(_ && _)
     appends.alias("a")
-      .join(deleteMax.alias("d"), delCond("a"), "left")
+      .join(deleteMax.alias("d"), frontierKeyEq("a", keyCols), "left")
       .filter(col("d.__del_v").isNull || col(s"a.${Schemas.VersionCol}") > col("d.__del_v"))
       .select(appends.columns.map(c => col(s"a.$c")): _*)
   }

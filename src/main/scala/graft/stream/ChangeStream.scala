@@ -132,49 +132,40 @@ object ChangeStream {
         val now = cfg.nowOverride.map(lit(_)).getOrElse(current_timestamp())
         // strict: corrupt payloads fail the batch loudly, like unregistered
         // tables — a nulled payload would read as data loss downstream
-        val typedRaw = Cdc.typedChanges(filtered, table, strict = true)
+        val raw = Cdc.typedChanges(filtered, table, strict = true)
         // F7 applies to every table in CONST_TBL_NOT_DELETE_OLD regardless of
-        // path (reference: matomo2clickhouse.py:583-606): the mutable applies,
-        // the JDBC sink and the maintained views take this guarded frame;
-        // the local versioned applies guard internally, so they take the raw
-        val guarded = meta.deleteDateCol.fold(typedRaw)(
-          Cdc.suppressOldDeletes(typedRaw, _, now, cfg.deleteMaxAgeDays))
-        val typed = if (meta.versioned) typedRaw else guarded
-        def flatNext(state: DataFrame): DataFrame =
-          if (meta.versioned)
-            Cdc.applyVersioned(state, typed, meta.keyCols, meta.deleteDateCol,
-              now, cfg.deleteMaxAgeDays)
-          else Cdc.applyMutable(state, typed, meta.keyCols)
+        // path (reference: matomo2clickhouse.py:583-606): every apply, the
+        // maintained views and the dry-run count take this one guarded frame
+        val typed = meta.deleteDateCol.fold(raw)(
+          Cdc.suppressOldDeletes(raw, _, now, cfg.deleteMaxAgeDays))
+        // the one versioned-or-mutable choice, in Spark and on the JDBC
+        // sink; the layout below only decides where it runs
+        val (next, sinkApply): (DataFrame => DataFrame, JdbcState.SinkConfig => Unit) =
+          if (meta.versioned) (Cdc.applyVersioned(_, typed, meta.keyCols),
+            JdbcState.applyVersioned(typed, _, table, meta.keyCols))
+          else (Cdc.applyMutable(_, typed, meta.keyCols),
+            JdbcState.applyMutable(typed, _, table, meta.keyCols))
         val dir = s"${cfg.stateDir}/$table"
         lock match {
           case None =>
             // S9: inspect, don't apply — counts force the plan like the real write
-            val next = flatNext(readState(spark, cfg, table))
-            System.err.println(s"[dry-run] batch=$batchId table=$table " +
-              s"changes=${typed.count()} next_state_rows=${next.count()}")
+            val nextState = next(readState(spark, cfg, table))
+            Console.err.println(s"[dry-run] batch=$batchId table=$table " +
+              s"changes=${typed.count()} next_state_rows=${nextState.count()}")
           // a long per-table apply must not outlive the staleness window:
           // the handle refreshes (and fails loudly on a stolen lock) BEFORE
           // each table's state write
           case Some(h) => h.write {
-            if (cfg.jdbcSink.isDefined) {
-              // sink mode: every table applies to the JDBC target, like the
-              // reference; the sink bypasses applyVersioned's internal guard
-              if (meta.versioned)
-                JdbcState.applyVersioned(guarded, cfg.jdbcSink.get, table, meta.keyCols)
-              else JdbcState.applyMutable(guarded, cfg.jdbcSink.get, table, meta.keyCols)
-            } else meta.partitionCol match {
-              // scale path: tables with a monthly partition column apply
-              // partition-pruned — only touched months are read and
-              // rewritten; the summary's months are the raw images', a
-              // superset of the F7-guarded frame's
-              case Some(pc) if meta.versioned =>
-                PartitionedState.applyVersioned(spark, dir, stateSchema(table), typed,
-                  meta.keyCols, pc, meta.deleteDateCol, now, cfg.deleteMaxAgeDays,
-                  Some(partial.months))
-              case Some(pc) =>
-                PartitionedState.applyMutable(spark, dir, stateSchema(table), typed,
-                  meta.keyCols, pc, Some(partial.months))
-              case None => StateStore.replace(flatNext(readState(spark, cfg, table)), dir)
+            // sink mode: every table applies to the JDBC target, like the
+            // reference; otherwise a month-partitioned table rewrites only
+            // the months the batch summary found in its raw images, a
+            // superset of the guarded frame's
+            (cfg.jdbcSink, meta.partitionCol) match {
+              case (Some(sink), _) => sinkApply(sink)
+              case (None, Some(pc)) =>
+                PartitionedState.rewrite(spark, dir, stateSchema(table), pc,
+                  partial.months)(next)
+              case (None, None) => StateStore.replace(next(readState(spark, cfg, table)), dir)
             }
             // maintained views see the same F7-guarded deltas as the table apply
             cfg.maintainedAggs.filter(_.table == table).foreach { ma =>
@@ -195,7 +186,7 @@ object ChangeStream {
               val applied = state.agg(max(col("__batch_id"))).collect().head
               val alreadyApplied = !applied.isNullAt(0) && applied.getLong(0) >= batchId
               if (!alreadyApplied) StateStore.replace(
-                Cdc.incrementalAgg(state.drop("__batch_id"), guarded,
+                Cdc.incrementalAgg(state.drop("__batch_id"), typed,
                     ma.groupCol, ma.valueCol)
                   .withColumn("__batch_id", lit(batchId)),
                 aggDir)

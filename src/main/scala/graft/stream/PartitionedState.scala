@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.cdc.Cdc
-import graft.model.Schemas
 
 /**
  * Month-partitioned table state with partition-pruned apply — the 100 TB
@@ -20,14 +19,15 @@ import graft.model.Schemas
  *
  *  - state lives as parquet partitioned by `yyyymm` derived from the table's
  *    partition column (Schemas.tableMeta.partitionCol);
- *  - a change batch first yields its TOUCHED month set (from the row images —
+ *  - the caller passes the batch's TOUCHED month set (from the row images —
  *    the union of before- and after-image months, so a row migrating across
  *    months invalidates both sides). The stream takes it off the batch
- *    summary it already runs ([[graft.cdc.Cdc.batchSummary]]); a direct
- *    caller that passes none gets [[touchedMonths]], the reference the
- *    summary's months are tested against;
+ *    summary it already runs ([[graft.cdc.Cdc.batchSummary]]);
+ *    [[touchedMonths]] is the reference those months are tested against;
  *  - only those partitions are read (Catalyst prunes the scan: the month
- *    filter is a partition predicate, so untouched months cost zero I/O);
+ *    filter is a partition predicate, so untouched months cost zero I/O)
+ *    and handed to the caller's `next` — the versioned or the mutable apply
+ *    ([[rewrite]]);
  *  - the applied result is written back with dynamic partition overwrite —
  *    untouched month directories are never rewritten. The write reads the
  *    very months it replaces, straight from the lazy plan: a dynamic
@@ -59,22 +59,14 @@ object PartitionedState {
     df.withColumn(PartCol, Cdc.monthOf(col(dateCol)))
       .write.partitionBy(PartCol).mode("overwrite").parquet(dir)
 
-  /** Read only the given months of state (partition-pruned scan). A state
-    * stranded at `.__old` by a died [[StateStore.replace]] (the ST8
-    * compaction) is rolled back first. */
+  /** Read only the given months of state (partition-pruned scan) through
+    * [[StateStore.read]]. A dir holding no month (absent, or every month
+    * emptied by deletes) reads without the `yyyymm` column, and empty. */
   def readMonths(spark: SparkSession, dir: String, schema: StructType,
       months: Seq[String]): DataFrame = {
-    val p = new Path(dir)
-    val fs = StateStore.fsOf(spark, dir)
-    StateStore.rollbackIfStranded(fs, dir)
-    if (!fs.exists(p))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else
-      spark.read.schema(StructType(schema.fields :+
-          org.apache.spark.sql.types.StructField(PartCol, org.apache.spark.sql.types.StringType)))
-        .parquet(dir)
-        .filter(col(PartCol).isin(months: _*))
-        .drop(PartCol)
+    val state = StateStore.read(spark, dir, schema)
+    if (!state.columns.contains(PartCol)) state
+    else state.filter(col(PartCol).isin(months: _*)).drop(PartCol)
   }
 
   /** The months a change batch touches: the UNION of before- and after-image
@@ -87,36 +79,14 @@ object PartitionedState {
       .where(col(PartCol).isNotNull)
       .distinct().collect().map(_.getString(0)).toSeq.sorted
 
-  /**
-   * Partition-pruned versioned apply: read only touched months, apply the
-   * batch, rewrite only those months (dynamic partition overwrite).
-   * `touched` must hold every month of `changes` (a superset is safe: an
-   * extra month is rewritten unchanged); None computes [[touchedMonths]].
-   * Returns the touched month list (for observability/tests).
-   */
-  def applyVersioned(spark: SparkSession, dir: String, schema: StructType,
-      changes: DataFrame, keyCols: Seq[String], dateCol: String,
-      deleteDateCol: Option[String] = None,
-      now: org.apache.spark.sql.Column = current_timestamp(),
-      maxAgeDays: Int = 31, touched: Option[Seq[String]] = None): Seq[String] =
-    applyPruned(spark, dir, schema, changes, dateCol, touched)(
-      Cdc.applyVersioned(_, changes, keyCols, deleteDateCol, now, maxAgeDays))
-
-  /** Same discipline for the mutable apply path. */
-  def applyMutable(spark: SparkSession, dir: String, schema: StructType,
-      changes: DataFrame, keyCols: Seq[String], dateCol: String,
-      touched: Option[Seq[String]] = None): Seq[String] =
-    applyPruned(spark, dir, schema, changes, dateCol, touched)(
-      Cdc.applyMutable(_, changes, keyCols))
-
-  private def applyPruned(spark: SparkSession, dir: String, schema: StructType,
-      changes: DataFrame, dateCol: String, touched: Option[Seq[String]])(
-      apply: DataFrame => DataFrame): Seq[String] = {
-    val months = touched.getOrElse(touchedMonths(changes, dateCol))
-    if (months.nonEmpty)
-      writeTouched(spark, apply(readMonths(spark, dir, schema, months)), dir, dateCol, months)
-    months
-  }
+  /** Partition-pruned apply: read only the `touched` months of state, run
+    * `next` over them and rewrite only those months (dynamic partition
+    * overwrite). `touched` must hold every month the batch touches (a
+    * superset is safe: an extra month is rewritten unchanged). */
+  def rewrite(spark: SparkSession, dir: String, schema: StructType, dateCol: String,
+      touched: Seq[String])(next: DataFrame => DataFrame): Unit =
+    if (touched.nonEmpty)
+      writeTouched(spark, next(readMonths(spark, dir, schema, touched)), dir, dateCol, touched)
 
   /** How long a write's observed month set may lag the write itself. */
   private val ObservedMonthsWait = scala.concurrent.duration.Duration(60, "s")

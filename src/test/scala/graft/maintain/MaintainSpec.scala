@@ -99,8 +99,10 @@ class MaintainSpec extends SparkSpec {
           lit("2024-02-06 10:00:00").cast("timestamp").as("ts"),
           lit("mysql-bin.000001").as("log_file"), col("log_pos"),
           lit(0).as("row_index"), col("before"), col("after"))
-      PartitionedState.applyVersioned(spark, dir, schema,
-        Cdc.typedChanges(events, t), meta.keyCols, meta.partitionCol.get): Unit
+      val typed = Cdc.typedChanges(events, t)
+      val pc = meta.partitionCol.get
+      PartitionedState.rewrite(spark, dir, schema, pc, PartitionedState.touchedMonths(typed, pc))(
+        Cdc.applyVersioned(_, typed, meta.keyCols))
     }
     def physical() = ChangeStream.readState(spark, cfg, t)
       .select("idvisit", "location_country").as[(Long, String)].collect().toSet

@@ -247,9 +247,9 @@ class ChangeStreamSpec extends SparkSpec {
       .select("idsite", "name").as[(Long, String)].collect().toSet
     val visit = Cdc.latestWins(Cdc.applyVersioned(
       StateStore.read(spark, "/nonexistent-visit", stateSchema("matomo_log_visit")),
-      Cdc.typedChanges(all, "matomo_log_visit"), Seq("idvisit"),
-      deleteDateCol = Some("visit_first_action_time"),
-      now = lit("2024-01-06 00:00:00").cast("timestamp")), Seq("idvisit"))
+      Cdc.suppressOldDeletes(Cdc.typedChanges(all, "matomo_log_visit"),
+        "visit_first_action_time", lit("2024-01-06 00:00:00").cast("timestamp")),
+      Seq("idvisit")), Seq("idvisit"))
       .select("idvisit", "location_country").as[(Long, String)].collect().toSet
 
     assert(siteState(cfg) == site)
@@ -363,6 +363,21 @@ class ChangeStreamSpec extends SparkSpec {
     ChangeStream.run(spark, cfg).awaitTermination()
     assert(!Files.exists(java.nio.file.Paths.get(cfg.stateDir, "matomo_site")))
     assert(!Files.exists(java.nio.file.Paths.get(cfg.ledgerDir)))
+  }
+
+  test("the dry-run changes= count excludes an F7-old DELETE of a versioned table") {
+    val cfg = freshCfg(tmpDir(), dry = true)
+    val old =
+      """{"idvisit":7,"idsite":1,"location_country":"de","visit_first_action_time":"2023-11-01T00:00:00"}"""
+    // now = 2024-01-06: the DELETE of a >31-day-old visit is suppressed
+    val batch = envFrame(Seq(
+      env("INSERT", "matomo_log_visit", 100, null,
+        """{"idvisit":8,"idsite":1,"location_country":"fr","visit_first_action_time":"2024-01-05T09:00:00"}"""),
+      env("DELETE", "matomo_log_visit", 200, old, null)))
+    val err = new java.io.ByteArrayOutputStream()
+    Console.withErr(err)(ChangeStream.applyBatch(spark, cfg)(batch, 0L))
+    val line = err.toString.linesIterator.find(_.startsWith("[dry-run]")).getOrElse("")
+    assert(line.contains("table=matomo_log_visit") && line.contains(" changes=1 "), line)
   }
 
   test("maintained aggregate view tracks the logical table across staged runs") {
@@ -528,9 +543,9 @@ class ChangeStreamSpec extends SparkSpec {
     val all = spark.read.schema(Schemas.changeEventSchema).parquet(logDir)
     val expected = Cdc.latestWins(Cdc.applyVersioned(
       StateStore.read(spark, "/nonexistent-visit", stateSchema("matomo_log_visit")),
-      Cdc.typedChanges(all, "matomo_log_visit"), Seq("idvisit"),
-      deleteDateCol = Some("visit_first_action_time"),
-      now = lit("2024-01-06 00:00:00").cast("timestamp")), Seq("idvisit"))
+      Cdc.suppressOldDeletes(Cdc.typedChanges(all, "matomo_log_visit"),
+        "visit_first_action_time", lit("2024-01-06 00:00:00").cast("timestamp")),
+      Seq("idvisit")), Seq("idvisit"))
       .select("idvisit", "location_country").as[(Long, String)].collect().toSet
     assert(derbyLatest() == expected)
 

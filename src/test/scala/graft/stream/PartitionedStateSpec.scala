@@ -2,10 +2,12 @@ package graft.stream
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
+import graft.cdc.Cdc
 import graft.model.Schemas
 
 /** Perf-weak fix: the apply must read and rewrite ONLY the partitions the
@@ -38,6 +40,12 @@ class PartitionedStateSpec extends SparkSpec {
       (3L, "mar", "2024-03-10 00:00:00", 3L)),
     dir, "d")
 
+  /** The versioned apply over the batch's own touched months, as the
+    * stream runs it. */
+  private def applyVersioned(dir: String, batch: DataFrame): Unit =
+    PartitionedState.rewrite(spark, dir, schema, "d", PartitionedState.touchedMonths(batch, "d"))(
+      Cdc.applyVersioned(_, batch, Seq("id")))
+
   test("apply reads and rewrites only the touched month partitions") {
     val dir = Files.createTempDirectory("pstate").toString + "/t"
     initState(dir)
@@ -58,8 +66,7 @@ class PartitionedStateSpec extends SparkSpec {
       .find(_.contains("PartitionFilters")).getOrElse("")
     assert(scanLeaf.contains("yyyymm") && scanLeaf.contains("= 202402"), scanLeaf.take(800))
 
-    val applied = PartitionedState.applyVersioned(spark, dir, schema, batch, Seq("id"), "d")
-    assert(applied == Seq("202402"))
+    applyVersioned(dir, batch)
 
     // untouched partitions bitwise-untouched on disk
     val janAfter = new java.io.File(s"$dir/yyyymm=202401").listFiles().map(f =>
@@ -77,10 +84,31 @@ class PartitionedStateSpec extends SparkSpec {
     val dir = Files.createTempDirectory("pstate").toString + "/t"
     initState(dir)
     val batch = changes(("DELETE", 10L, 3L, "mar", "2024-03-10 00:00:00"))
-    PartitionedState.applyVersioned(spark, dir, schema, batch, Seq("id"), "d")
+    applyVersioned(dir, batch)
     assert(!new java.io.File(s"$dir/yyyymm=202403").exists())
     val ids = spark.read.parquet(dir).select("id").as[Long].collect().toSet
     assert(ids == Set(1L, 2L))
+  }
+
+  test("a table whose every month was emptied by deletes takes the next batch") {
+    val dir = Files.createTempDirectory("pstate").toString + "/t"
+    initState(dir)
+    applyVersioned(dir, changes(
+      ("DELETE", 10L, 1L, "jan", "2024-01-10 00:00:00"),
+      ("DELETE", 11L, 2L, "feb", "2024-02-10 00:00:00"),
+      ("DELETE", 12L, 3L, "mar", "2024-03-10 00:00:00")))
+    assert(!new java.io.File(dir).list().exists(_.startsWith("yyyymm=")))
+    // no month left: the state reads empty, without its partition column
+    val empty = PartitionedState.readMonths(spark, dir, schema, Seq("202401", "202402"))
+    assert(!empty.columns.contains(PartitionedState.PartCol) && empty.isEmpty)
+    applyVersioned(dir, changes(
+      ("INSERT", 20L, 1L, "jan2", "2024-01-11 00:00:00"),
+      ("INSERT", 21L, 4L, "feb4", "2024-02-11 00:00:00")))
+    assert(new java.io.File(dir).list().filter(_.startsWith("yyyymm=")).toSet ==
+      Set("yyyymm=202401", "yyyymm=202402"))
+    val all = spark.read.parquet(dir).select("id", "name", Schemas.VersionCol)
+      .as[(Long, String, Long)].collect().toSet
+    assert(all == Set((1L, "jan2", 20L), (4L, "feb4", 21L)))
   }
 
   test("re-applying the same batch converges (crash-replay contract)") {
@@ -91,12 +119,12 @@ class PartitionedStateSpec extends SparkSpec {
     val batch = changes(("UPDATE", 10L, 2L, "feb", "2024-02-10 00:00:00"))
       .withColumn("after", struct(lit(2L).as("id"), lit("feb2").as("name"),
         lit("2024-02-10 00:00:00").cast("timestamp").as("d")))
-    PartitionedState.applyVersioned(spark, dir, schema, batch, Seq("id"), "d")
-    val once = graft.cdc.Cdc.latestWins(
+    applyVersioned(dir, batch)
+    val once = Cdc.latestWins(
       spark.read.parquet(dir).drop(PartitionedState.PartCol), Seq("id"))
       .select("id", "name", Schemas.VersionCol).as[(Long, String, Long)].collect().toSet
-    PartitionedState.applyVersioned(spark, dir, schema, batch, Seq("id"), "d")
-    val twice = graft.cdc.Cdc.latestWins(
+    applyVersioned(dir, batch)
+    val twice = Cdc.latestWins(
       spark.read.parquet(dir).drop(PartitionedState.PartCol), Seq("id"))
       .select("id", "name", Schemas.VersionCol).as[(Long, String, Long)].collect().toSet
     assert(once == twice)
@@ -114,8 +142,10 @@ class PartitionedStateSpec extends SparkSpec {
       // after-image with changed name
       .withColumn("after", struct(lit(2L).as("id"), lit("feb9").as("name"),
         lit("2024-02-10 00:00:00").cast("timestamp").as("d")))
-    val applied = PartitionedState.applyMutable(spark, dir, mutSchema, batch, Seq("id"), "d")
-    assert(applied == Seq("202402"))
+    val touched = PartitionedState.touchedMonths(batch, "d")
+    assert(touched == Seq("202402"))
+    PartitionedState.rewrite(spark, dir, mutSchema, "d", touched)(
+      Cdc.applyMutable(_, batch, Seq("id")))
     val all = spark.read.parquet(dir).select("id", "name").as[(Long, String)].collect().toSet
     assert(all == Set((1L, "jan"), (2L, "feb9")))
   }
